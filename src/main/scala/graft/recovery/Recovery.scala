@@ -1,8 +1,20 @@
 package graft.recovery
 
-import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import java.util.UUID
+
+import scala.collection.mutable.ArrayBuffer
+
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.parquet.example.data.simple.SimpleGroupFactory
+import org.apache.parquet.hadoop.{ParquetFileReader, ParquetReader}
+import org.apache.parquet.hadoop.example.{ExampleParquetWriter, GroupReadSupport}
+import org.apache.parquet.hadoop.metadata.CompressionCodecName
+import org.apache.parquet.hadoop.util.{HadoopInputFile, HadoopOutputFile}
+import org.apache.parquet.schema.{MessageType, MessageTypeParser}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 import graft.sink.PartitionedParquetSink
 import graft.sink.PartitionedParquetSink.SinkConfig
@@ -20,23 +32,43 @@ import graft.sink.PartitionedParquetSink.SinkConfig
   */
 object Recovery {
 
-  /** Storage listing (metadata-only, like scanner.go walking the bucket;
-    * file counts are small relative to data so a driver-side walk is the
-    * right tool — the data itself is never read). */
-  def listDataFiles(spark: SparkSession, tablePath: String): DataFrame = {
-    import spark.implicits._
-    val path = new Path(tablePath)
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val files = scala.collection.mutable.ArrayBuffer.empty[(String, Long)]
-    if (fs.exists(path)) {
-      val it = fs.listFiles(path, true)
-      while (it.hasNext) {
-        val f = it.next()
-        val p = f.getPath.toString
-        if (p.endsWith(".parquet")) files += ((p, f.getLen))
+  /** Spark's reader rule for paths it never reads: names starting with
+    * `_` (unless they hold a partition `=`) or `.`. Output committers
+    * stage in-flight and crashed attempts under `_temporary`, so a file
+    * behind such a name is not (yet) table data. */
+  private def hiddenName(name: String): Boolean =
+    (name.startsWith("_") && !name.contains("=")) || name.startsWith(".")
+
+  /** `listStatus` walk below `dir` collecting visible `.parquet` files
+    * as (path, size); hidden directories are never entered. One
+    * metadata call per directory, where `listFiles(recursive)` also
+    * resolves block locations for every file. */
+  private def walkDataFiles(fs: FileSystem, dir: Path,
+                            out: ArrayBuffer[(String, Long)]): Unit =
+    fs.listStatus(dir).foreach { s =>
+      val name = s.getPath.getName
+      if (!hiddenName(name)) {
+        if (s.isDirectory) walkDataFiles(fs, s.getPath, out)
+        else if (name.endsWith(".parquet")) out += ((s.getPath.toString, s.getLen))
       }
     }
-    files.toSeq.toDF("file_path", "file_size")
+
+  /** The table's data files, listed on the driver. */
+  private def dataFiles(spark: SparkSession, tablePath: String): Seq[(String, Long)] = {
+    val path = new Path(tablePath)
+    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val files = ArrayBuffer.empty[(String, Long)]
+    if (fs.exists(path)) walkDataFiles(fs, path, files)
+    files.toSeq
+  }
+
+  /** Storage listing (metadata-only, like scanner.go walking the bucket;
+    * file counts are small relative to data so a driver-side walk is the
+    * right tool — the data itself is never read). In-flight and
+    * crashed-attempt files under hidden paths are not listed. */
+  def listDataFiles(spark: SparkSession, tablePath: String): DataFrame = {
+    import spark.implicits._
+    dataFiles(spark, tablePath).toDF("file_path", "file_size")
   }
 
   /** DISTRIBUTED storage listing for wide tables: the driver expands
@@ -58,11 +90,11 @@ object Recovery {
     // hands the pending set to executors (enough fan-out) or scans one
     // more level driver-side (files → shallow, subdirs → next round)
     var pending: Seq[Path] = Seq(root)
-    val shallow = scala.collection.mutable.ArrayBuffer.empty[(String, Long)]
+    val shallow = ArrayBuffer.empty[(String, Long)]
     while (pending.nonEmpty && pending.size < parallelism) {
-      val next = scala.collection.mutable.ArrayBuffer.empty[Path]
+      val next = ArrayBuffer.empty[Path]
       pending.foreach { d =>
-        fs.listStatus(d).foreach { c =>
+        fs.listStatus(d).filterNot(c => hiddenName(c.getPath.getName)).foreach { c =>
           if (c.isDirectory) next += c.getPath
           else {
             val p = c.getPath.toString
@@ -83,14 +115,8 @@ object Recovery {
         val c = sConf.value.value
         it.flatMap { d =>
           val p = new Path(d)
-          val dfs = p.getFileSystem(c)
-          val out = scala.collection.mutable.ArrayBuffer.empty[(String, Long)]
-          val files = dfs.listFiles(p, true)
-          while (files.hasNext) {
-            val f = files.next()
-            val fp = f.getPath.toString
-            if (fp.endsWith(".parquet")) out += ((fp, f.getLen))
-          }
+          val out = ArrayBuffer.empty[(String, Long)]
+          walkDataFiles(p.getFileSystem(c), p, out)
           out
         }
       }.toDF("file_path", "file_size")
@@ -119,88 +145,226 @@ object Recovery {
     manifest.join(files.select(col("file_path")), Seq("file_path"), "left_anti")
   }
 
-  /** Overwrite a manifest WE ARE READING FROM without materializing it
-    * on the driver (r5 — was a `collect()` + re-parallelize, a driver
-    * heap risk at the reference's 10⁶-file scenario): the merged frame
-    * is written DISTRIBUTED to a temp sibling directory, then swapped
-    * into place with a metadata rename. The single shuffle to one
-    * writer task handles metadata-scale rows (a 10⁶-file manifest is
-    * tens of MB); the anti-join/dedup upstream keeps its parallelism. */
-  private def overwriteManifest(spark: SparkSession, manifestPath: String,
-                                merged: DataFrame): DataFrame = {
-    val tmp = manifestPath + ".tmp-" +
-      java.util.UUID.randomUUID().toString.take(8)
-    merged.repartition(1).write.mode(SaveMode.Overwrite).parquet(tmp)
-    val p = new Path(manifestPath)
-    val t = new Path(tmp)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // Swap with the loss window NARROWED and every rename CHECKED (r6 —
-    // delete-then-rename ignored rename's boolean result, and a false
-    // return — the typical object-store failure mode — or a crash
-    // between the two steps silently lost the manifest; the next read
-    // would fall back to an empty one). Old manifest moves ASIDE first,
-    // so at any crash point either the old or the new copy is at a
-    // known path; the aside copy is removed only after the new one is
-    // in place.
-    val aside = new Path(manifestPath + ".old-" + t.getName.takeRight(8))
-    val hadOld = fs.exists(p)
-    if (hadOld && !fs.rename(p, aside))
-      throw new java.io.IOException(
-        s"manifest swap: failed to move $p aside to $aside")
-    if (!fs.rename(t, p)) {
-      // restore the old manifest before failing — no silent loss
-      if (hadOld) fs.rename(aside, p)
-      throw new java.io.IOException(
-        s"manifest swap: failed to move $t into place at $p")
+  // ── Manifest: a directory of append-only part files ───────────────
+
+  /** Row schema of a manifest. Reads pass it explicitly, so no schema
+    * inference job runs. */
+  val ManifestSchema: StructType = StructType(Seq(
+    StructField("file_path", StringType),
+    StructField("file_size", LongType, nullable = false)))
+
+  private val PartType: MessageType = MessageTypeParser.parseMessageType(
+    "message spark_schema { optional binary file_path (STRING); required int64 file_size; }")
+
+  /** Parts a manifest may hold before the next write folds them. */
+  private[graft] val ManifestFoldParts = 32
+
+  /** The manifest as a DataFrame (empty when it does not exist yet). */
+  def readManifest(spark: SparkSession, manifestPath: String): DataFrame = {
+    val dir = new Path(manifestPath)
+    if (dir.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(dir))
+      spark.read.schema(ManifestSchema).parquet(manifestPath)
+    else spark.createDataFrame(spark.sparkContext.emptyRDD[Row], ManifestSchema)
+  }
+
+  /** Entries of part files already read on this driver, by part path. A
+    * published part is never rewritten in place (its name is unique),
+    * so an entry is valid while its file keeps its length and mtime. */
+  private final case class CachedPart(len: Long, mtime: Long,
+                                       entries: Array[(String, Long)])
+  private val partCache =
+    new java.util.concurrent.ConcurrentHashMap[String, CachedPart]()
+
+  /** One manifest directory, read on the driver. Layout: part files
+    * `<manifest>/part-<uuid>.parquet` holding (file_path, file_size)
+    * rows, nothing else visible. A writer stages a part under a hidden
+    * name (or, for a distributed write, in a hidden staging directory)
+    * and publishes it by renaming it to its visible name, so readers,
+    * Spark's included, see a part whole or not at all. Registration
+    * appends one part holding only the new entries, and writes nothing
+    * when nothing is new. When an append would take the manifest past
+    * [[ManifestFoldParts]] parts, the parts are folded: one part with
+    * every entry is published, then the parts it replaces are deleted,
+    * so a crash in between leaves duplicate entries (the next fold drops
+    * them), never lost ones. */
+  private final class Manifest(spark: SparkSession, manifestPath: String) {
+    val conf: Configuration = spark.sparkContext.hadoopConfiguration
+    val dir = new Path(manifestPath)
+    val fs: FileSystem = dir.getFileSystem(conf)
+    val parts: Seq[FileStatus] =
+      if (!fs.exists(dir)) Nil
+      else fs.listStatus(dir).toSeq.filter { s =>
+        val name = s.getPath.getName
+        s.isFile && !hiddenName(name) && name.endsWith(".parquet")
+      }
+
+    private def cacheKey(p: Path): String = fs.makeQualified(p).toString
+
+    /** Every part's entries; only parts new to this driver are read. */
+    lazy val entries: Seq[(String, Long)] = {
+      val live = parts.map(s => cacheKey(s.getPath)).toSet
+      val prefix = cacheKey(dir) + "/"
+      partCache.keySet.removeIf(k => k.startsWith(prefix) && !live(k))
+      parts.flatMap { s =>
+        val key = cacheKey(s.getPath)
+        val hit = partCache.get(key)
+        if (hit != null && hit.len == s.getLen && hit.mtime == s.getModificationTime)
+          hit.entries
+        else {
+          val e = readPart(s.getPath)
+          partCache.put(key, CachedPart(s.getLen, s.getModificationTime, e))
+          e
+        }
+      }
     }
-    if (hadOld) fs.delete(aside, true)
-    // Drop the stale FileStatusCache listing for the overwritten path.
+
+    def registered: Set[String] = entries.iterator.map(_._1).toSet
+
+    private def readPart(path: Path): Array[(String, Long)] = {
+      val reader = ParquetReader.builder(new GroupReadSupport(), path)
+        .withConf(conf).build()
+      try {
+        val out = ArrayBuffer.empty[(String, Long)]
+        var g = reader.read()
+        while (g != null) {
+          if (g.getFieldRepetitionCount("file_path") > 0)
+            out += ((g.getString("file_path", 0), g.getLong("file_size", 0)))
+          g = reader.read()
+        }
+        out.toArray
+      } finally reader.close()
+    }
+
+    /** Write `rows` as one part: staged under a hidden name, then
+      * published by rename. */
+    def writePart(rows: Seq[(String, Long)]): Unit = {
+      val name = s"part-${UUID.randomUUID()}.parquet"
+      val staged = new Path(dir, s".$name.tmp")
+      val part = new Path(dir, name)
+      try {
+        val w = ExampleParquetWriter.builder(HadoopOutputFile.fromPath(staged, conf))
+          .withConf(conf).withType(PartType)
+          .withCompressionCodec(CompressionCodecName.SNAPPY).build()
+        try {
+          val groups = new SimpleGroupFactory(PartType)
+          rows.foreach { case (p, n) =>
+            w.write(groups.newGroup().append("file_path", p).append("file_size", n))
+          }
+        } finally w.close()
+        publish(staged, part)
+      } catch { case e: Throwable => fs.delete(staged, false); throw e }
+      val s = fs.getFileStatus(part)
+      partCache.put(cacheKey(part), CachedPart(s.getLen, s.getModificationTime, rows.toArray))
+    }
+
+    /** Publish the data files of a finished Spark write in `staging` as
+      * parts, then remove the staging dir. Empty files are dropped
+      * unless `keepEmpty`. */
+    def publishStaged(staging: Path, keepEmpty: Boolean): Unit =
+      try fs.listStatus(staging).foreach { s =>
+        val name = s.getPath.getName
+        if (!hiddenName(name) && name.endsWith(".parquet") &&
+            (keepEmpty || rowCount(s.getPath) > 0))
+          publish(s.getPath, new Path(dir, s"part-${UUID.randomUUID()}.parquet"))
+      } finally fs.delete(staging, true)
+
+    private def rowCount(path: Path): Long = {
+      val r = ParquetFileReader.open(HadoopInputFile.fromPath(path, conf))
+      try r.getRecordCount finally r.close()
+    }
+
+    private def publish(from: Path, to: Path): Unit =
+      if (!fs.rename(from, to))
+        throw new java.io.IOException(s"manifest: failed to publish $from as $to")
+
+    /** Delete parts superseded by a just-published one. */
+    def dropParts(old: Seq[FileStatus]): Unit = old.foreach { s =>
+      fs.delete(s.getPath, false)
+      partCache.remove(cacheKey(s.getPath))
+    }
+  }
+
+  /** Append `fresh` as one new part and return the manifest. A manifest
+    * that already has a part gains nothing when `fresh` is empty; a
+    * missing one is created, so it reads back as empty. When the append
+    * would take the manifest past [[ManifestFoldParts]] parts, one
+    * folded part with every entry is written instead and replaces the
+    * others. */
+  private def append(spark: SparkSession, m: Manifest,
+                     fresh: Seq[(String, Long)]): DataFrame = {
+    if (fresh.nonEmpty || m.parts.isEmpty) {
+      if (m.parts.size < ManifestFoldParts) m.writePart(fresh)
+      else {
+        val seen = scala.collection.mutable.HashSet.empty[String]
+        m.writePart((m.entries ++ fresh).filter(e => seen.add(e._1)))
+        m.dropParts(m.parts)
+      }
+    }
+    publishedManifest(spark, m.dir.toString)
+  }
+
+  /** Drop cached listings of the manifest, then read it back. */
+  private def publishedManifest(spark: SparkSession, manifestPath: String): DataFrame = {
     spark.catalog.refreshByPath(manifestPath)
-    spark.read.parquet(manifestPath)
+    readManifest(spark, manifestPath)
   }
 
   /** Drop manifest entries with no backing file; returns the pruned
-    * manifest (written back idempotently, like [[reconcile]]). */
+    * manifest, written as one part that replaces all others. */
   def pruneMissing(spark: SparkSession, tablePath: String,
                    manifestPath: String): DataFrame = {
-    val existing = spark.read.parquet(manifestPath)
-    val live = existing.join(
-      listDataFiles(spark, tablePath).select(col("file_path")),
-      Seq("file_path"), "left_semi")
-    overwriteManifest(spark, manifestPath, live)
+    val m = new Manifest(spark, manifestPath)
+    val live = dataFiles(spark, tablePath).iterator.map(_._1).toSet
+    val seen = scala.collection.mutable.HashSet.empty[String]
+    m.writePart(m.entries.filter(e => live(e._1) && seen.add(e._1)))
+    m.dropParts(m.parts)
+    publishedManifest(spark, manifestPath)
   }
 
-  /** Register orphans into the manifest; dedup on path makes re-runs
-    * idempotent (reconciler.go's re-register semantics). The merge is a
-    * distributed anti-join + dropDuplicates end-to-end; only counts (at
-    * call sites) and the swap rename touch the driver. */
+  /** Register orphans into the manifest, idempotently (reconciler.go's
+    * re-register semantics): the table listing is diffed against the
+    * registered paths on the driver and only the new entries are
+    * appended, as one part (layout and fold rule: [[Manifest]]). Without
+    * `distributedListing` this runs no Spark job: the listing is a
+    * driver-side walk, and the driver reads only the parts it has not
+    * read before. With it, the listing and the anti-join against the
+    * manifest run distributed and their output is appended the same
+    * way, through a hidden staging directory. Returns the manifest. */
   def reconcile(spark: SparkSession, tablePath: String,
                 manifestPath: String,
                 distributedListing: Boolean = false): DataFrame = {
-    import spark.implicits._
-    val existing =
-      try spark.read.parquet(manifestPath)
-      catch { case _: Throwable => Seq.empty[(String, Long)].toDF("file_path", "file_size") }
-    val merged = existing
-      .unionByName(scanOrphans(spark, tablePath, existing, distributedListing))
-      .dropDuplicates("file_path")
-    overwriteManifest(spark, manifestPath, merged)
+    val m = new Manifest(spark, manifestPath)
+    if (!distributedListing) {
+      val registered = m.registered
+      append(spark, m, dataFiles(spark, tablePath).filterNot(f => registered(f._1)))
+    } else {
+      val staging = new Path(m.dir, s".append-${UUID.randomUUID()}")
+      scanOrphans(spark, tablePath, readManifest(spark, manifestPath),
+        distributedListing = true).repartition(1).write.parquet(staging.toString)
+      m.publishStaged(staging, keepEmpty = m.parts.isEmpty)
+      val after = new Manifest(spark, manifestPath)
+      if (after.parts.size > ManifestFoldParts) {
+        val folded = new Path(m.dir, s".fold-${UUID.randomUUID()}")
+        readManifest(spark, manifestPath).dropDuplicates("file_path")
+          .repartition(1).write.parquet(folded.toString)
+        after.publishStaged(folded, keepEmpty = true)
+        after.dropParts(after.parts)
+      }
+      publishedManifest(spark, manifestPath)
+    }
   }
 
   /** Register an EXPLICIT file set into the manifest — reconcile with a
     * caller-filtered candidate list (e.g. [[RecoveryCli]]'s
     * `--after`/`--before` partition-time window). Same idempotent
-    * dedup-on-path semantics as [[reconcile]]. */
+    * dedup-on-path append as [[reconcile]]. */
   def registerFiles(spark: SparkSession, manifestPath: String,
                     files: DataFrame): DataFrame = {
-    import spark.implicits._
-    val existing =
-      try spark.read.parquet(manifestPath)
-      catch { case _: Throwable => Seq.empty[(String, Long)].toDF("file_path", "file_size") }
-    val merged = existing
-      .unionByName(files.select(col("file_path"), col("file_size")))
-      .dropDuplicates("file_path")
-    overwriteManifest(spark, manifestPath, merged)
+    val m = new Manifest(spark, manifestPath)
+    val seen = scala.collection.mutable.HashSet.empty[String] ++= m.registered
+    val fresh = files.select(col("file_path"), col("file_size")).collect()
+      .map(r => (r.getString(0), r.getLong(1))).filter(e => seen.add(e._1))
+    append(spark, m, fresh.toSeq)
   }
 
   /** One file's footer → (min, max, rows) for `column`. Runs on

@@ -199,13 +199,7 @@ object RecoveryCli {
                 Recovery.listDataFiles(spark, tablePath)
                   .join(registered, Seq("file_path"), "left_anti")
               case None =>
-                val manifestPath = s"${a.manifest}/$t"
-                val existing =
-                  try spark.read.parquet(manifestPath)
-                  catch { case _: Throwable =>
-                    import spark.implicits._
-                    Seq.empty[(String, Long)].toDF("file_path", "file_size")
-                  }
+                val existing = Recovery.readManifest(spark, s"${a.manifest}/$t")
                 Recovery.scanOrphans(spark, tablePath, existing, a.distributed)
             }
             val orphans = timeFiltered(orphansAll, a)

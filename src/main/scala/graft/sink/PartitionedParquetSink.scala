@@ -1,8 +1,11 @@
 package graft.sink
 
-import org.apache.spark.sql.{Column, DataFrame}
+import java.util.concurrent.atomic.{AtomicBoolean, AtomicReference}
+
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode, StreamingQuery,
+  StreamingQueryListener, Trigger}
 import org.apache.spark.sql.types.MetadataBuilder
 import org.apache.spark.sql.Row
 
@@ -217,41 +220,69 @@ object PartitionedParquetSink {
     * captured at creation on EVERY addBatch (a cloned-session or
     * writer-option scoping is ignored — ParquetOptions only knows
     * compression/mergeSchema), so the conf must stay set while the
-    * stream runs. A self-removing StreamingQueryListener restores the
-    * caller's previous value when THIS query terminates — merely
-    * building the writer no longer mutates anything, and the mutation
-    * that start() makes is undone at termination (round-3 ADVICE).
-    * Concurrent graft streams on one session both want MICROS, so
-    * overlapping restores are benign. */
+    * stream runs; [[startWithConfs]] restores the caller's value when
+    * the query terminates. */
   def startStream(df: DataFrame, cfg: SinkConfig,
-                  checkpoint: String): StreamingQuery = {
-    val spark = df.sparkSession
-    val key = "spark.sql.parquet.outputTimestampType"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "TIMESTAMP_MICROS")
-    val query = try writeStream(df, cfg, checkpoint).start()
-    catch { case e: Throwable =>
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None    => spark.conf.unset(key)
-      }
-      throw e
+                  checkpoint: String): StreamingQuery =
+    startWithConfs(df.sparkSession,
+      Seq("spark.sql.parquet.outputTimestampType" -> "TIMESTAMP_MICROS")) {
+      writeStream(df, cfg, checkpoint).start()
     }
-    val listener: org.apache.spark.sql.streaming.StreamingQueryListener =
-      new org.apache.spark.sql.streaming.StreamingQueryListener {
-        import org.apache.spark.sql.streaming.StreamingQueryListener._
-        override def onQueryStarted(e: QueryStartedEvent): Unit = ()
-        override def onQueryProgress(e: QueryProgressEvent): Unit = ()
-        override def onQueryTerminated(e: QueryTerminatedEvent): Unit =
-          if (e.id == query.id) {
-            prev match {
-              case Some(v) => spark.conf.set(key, v)
-              case None    => spark.conf.unset(key)
-            }
-            spark.streams.removeListener(this)
-          }
+
+  /** Session confs held by running queries: the caller's explicit value
+    * (None: unset) from before the first holder, and how many queries
+    * hold it. */
+  private final class Held(val prev: Option[String], var refs: Int)
+  private val held = scala.collection.mutable.Map.empty[(SparkSession, String), Held]
+
+  /** Start a streaming query with `confs` set on `spark` for the query's
+    * whole life — for confs Spark reads from the session that created
+    * the stream at every micro-batch — and restore the caller's values
+    * when it terminates. Queries that overlap on one session share a
+    * hold: the last to terminate restores the values from before the
+    * first started. A query that fails to start restores at once. */
+  private[graft] def startWithConfs(spark: SparkSession, confs: Seq[(String, String)])
+                                   (start: => StreamingQuery): StreamingQuery = {
+    held.synchronized {
+      confs.foreach { case (k, v) =>
+        held.getOrElseUpdate((spark, k), new Held(spark.conf.getAll.get(k), 0)).refs += 1
+        spark.conf.set(k, v)
       }
+    }
+    val released = new AtomicBoolean(false)
+    def release(): Unit = if (released.compareAndSet(false, true)) held.synchronized {
+      confs.foreach { case (k, _) =>
+        held.get((spark, k)).foreach { h =>
+          h.refs -= 1
+          if (h.refs == 0) {
+            held.remove((spark, k))
+            h.prev.fold(spark.conf.unset(k))(spark.conf.set(k, _))
+          }
+        }
+      }
+    }
+    // registered before start(), so a query that ends at once is still
+    // seen: whichever of the listener and this thread learns second of
+    // (query id, termination) releases
+    val terminated = java.util.concurrent.ConcurrentHashMap.newKeySet[java.util.UUID]()
+    val queryId = new AtomicReference[java.util.UUID]()
+    val listener = new StreamingQueryListener {
+      import StreamingQueryListener._
+      override def onQueryStarted(e: QueryStartedEvent): Unit = ()
+      override def onQueryProgress(e: QueryProgressEvent): Unit = ()
+      override def onQueryTerminated(e: QueryTerminatedEvent): Unit = {
+        terminated.add(e.id)
+        if (e.id == queryId.get) { release(); spark.streams.removeListener(this) }
+      }
+    }
     spark.streams.addListener(listener)
+    val query =
+      try start
+      catch { case e: Throwable =>
+        spark.streams.removeListener(listener); release(); throw e
+      }
+    queryId.set(query.id)
+    if (terminated.contains(query.id)) { release(); spark.streams.removeListener(listener) }
     query
   }
 }

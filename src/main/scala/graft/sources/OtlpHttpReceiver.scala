@@ -83,7 +83,9 @@ final class OtlpHttpReceiver(spoolDir: String, host: String = "127.0.0.1",
 
   private val server: HttpServer =
     HttpServer.create(new InetSocketAddress(host, port), 0)
-  server.setExecutor(java.util.concurrent.Executors.newFixedThreadPool(4))
+  /** Request handler threads; non-daemon, so [[stop]] must shut them down. */
+  private[graft] val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
+  server.setExecutor(pool)
   server.createContext("/", (ex: HttpExchange) => {
     try handle(ex)
     catch {
@@ -94,7 +96,7 @@ final class OtlpHttpReceiver(spoolDir: String, host: String = "127.0.0.1",
   server.start()
 
   def uri: String = s"http://$host:${server.getAddress.getPort}"
-  def stop(): Unit = { server.stop(0); () }
+  def stop(): Unit = { server.stop(0); pool.shutdownNow(); () }
 
   private def respond(ex: HttpExchange, code: Int, body: Array[Byte]): Unit = {
     ex.sendResponseHeaders(code, if (body.isEmpty) -1 else body.length)

@@ -61,15 +61,14 @@ object ExportTelemetry {
     * before/after diff of this is a batch's files/bytes written,
     * costing one tiny manifest read, never a data scan. */
   private[streaming] def manifestTotals(spark: SparkSession,
-                                        manifestPath: String): (Long, Long) =
-    try {
-      val r = spark.read.parquet(manifestPath)
-        .agg(org.apache.spark.sql.functions.count(
-          org.apache.spark.sql.functions.lit(1)),
-          org.apache.spark.sql.functions.coalesce(
-            org.apache.spark.sql.functions.sum("file_size"),
-            org.apache.spark.sql.functions.lit(0L)))
-        .collect()(0)
-      (r.getLong(0), r.getLong(1))
-    } catch { case _: org.apache.spark.sql.AnalysisException => (0L, 0L) }
+                                        manifestPath: String): (Long, Long) = {
+    val r = graft.recovery.Recovery.readManifest(spark, manifestPath)
+      .agg(org.apache.spark.sql.functions.count(
+        org.apache.spark.sql.functions.lit(1)),
+        org.apache.spark.sql.functions.coalesce(
+          org.apache.spark.sql.functions.sum("file_size"),
+          org.apache.spark.sql.functions.lit(0L)))
+      .collect()(0)
+    (r.getLong(0), r.getLong(1))
+  }
 }

@@ -132,6 +132,72 @@ class OtlpReceiverSpec extends SparkSpec {
     } finally rx.stop()
   }
 
+  test("ingest commit: no listing job in getBatch, no job in registration, each file once") {
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val base = Files.createTempDirectory("graft-otlp-commit").toString
+    val perBatch = 45 // above Spark's default listing threshold (32)
+    val nBatches = 4
+    val rx = new OtlpHttpReceiver(s"$base/spool")
+    try {
+      val t0 = 1709623800000000000L // 2024-03-05T07:30Z
+      (0 until perBatch * nBatches).foreach { i =>
+        // three hours of traffic, so each batch writes several partitions
+        val ts = t0 + (i % 3) * 3600L * 1000000000L
+        assert(post(rx.uri, "/v1/traces",
+          traceRequest(f"0102030405060708$i%016x", s"op$i", ts)).statusCode() === 200)
+      }
+    } finally rx.stop()
+    val spool = OtlpHttpReceiver.spoolPath(s"$base/spool", "traces")
+    val cfg = Config(Filesystem(base), Catalog("none"))
+      .sinkFor("traces", tsColumn = "start_time_unix_nano")
+    val manifest = s"$base/manifest"
+
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        jobs.add(Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.description"))).getOrElse(""))
+        ()
+      }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      StreamingIngest.ingestWithManifest(
+        OtelTraces.flatten(OtelProtoSource.tracesStream(spark, spool,
+          Map("maxFilesPerTrigger" -> perBatch.toString))),
+        cfg, s"$base/chk", manifest).awaitTermination()
+      org.apache.spark.TestListenerBus.drain(spark.sparkContext)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    val descs = jobs.asScala.toSeq
+
+    // getBatch stats the spool files on the driver: no listing job
+    assert(!descs.exists(_.startsWith("Listing leaf files")), descs.mkString("\n"))
+    // registration runs no Spark job; the data write is tagged per batch
+    assert(!descs.exists(_.endsWith(": register")), descs.mkString("\n"))
+    val written = descs.filter(_.endsWith(": write")).distinct
+    assert(written.size === nBatches, descs.mkString("\n"))
+
+    // every table file registered exactly once, one part per batch
+    val table = graft.sink.PartitionedParquetSink.tablePath(cfg)
+    val registered = graft.recovery.Recovery.readManifest(spark, manifest)
+      .collect().map(_.getString(0)).toSeq
+    val onDisk = graft.recovery.Recovery.listDataFiles(spark, table)
+      .collect().map(_.getString(0)).toSeq
+    assert(registered.sorted === onDisk.sorted)
+    assert(ManifestDir.parts(manifest).size === nBatches)
+    assert(ManifestDir.residue(manifest).isEmpty, ManifestDir.residue(manifest))
+    assert(spark.read.parquet(registered: _*).count() === perBatch * nBatches)
+  }
+
+  test("stop() shuts down the request executor") {
+    val rx = new OtlpHttpReceiver(Files.createTempDirectory("graft-otlp-stop").toString)
+    assert(post(rx.uri, "/health", Array.emptyByteArray).statusCode() === 200)
+    rx.stop()
+    assert(rx.pool.isShutdown)
+    assert(rx.pool.awaitTermination(10, java.util.concurrent.TimeUnit.SECONDS))
+  }
+
   test("cold capstone: pushed OTLP → sink → standalone Iceberg commit → catalog-free analytics") {
     import org.json4s.jackson.JsonMethods.{compact, render}
     val base = Files.createTempDirectory("graft-otlp-cold").toString

@@ -401,6 +401,120 @@ class SinkRecoverySpec extends SparkSpec {
     assert(Recovery.pruneMissing(spark, tablePath, manifestPath).count() === nFiles - 5)
   }
 
+  test("reconcile skips in-flight and crashed-attempt files under hidden paths") {
+    val base = tmp()
+    val cfg = SinkConfig(base, "events", tsColumn = "ts", granularity = "monthly")
+    PartitionedParquetSink.writeBatch(eventsDf.limit(200), cfg)
+    val tablePath = s"$base/events"
+    val manifestPath = s"$base/_manifest"
+    // a crash mid-write leaves the committer's attempt file behind; the
+    // retry writes the same rows again under a visible name
+    val committed = Recovery.listDataFiles(spark, tablePath).collect()
+      .map(_.getString(0)).toSeq
+    val src = java.nio.file.Paths.get(new java.net.URI(committed.head))
+    val attempt = java.nio.file.Paths.get(tablePath, "_temporary", "0", "_temporary",
+      "attempt_202403050730_0001_m_000000_0", "year=2024", "month=01")
+    Files.createDirectories(attempt)
+    Files.copy(src, attempt.resolve(src.getFileName))
+    Files.copy(src, java.nio.file.Paths.get(tablePath, ".staged-" + src.getFileName))
+
+    val registered = Recovery.reconcile(spark, tablePath, manifestPath)
+      .collect().map(_.getString(0)).toSeq
+    assert(registered.sorted === committed.sorted)
+    assert(!registered.exists(p => p.contains("_temporary") || p.contains("/.staged-")))
+    // the distributed listing applies the same rule
+    import spark.implicits._
+    assert(Recovery.scanOrphans(spark, tablePath,
+      Seq.empty[(String, Long)].toDF("file_path", "file_size"),
+      distributedListing = true).count() === committed.size)
+    // reads through the manifest return each row once
+    assert(spark.read.parquet(registered: _*).count() === 200)
+  }
+
+  test("append-only reconcile: no Spark job, one part per new file set, fold past the constant") {
+    import spark.implicits._
+    val base = tmp()
+    val tablePath = s"$base/t"
+    val manifestPath = s"$base/_manifest"
+    def addFile(i: Int): Unit =
+      Seq(i).toDF("i").coalesce(1).write.mode("append").parquet(s"$tablePath/d=${i % 3}")
+    def entries(): Seq[String] = Recovery.readManifest(spark, manifestPath)
+      .collect().map(_.getString(0)).toSeq
+    def onDisk(): Seq[String] = Recovery.listDataFiles(spark, tablePath)
+      .collect().map(_.getString(0)).toSeq
+
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+    }
+    val fold = Recovery.ManifestFoldParts
+    val partCounts = scala.collection.mutable.ArrayBuffer.empty[Int]
+    (0 until fold + 3).foreach { i =>
+      addFile(i)
+      org.apache.spark.TestListenerBus.drain(spark.sparkContext)
+      spark.sparkContext.addSparkListener(listener)
+      try {
+        Recovery.reconcile(spark, tablePath, manifestPath)
+        org.apache.spark.TestListenerBus.drain(spark.sparkContext)
+      } finally spark.sparkContext.removeSparkListener(listener)
+      partCounts += ManifestDir.parts(manifestPath).size
+      // nothing new: nothing written
+      Recovery.reconcile(spark, tablePath, manifestPath)
+      assert(ManifestDir.parts(manifestPath).size === partCounts.last)
+    }
+    assert(jobs.get() === 0, s"${jobs.get()} Spark jobs inside registration")
+    // one part per call until the fold, which leaves one part
+    assert(partCounts.take(fold) === (1 to fold))
+    assert(partCounts(fold) === 1)
+    assert(partCounts.drop(fold + 1) === Seq(2, 3))
+    assert(entries().sorted === onDisk().sorted)
+    assert(ManifestDir.residue(manifestPath).isEmpty, ManifestDir.residue(manifestPath))
+
+    // the distributed path appends and folds the same way
+    (0 until fold).foreach { i =>
+      addFile(100 + i)
+      Recovery.reconcile(spark, tablePath, manifestPath, distributedListing = true)
+    }
+    assert(ManifestDir.parts(manifestPath).size <= fold)
+    assert(entries().sorted === onDisk().sorted)
+    assert(ManifestDir.residue(manifestPath).isEmpty, ManifestDir.residue(manifestPath))
+    assert(onDisk().size === 2 * fold + 3)
+  }
+
+  test("a failure between write and register leaves orphans the next reconcile registers once") {
+    import graft.streaming.{Delivery, StreamingIngest}
+    val base = tmp()
+    val batch = eventsDf.limit(300)
+    val srcDir = s"$base/src"
+    batch.write.parquet(srcDir)
+    val cfg = SinkConfig(base, "events", tsColumn = "ts", granularity = "daily")
+    val tablePath = PartitionedParquetSink.tablePath(cfg)
+    val manifestPath = s"$base/manifest"
+    // the process dies between the data write and the registration
+    val q = Delivery.ingestWithManifestRetrying(
+      StreamingIngest.readEvents(spark, srcDir, batch.schema), cfg,
+      s"$base/chk", manifestPath,
+      policy = Delivery.RetryPolicy(maxAttempts = 1),
+      beforeRegister = _ => throw new java.io.IOException("killed before register"))
+    intercept[org.apache.spark.sql.streaming.StreamingQueryException](q.awaitTermination())
+    val onDisk = Recovery.listDataFiles(spark, tablePath).collect().map(_.getString(0)).toSeq
+    assert(onDisk.nonEmpty)
+    assert(Recovery.readManifest(spark, manifestPath).count() === 0)
+
+    val registered = Recovery.reconcile(spark, tablePath, manifestPath)
+      .collect().map(_.getString(0)).toSeq
+    assert(registered.sorted === onDisk.sorted)
+    val parts = ManifestDir.parts(manifestPath)
+    assert(parts.size === 1)
+    // a second call finds nothing new and writes nothing
+    assert(Recovery.reconcile(spark, tablePath, manifestPath).count() === onDisk.size)
+    assert(ManifestDir.parts(manifestPath) === parts)
+    assert(ManifestDir.residue(manifestPath).isEmpty, ManifestDir.residue(manifestPath))
+    assert(spark.read.parquet(registered: _*).count() === 300)
+  }
+
   test("partition evolution: granularity rewrite commits as a snapshot, old layout expires") {
     import graft.recovery.VersionedManifest
     val base = tmp()

@@ -67,6 +67,32 @@ class StreamingSpec extends SparkSpec {
       "streaming parquet lost int64-micros timestamp encoding")
   }
 
+  test("manifest ingest scopes the listing threshold to the query lifetime") {
+    val base = Files.createTempDirectory("graft-stream-listing").toString
+    val batch = Tables.events(spark, sf).limit(200)
+    val srcDir = s"$base/src"
+    batch.write.parquet(srcDir)
+    val cfg = SinkConfig(base, "events", tsColumn = "ts", granularity = "monthly")
+
+    // the file source reads the threshold from the caller's session at
+    // every getBatch, so ingestWithManifest raises it while the query
+    // runs; a listener restores the caller's value (set or unset) at
+    // termination. Listener events are async — poll briefly.
+    val key = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+    def explicit = spark.conf.getAll.get(key) // None while unset
+    val caller = explicit
+    try Seq(Some("17"), None).zipWithIndex.foreach { case (before, i) =>
+      before.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+      StreamingIngest.ingestWithManifest(
+        StreamingIngest.readEvents(spark, srcDir, batch.schema),
+        cfg, s"$base/chk$i", s"$base/manifest$i").awaitTermination()
+      val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
+      while (explicit != before && System.nanoTime() < deadline)
+        Thread.sleep(50)
+      assert(explicit === before)
+    } finally caller.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
   test("foreachBatch ingest registers every written file in the manifest") {
     val base = Files.createTempDirectory("graft-stream-man").toString
     val batch = Tables.events(spark, sf)
