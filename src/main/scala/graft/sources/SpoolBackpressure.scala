@@ -48,6 +48,9 @@ final class SpoolGauge(spoolDir: String, dirs: Seq[String],
   private var diskFiles = 0L
   private var pendingBytes = 0L
   private var pendingFiles = 0L
+  // running totals of confirm(), so a rescan can tell what landed meanwhile
+  private var confirmedBytes = 0L
+  private var confirmedFiles = 0L
   private val lastRefreshMs = new AtomicLong(0L)
   refresh() // adopt whatever a prior receiver incarnation left behind
 
@@ -55,6 +58,7 @@ final class SpoolGauge(spoolDir: String, dirs: Seq[String],
     * and reset the DISK ledger to ground truth; pending reservations
     * are preserved. */
   def refresh(): Unit = {
+    val (bytesBefore, filesBefore) = synchronized((confirmedBytes, confirmedFiles))
     var b = 0L
     var n = 0L
     dirs.foreach { d =>
@@ -66,7 +70,12 @@ final class SpoolGauge(spoolDir: String, dirs: Seq[String],
         } finally it.close()
       }
     }
-    synchronized { diskBytes = b; diskFiles = n }
+    // a file confirmed during the walk may be missing from it: add it
+    // (if the walk saw it too, the over-count sheds early, never late)
+    synchronized {
+      diskBytes = b + confirmedBytes - bytesBefore
+      diskFiles = n + confirmedFiles - filesBefore
+    }
     lastRefreshMs.set(System.currentTimeMillis())
   }
 
@@ -97,6 +106,8 @@ final class SpoolGauge(spoolDir: String, dirs: Seq[String],
       pendingFiles -= 1
       diskBytes += incomingBytes
       diskFiles += 1
+      confirmedBytes += incomingBytes
+      confirmedFiles += 1
     }
 
   /** The reserved write failed: drop the reservation. */
