@@ -759,9 +759,7 @@ object IcebergMaintenance {
     * file (the file's path and the indexed column ride in blob
     * properties). [[IcebergTableReader.readPoint]] then answers
     * needle-in-100 TB lookups by opening 1+ε data files instead of all
-    * of them — the same lever [[graft.recovery.VersionedManifest]]'s
-    * engine-native manifest already has (`readPoint`/`fileBlooms`),
-    * ported to the interop chain.
+    * of them.
     *
     * Scale shape: bloom construction is one distributed pass (each
     * file's keys buffer only in its own executor task, sketches sized
@@ -798,8 +796,7 @@ object IcebergMaintenance {
       .as[(String, Long)]
       .groupByKey(_._1)
       .mapGroups { (f, it) =>
-        // sketch sized to ITS file's key count (the
-        // Recovery.fileBlooms discipline): fixed capacity either
+        // sketch sized to ITS file's key count: fixed capacity either
         // over-sizes small files or saturates big ones past fpp
         val vals = it.map(_._2).toArray
         val bf = org.apache.spark.util.sketch.BloomFilter.create(

@@ -196,8 +196,8 @@ object IcebergTableMetadata {
   }
 
   /** Current metadata version: the hint file, else the max vN present
-    * (hint loss is recoverable — versions are immutable and numbered,
-    * the [[graft.recovery.VersionedManifest]] discipline). 0 = none. */
+    * (hint loss is recoverable — versions are immutable and
+    * numbered). 0 = none. */
   def currentVersion(conf: Configuration, location: String): Int = {
     val hint = hintPath(location)
     val fs = hint.getFileSystem(conf)

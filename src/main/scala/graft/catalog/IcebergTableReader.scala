@@ -476,8 +476,7 @@ object IcebergTableReader {
   }
 
   /** INCREMENTAL cold read: exactly the rows ADDED between two
-    * snapshots — the nightly-delta shape ([[graft.recovery.VersionedManifest.readIncremental]]
-    * through the real Iceberg chain): the file-set difference of the
+    * snapshots — the nightly-delta shape: the file-set difference of the
     * two snapshots' manifest lists. For the append-only tables this
     * engine writes, that is precisely the later appends' files; a
     * rewrite (same rows, new files) would appear as its new files, as
@@ -632,9 +631,7 @@ object IcebergTableReader {
     * looking at stats; null tuple values are kept), then per-file
     * MANIFEST STATS (`[lower, upper]` for `column` must intersect the
     * slice; files without stats are kept — can't prune what isn't
-    * claimed). Row-level residual filter applied after the scan —
-    * same two-phase shape as
-    * [[graft.recovery.VersionedManifest.readSliceAt]]. */
+    * claimed). Row-level residual filter applied after the scan. */
   def readSlice(spark: SparkSession, tableDir: String, column: String,
                 startUs: Long, endUs: Long,
                 asOfSnapshotId: Option[Long] = None): DataFrame =
@@ -858,10 +855,9 @@ object IcebergTableReader {
     * bounds + bloom-sidecar prune keeps (1+ε at any table size), with
     * the row-level residual keeping exactness through bloom false
     * positives and merge-on-read deletes applied as in every other
-    * read path. The interop-chain twin of
-    * [[graft.recovery.VersionedManifest.readPoint]]. Accepts LONG
-    * needles (numeric/timestamp-micros columns) and STRING needles
-    * (the trace_id hex lookup — the most common telemetry needle). */
+    * read path. Accepts LONG needles (numeric/timestamp-micros
+    * columns) and STRING needles (the trace_id hex lookup — the most
+    * common telemetry needle). */
   def readPoint(spark: SparkSession, tableDir: String, column: String,
                 value: Any, asOfSnapshotId: Option[Long] = None): DataFrame = {
     val (files, deletes, meta) =

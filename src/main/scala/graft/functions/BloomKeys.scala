@@ -5,10 +5,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 /** Canonical key derivation for every per-file bloom sketch in the
-  * engine (`graft.recovery.Recovery.fileBlooms`,
-  * `graft.catalog.IcebergMaintenance.writeBloomIndex`, and their probe
-  * twins `VersionedManifest.readPoint` /
-  * `IcebergTableReader.readPoint`).
+  * engine (`graft.catalog.IcebergMaintenance.writeBloomIndex` and its
+  * probe `graft.catalog.IcebergTableReader.readPoint`).
   *
   * Sketches are keyed on `xxhash64` of the column value rather than a
   * raw `cast("long")` so STRING keys work — the single most common
@@ -32,10 +30,9 @@ import org.apache.spark.sql.types._
   */
 object BloomKeys {
 
-  /** Marker recorded next to each sketch (Puffin blob property /
-    * manifest column) so probes can tell hash-keyed sketches from
-    * legacy raw-long ones and never mis-probe an index written by an
-    * older build. */
+  /** Marker recorded next to each sketch (Puffin blob property) so
+    * probes can tell hash-keyed sketches from legacy raw-long ones and
+    * never mis-probe an index written by an older build. */
   val Scheme = "xxhash64"
 
   /** Build-side key expression for the indexed column. */

@@ -76,9 +76,8 @@ object Recovery {
     * leaf directories to spread (cheap — directories ≪ files), then
     * executors list their directories in parallel. At 10⁶ files on an
     * object store this turns the scanner's one sequential LIST stream
-    * into #partitions concurrent ones — the same executor-side FS
-    * pattern as [[VersionedManifest.expireSnapshots]]'s deletes.
-    * Results are identical to [[listDataFiles]]. */
+    * into #partitions concurrent ones. Results are identical to
+    * [[listDataFiles]]. */
   def listDataFilesDistributed(spark: SparkSession, tablePath: String,
                                parallelism: Int = 64): DataFrame = {
     import spark.implicits._
@@ -398,60 +397,12 @@ object Recovery {
     } finally reader.close()
   }
 
-  /** Per-file BLOOM FILTER index over a key column (long, timestamp
-    * or STRING — keys are xxhash64'd, see [[graft.functions.BloomKeys]])
-    * — the point-lookup complement to zone maps: min/max prunes range
-    * predicates, blooms prune `key = v` needle queries (find one trace
-    * / event / order id in a 100 TB table). One distributed build pass groups
-    * rows by their source file and folds them into a fixed-size sketch;
-    * persisted through a stats-carrying [[VersionedManifest.commit]]
-    * the index lives in the manifest like Iceberg puffin blobs, and
-    * [[VersionedManifest.readPoint]] consults only manifest bytes to
-    * pick the 1+ε files that can contain the key. */
-  def fileBlooms(spark: SparkSession, tablePath: String, column: String,
-                 fpp: Double = 0.03): DataFrame = {
-    import spark.implicits._
-    val scan = spark.read.parquet(tablePath)
-    // sketches key on xxhash64 of the value ([[graft.functions
-    // .BloomKeys]]) so STRING keys (trace_id hex) index too — the old
-    // cast("long") turned them into null and NPE'd the encoder; null
-    // keys are dropped (a null never equals a point-lookup literal,
-    // so the drop is exact — the same guard writeBloomIndex carries).
-    scan
-      .where(col(column).isNotNull)
-      .select(input_file_name().as("f"),
-        graft.functions.BloomKeys.keyCol(
-          col(column), scan.schema(column).dataType).as("v"))
-      .as[(String, Long)]
-      .groupByKey(_._1)
-      .mapGroups { (f, it) =>
-        // size each sketch to ITS file's key count (one file's keys
-        // buffer in an executor — bounded by parquet file size): a
-        // fixed capacity either over-sizes small files 100× (every
-        // lookup then deserializes megabytes of near-empty sketch from
-        // the manifest) or saturates big ones past the target fpp
-        val vals = it.map(_._2).toArray
-        val bf = org.apache.spark.util.sketch.BloomFilter.create(
-          math.max(vals.length.toLong, 64L), fpp)
-        vals.foreach(bf.putLong)
-        val bos = new java.io.ByteArrayOutputStream()
-        bf.writeTo(bos)
-        // normalize to Hadoop Path form so the key joins listDataFiles
-        (new Path(f).toString, bos.toByteArray)
-      }
-      .toDF("file_path", "bloom")
-      .withColumn("bloom_col", lit(column))
-      .withColumn("bloom_keys", lit(graft.functions.BloomKeys.Scheme))
-  }
-
   /** File-level column statistics (zone map) harvested from parquet
     * FOOTERS — the per-file min/max metrics an Iceberg catalog keeps,
     * reconstructed from storage alone. Metadata-only: footers are read,
     * row data never is. The harvest runs as a DISTRIBUTED Spark job over
     * the file list (a 100 TB table has ~10^5-10^6 footers; a sequential
-    * driver sweep would dominate every query — see also
-    * [[VersionedManifest.commit]] which persists these stats so readers
-    * prune from cached metadata without touching footers at all).
+    * driver sweep would dominate every query).
     * Returns one row per file with the column's min/max (as raw int64
     * for timestamp/long columns) and row count; files without stats
     * surface as nulls (never pruned). */
@@ -705,9 +656,8 @@ object Recovery {
     * rows-per-file cap derived from the table's observed bytes/row
     * splits hot partitions near the target. Returns
     * (filesBefore, filesAfter).
-    * Writes to `to` — compact-then-swap (or commit the new file list
-    * via [[VersionedManifest]]) keeps readers consistent; compacting
-    * in place would race them. */
+    * Writes to `to` — compact-then-swap keeps readers consistent;
+    * compacting in place would race them. */
   def compact(spark: SparkSession, from: SinkConfig, to: SinkConfig,
               targetFileBytes: Long = 128L << 20): (Long, Long) = {
     val files = listDataFiles(spark, PartitionedParquetSink.tablePath(from))

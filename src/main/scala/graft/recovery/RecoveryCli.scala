@@ -127,7 +127,7 @@ object RecoveryCli {
       |  prune       --manifest PATH [--tables a,b] [--dry-run]
       |  repartition --tables a,b --ts-column C --from-granularity G --to-granularity G [--dry-run]
       |
-      |scan/reconcile work against the local versioned manifest (--manifest)
+      |scan/reconcile work against the local file manifest (--manifest)
       |OR an Iceberg REST catalog (the reference CLI's target):
       |  --catalog-uri URI [--catalog-warehouse W] [--catalog-token T] [--namespace NS]
       |

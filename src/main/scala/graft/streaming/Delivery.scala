@@ -178,7 +178,10 @@ object Delivery {
     * fails the query fast so the checkpoint pins the batch for a fixed
     * deploy, not a hot retry loop. `beforeRegister` is a test/metrics
     * seam between the two stages (where the reference's process could
-    * die between write and catalog registration). */
+    * die between write and catalog registration). Like
+    * `ingestWithManifest`, the query holds the listing threshold at
+    * [[StreamingIngest.SpoolStatThreshold]] while it runs, so `getBatch`
+    * stats the batch's spool files on the driver. */
   def ingestWithManifestRetrying(events: DataFrame, cfg: SinkConfig,
                                  checkpoint: String, manifestPath: String,
                                  policy: RetryPolicy = RetryPolicy(),
@@ -186,48 +189,52 @@ object Delivery {
                                  beforeRegister: DataFrame => Unit = _ => (),
                                  telemetry: Option[ExportTelemetry.Collector] = None)
       : StreamingQuery =
-    events.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // stabilize the batch so retries re-write identical rows instead
-        // of re-reading a source that may have advanced
-        val pinned = batch.localCheckpoint()
-        val spark = pinned.sparkSession
-        val t0 = System.nanoTime()
-        var retries = 0L
-        val errs = scala.collection.mutable.ArrayBuffer.empty[String]
-        val hook: (Int, Throwable) => Unit = { (a, e) =>
-          retries += 1; errs += s"attempt $a: ${e.getMessage}"; onRetry(a, e)
+    PartitionedParquetSink.startWithConfs(events.sparkSession, Seq(
+        "spark.sql.sources.parallelPartitionDiscovery.threshold" ->
+          StreamingIngest.SpoolStatThreshold.toString)) {
+      events.writeStream
+        .foreachBatch { (batch: DataFrame, batchId: Long) =>
+          // stabilize the batch so retries re-write identical rows instead
+          // of re-reading a source that may have advanced
+          val pinned = batch.localCheckpoint()
+          val spark = pinned.sparkSession
+          val t0 = System.nanoTime()
+          var retries = 0L
+          val errs = scala.collection.mutable.ArrayBuffer.empty[String]
+          val hook: (Int, Throwable) => Unit = { (a, e) =>
+            retries += 1; errs += s"attempt $a: ${e.getMessage}"; onRetry(a, e)
+          }
+          // files/bytes written = the manifest's before/after delta (one
+          // tiny metadata read each side; retried attempts' orphan files
+          // count too — they ARE bytes the export path produced)
+          val before = telemetry.map(_ =>
+            ExportTelemetry.manifestTotals(spark, manifestPath))
+          def emit(outcome: String, err: Option[Throwable]): Unit =
+            telemetry.foreach { t =>
+              val (fb, bb) = before.getOrElse((0L, 0L))
+              val (fa, ba) =
+                ExportTelemetry.manifestTotals(spark, manifestPath)
+              t.record(ExportTelemetry.BatchMetric(
+                batchId, cfg.table, outcome, pinned.count(),
+                fa - fb, ba - bb, retries,
+                (System.nanoTime() - t0) / 1000000L,
+                (errs ++ err.map(e => s"final: ${e.getMessage}")).toSeq))
+            }
+          try {
+            retry(policy, hook) {
+              PartitionedParquetSink.writeBatch(pinned, cfg)
+              beforeRegister(pinned)
+              graft.recovery.Recovery.reconcile(
+                spark, PartitionedParquetSink.tablePath(cfg), manifestPath)
+            }
+            emit("success", None)
+          } catch { case e: Throwable => emit("failed", Some(e)); throw e }
+          ()
         }
-        // files/bytes written = the manifest's before/after delta (one
-        // tiny metadata read each side; retried attempts' orphan files
-        // count too — they ARE bytes the export path produced)
-        val before = telemetry.map(_ =>
-          ExportTelemetry.manifestTotals(spark, manifestPath))
-        def emit(outcome: String, err: Option[Throwable]): Unit =
-          telemetry.foreach { t =>
-            val (fb, bb) = before.getOrElse((0L, 0L))
-            val (fa, ba) =
-              ExportTelemetry.manifestTotals(spark, manifestPath)
-            t.record(ExportTelemetry.BatchMetric(
-              batchId, cfg.table, outcome, pinned.count(),
-              fa - fb, ba - bb, retries,
-              (System.nanoTime() - t0) / 1000000L,
-              (errs ++ err.map(e => s"final: ${e.getMessage}")).toSeq))
-          }
-        try {
-          retry(policy, hook) {
-            PartitionedParquetSink.writeBatch(pinned, cfg)
-            beforeRegister(pinned)
-            graft.recovery.Recovery.reconcile(
-              spark, PartitionedParquetSink.tablePath(cfg), manifestPath)
-          }
-          emit("success", None)
-        } catch { case e: Throwable => emit("failed", Some(e)); throw e }
-        ()
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
+        .option("checkpointLocation", checkpoint)
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .start()
+    }
 
   /** The reference exporter's full loop: micro-batch → partitioned
     * parquet → REST CATALOG append commit (writer.go write path +

@@ -8,10 +8,8 @@ import graft.catalog.{IcebergMaintenance, IcebergTableMetadata,
   RestCatalogClient}
 
 /** EXACTLY-ONCE streaming CDC into the Iceberg merge-on-read chain —
-  * the streaming twin of [[graft.catalog.IcebergMaintenance.upsert]]
-  * and the MOR upgrade over [[StreamingIngest.cdcApply]] (which
-  * rewrites files copy-on-write per batch): each micro-batch of keyed
-  * changes lands as ONE `overwrite` snapshot (equality-delete +
+  * the streaming twin of [[graft.catalog.IcebergMaintenance.upsert]]:
+  * each micro-batch of keyed changes lands as ONE `overwrite` snapshot (equality-delete +
   * append), so per-batch write cost is O(|batch|) regardless of table
   * size and every batch boundary is a time-travelable snapshot a
   * downstream [[graft.catalog.IcebergTableReader.readChangelog]]

@@ -100,7 +100,7 @@ object StreamingIngest {
     * stream; above the default a steady batch paid a ~0.5 s listing job
     * for what the driver stats in milliseconds. Set to the exporter's
     * default `send_batch_size`, the largest batch it asks for. */
-  private val SpoolStatThreshold = graft.config.ExporterConfig.Batch().sendBatchSize
+  private[streaming] val SpoolStatThreshold = graft.config.ExporterConfig.Batch().sendBatchSize
 
   /** Run `body` with its Spark jobs described as `what`. */
   private def described[T](spark: SparkSession, what: String)(body: => T): T = {
@@ -109,36 +109,6 @@ object StreamingIngest {
     sc.setJobDescription(what)
     try body finally sc.setJobDescription(prev)
   }
-
-  /** Streaming CDC apply: each micro-batch of keyed changes UPSERTS
-    * into the versioned table — the Iceberg copy-on-write MERGE run
-    * from foreachBatch, one snapshot per batch. The first batch
-    * bootstraps the table (plain write + commit); later batches rewrite
-    * only the files containing changed keys
-    * ([[graft.recovery.VersionedManifest.upsert]]), so per-batch cost
-    * scales with the delta, not the table. AvailableNow + the
-    * checkpoint make restarts resume at the next unapplied batch, and
-    * snapshot-per-batch means a consumer can time-travel to any batch
-    * boundary or tail the log with readIncremental. */
-  def cdcApply(changes: DataFrame, cfg: SinkConfig, checkpoint: String,
-               manifestDir: String, keyCol: String): StreamingQuery =
-    changes.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val spark = batch.sparkSession
-        val table = PartitionedParquetSink.tablePath(cfg)
-        val delta = batch.localCheckpoint()
-        if (graft.recovery.VersionedManifest.versions(spark, manifestDir).isEmpty) {
-          PartitionedParquetSink.writeBatch(delta, cfg)
-          graft.recovery.VersionedManifest.commit(spark, table, manifestDir)
-        } else {
-          graft.recovery.VersionedManifest.upsert(
-            spark, table, manifestDir, delta, keyCol, cfg)
-        }
-        ()
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
 
   /** Streaming trending top-k: the k most frequent event types per
     * 1-hour window, emitted when the watermark closes the window — two

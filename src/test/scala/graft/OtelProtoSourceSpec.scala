@@ -3,50 +3,16 @@ package graft
 import java.nio.file.{Files, Paths}
 
 import graft.sources.{OtelJsonSource, OtelProtoSource}
+import graft.{ProtoWriter => W}
 
 /** OTLP/protobuf wire-format parity: the same telemetry encoded as
   * proto3 wire bytes and as OTLP/JSON must decode to IDENTICAL batch
   * rows (and flow through the flattens identically). The test encoder
-  * below writes the wire format from the public opentelemetry-proto
-  * field numbers independently of the decoder's reading loop, so a
-  * misread tag/wire-type shows up as a parity failure, not a silent
-  * agreement. */
+  * ([[ProtoWriter]]) writes the wire format from the public
+  * opentelemetry-proto field numbers independently of the decoder's
+  * reading loop, so a misread tag/wire-type shows up as a parity
+  * failure, not a silent agreement. */
 class OtelProtoSourceSpec extends SparkSpec {
-
-  /** Minimal proto3 wire writer. */
-  private class W {
-    private val b = new java.io.ByteArrayOutputStream()
-    private def rawVarint(v0: Long): Unit = {
-      var v = v0
-      while ((v & ~0x7fL) != 0L) { b.write(((v & 0x7f) | 0x80).toInt); v >>>= 7 }
-      b.write(v.toInt)
-    }
-    private def tag(f: Int, wire: Int): Unit = rawVarint((f.toLong << 3) | wire)
-    def vint(f: Int, v: Long): W = { tag(f, 0); rawVarint(v); this }
-    def sint32(f: Int, v: Int): W = { tag(f, 0); rawVarint(((v << 1) ^ (v >> 31)) & 0xffffffffL); this }
-    def fixed64(f: Int, v: Long): W = {
-      tag(f, 1); var i = 0; while (i < 8) { b.write(((v >>> (8 * i)) & 0xff).toInt); i += 1 }; this
-    }
-    def fixed32(f: Int, v: Int): W = {
-      tag(f, 5); var i = 0; while (i < 4) { b.write((v >>> (8 * i)) & 0xff); i += 1 }; this
-    }
-    def dbl(f: Int, d: Double): W = fixed64(f, java.lang.Double.doubleToLongBits(d))
-    def str(f: Int, s: String): W = bytes(f, s.getBytes("UTF-8"))
-    def bytes(f: Int, arr: Array[Byte]): W = { tag(f, 2); rawVarint(arr.length.toLong); b.write(arr); this }
-    def hex(f: Int, h: String): W =
-      bytes(f, h.grouped(2).map(Integer.parseInt(_, 16).toByte).toArray)
-    def msg(f: Int, m: W): W = bytes(f, m.toBytes)
-    def packedFixed64(f: Int, vs: Seq[Long]): W = {
-      val m = new W; vs.foreach { v => var i = 0; while (i < 8) { m.b.write(((v >>> (8 * i)) & 0xff).toInt); i += 1 } }
-      bytes(f, m.toBytes)
-    }
-    def packedDoubles(f: Int, vs: Seq[Double]): W =
-      packedFixed64(f, vs.map(java.lang.Double.doubleToLongBits))
-    def packedVarints(f: Int, vs: Seq[Long]): W = {
-      val m = new W; vs.foreach(m.rawVarint); bytes(f, m.toBytes)
-    }
-    def toBytes: Array[Byte] = b.toByteArray
-  }
 
   private def kvStr(k: String, v: String): W =
     new W().str(1, k).msg(2, new W().str(1, v))

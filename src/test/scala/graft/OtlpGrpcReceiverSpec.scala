@@ -13,6 +13,7 @@ import io.netty.handler.codec.http2._
 
 import graft.otel.OtelTraces
 import graft.sources.{OtelProtoSource, OtlpGrpcReceiver}
+import graft.{ProtoWriter => W}
 
 /** OTLP/gRPC ingestion e2e. The client side is NETTY's own HTTP/2
   * codec — an independent, spec-complete peer whose HPACK encoder
@@ -26,30 +27,6 @@ class OtlpGrpcReceiverSpec extends SparkSpec {
 
   private val TracePath =
     "/opentelemetry.proto.collector.trace.v1.TraceService/Export"
-
-  /** Minimal proto3 wire writer (same shape as OtelProtoSourceSpec's). */
-  private class W {
-    private val b = new ByteArrayOutputStream()
-    private def rawVarint(v0: Long): Unit = {
-      var v = v0
-      while ((v & ~0x7fL) != 0) { b.write(((v & 0x7f) | 0x80).toInt); v >>>= 7 }
-      b.write(v.toInt)
-    }
-    private def tag(f: Int, wire: Int): Unit = rawVarint((f.toLong << 3) | wire)
-    def vint(f: Int, v: Long): W = { tag(f, 0); rawVarint(v); this }
-    def fixed64(f: Int, v: Long): W = {
-      tag(f, 1)
-      (0 until 8).foreach(i => b.write(((v >> (8 * i)) & 0xff).toInt)); this
-    }
-    def str(f: Int, s: String): W = bytes(f, s.getBytes("UTF-8"))
-    def bytes(f: Int, arr: Array[Byte]): W = {
-      tag(f, 2); rawVarint(arr.length.toLong); b.write(arr); this
-    }
-    def hex(f: Int, h: String): W =
-      bytes(f, h.grouped(2).map(Integer.parseInt(_, 16).toByte).toArray)
-    def msg(f: Int, m: W): W = bytes(f, m.toBytes)
-    def toBytes: Array[Byte] = b.toByteArray
-  }
 
   private def traceRequest(tid: String, name: String, startNs: Long): Array[Byte] = {
     val resource = new W().msg(1, new W()

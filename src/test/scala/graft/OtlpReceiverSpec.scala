@@ -1,6 +1,5 @@
 package graft
 
-import java.io.ByteArrayOutputStream
 import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 import java.nio.file.{Files, Paths}
@@ -9,6 +8,7 @@ import graft.config.ExporterConfig._
 import graft.otel.OtelTraces
 import graft.sources.{OtelJsonSource, OtelProtoSource, OtlpHttpReceiver}
 import graft.streaming.StreamingIngest
+import graft.{ProtoWriter => W}
 
 /** Push-based OTLP ingestion e2e — the reference's consume path
   * (`/root/reference/exporter.go:101` consumeTraces) re-expressed as
@@ -18,43 +18,6 @@ import graft.streaming.StreamingIngest
   * collector's encoder to the parquet row is exercised without any
   * protobuf library. */
 class OtlpReceiverSpec extends SparkSpec {
-
-  /** Minimal proto3 wire writer (same shape as OtelProtoSourceSpec's). */
-  private class W {
-    private val b = new ByteArrayOutputStream()
-    private def rawVarint(v0: Long): Unit = {
-      var v = v0
-      while ((v & ~0x7fL) != 0) { b.write(((v & 0x7f) | 0x80).toInt); v >>>= 7 }
-      b.write(v.toInt)
-    }
-    private def tag(f: Int, wire: Int): Unit = rawVarint((f.toLong << 3) | wire)
-    def vint(f: Int, v: Long): W = { tag(f, 0); rawVarint(v); this }
-    def fixed64(f: Int, v: Long): W = {
-      tag(f, 1)
-      (0 until 8).foreach(i => b.write(((v >> (8 * i)) & 0xff).toInt)); this
-    }
-    def str(f: Int, s: String): W = bytes(f, s.getBytes("UTF-8"))
-    def bytes(f: Int, arr: Array[Byte]): W = {
-      tag(f, 2); rawVarint(arr.length.toLong); b.write(arr); this
-    }
-    def hex(f: Int, h: String): W =
-      bytes(f, h.grouped(2).map(Integer.parseInt(_, 16).toByte).toArray)
-    def dbl(f: Int, d: Double): W =
-      fixed64(f, java.lang.Double.doubleToLongBits(d))
-    def sint32(f: Int, v: Int): W =
-      { tag(f, 0); rawVarint(((v << 1) ^ (v >> 31)) & 0xffffffffL); this }
-    def packedFixed64(f: Int, vs: Seq[Long]): W = {
-      val p = new ByteArrayOutputStream()
-      vs.foreach(v => (0 until 8).foreach(i =>
-        p.write(((v >> (8 * i)) & 0xff).toInt)))
-      bytes(f, p.toByteArray)
-    }
-    def packedVarints(f: Int, vs: Seq[Long]): W = {
-      val w = new W(); vs.foreach(w.rawVarint); bytes(f, w.toBytes)
-    }
-    def msg(f: Int, m: W): W = bytes(f, m.toBytes)
-    def toBytes: Array[Byte] = b.toByteArray
-  }
 
   /** ExportTraceServiceRequest with one span (public otlp field numbers:
     * resource_spans=1; resource=1/scope_spans=2; scope=1/spans=2). */

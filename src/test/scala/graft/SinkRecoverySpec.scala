@@ -197,92 +197,6 @@ class SinkRecoverySpec extends SparkSpec {
       s"no skipping: ${slice.inputFiles.length} of $nFiles files read")
   }
 
-  test("versioned manifest gives snapshot isolation and time travel") {
-    import graft.recovery.VersionedManifest
-    val base = tmp()
-    val cfg = SinkConfig(base, "events", tsColumn = "ts", granularity = "monthly")
-    val tablePath = s"$base/events"
-    val manDir = s"$base/_snapshots"
-
-    val batch1 = eventsDf.limit(300)
-    PartitionedParquetSink.writeBatch(batch1, cfg)
-    val v1 = VersionedManifest.commit(spark, tablePath, manDir)
-    assert(v1 === 1L)
-
-    val batch2 = eventsDf.orderBy(col("event_id").desc).limit(200)
-    PartitionedParquetSink.writeBatch(batch2, cfg)
-    val v2 = VersionedManifest.commit(spark, tablePath, manDir)
-    assert(v2 === 2L && VersionedManifest.currentVersion(spark, manDir) === 2L)
-
-    // snapshot 1 still reads exactly the pre-append state
-    assert(VersionedManifest.readAt(spark, tablePath, manDir, Some(1L)).count() === 300L)
-    // the pointer resolves to the full current state
-    assert(VersionedManifest.readAt(spark, tablePath, manDir).count() === 500L)
-    // snapshots are immutable file lists
-    assert(VersionedManifest.filesAt(spark, manDir, Some(1L)).count() <
-           VersionedManifest.filesAt(spark, manDir, Some(2L)).count())
-  }
-
-  test("manifest self-heals a lost VERSION pointer and keeps committing") {
-    import graft.recovery.VersionedManifest
-    val base = tmp()
-    val cfg = SinkConfig(base, "events", tsColumn = "ts", granularity = "monthly")
-    val tablePath = s"$base/events"
-    val manDir = s"$base/_snapshots"
-    PartitionedParquetSink.writeBatch(eventsDf.limit(100), cfg)
-    assert(VersionedManifest.commit(spark, tablePath, manDir) === 1L)
-    assert(VersionedManifest.commit(spark, tablePath, manDir) === 2L)
-
-    // simulate a crash that lost the pointer between delete and rename:
-    // currentVersion must fall back to max(manifest-vN), not 0 — and the
-    // next commit must succeed (v3), not collide with manifest-v1 forever
-    new java.io.File(s"$manDir/VERSION").delete()
-    assert(VersionedManifest.currentVersion(spark, manDir) === 2L)
-    assert(VersionedManifest.commit(spark, tablePath, manDir) === 3L)
-    assert(VersionedManifest.currentVersion(spark, manDir) === 3L)
-    assert(VersionedManifest.readAt(spark, tablePath, manDir).count() === 100L)
-  }
-
-  test("stats-carrying manifest prunes time slices from cached metadata") {
-    import graft.recovery.VersionedManifest
-    val base = tmp()
-    val cfg = SinkConfig(base, "events", tsColumn = "ts", granularity = "daily")
-    val tablePath = s"$base/events"
-    val manDir = s"$base/_snapshots"
-    PartitionedParquetSink.writeBatch(eventsDf, cfg)
-    VersionedManifest.commit(spark, tablePath, manDir, statsColumn = Some("ts"))
-
-    val man = VersionedManifest.filesAt(spark, manDir)
-    val nFiles = man.count()
-    assert(man.columns.toSet.contains("min_val"))
-    assert(man.filter(col("min_val").isNull).count() === 0, "stats missing")
-
-    val startUs = java.time.Instant.parse("2024-01-03T00:00:00Z").toEpochMilli * 1000
-    val endUs   = java.time.Instant.parse("2024-01-06T00:00:00Z").toEpochMilli * 1000
-    val slice = VersionedManifest.readSliceAt(spark, tablePath, manDir, "ts", startUs, endUs)
-    val expected = spark.read.parquet(tablePath)
-      .filter(unix_micros(col("ts")) >= startUs && unix_micros(col("ts")) < endUs)
-    assert(slice.count() === expected.count() && slice.count() > 0)
-    assert(slice.inputFiles.length < nFiles,
-      s"no metadata pruning: ${slice.inputFiles.length} of $nFiles files read")
-
-    // the scan-cost claim in bytes, not file counts: the pruned read's
-    // input files are a small fraction of the table (3 of ~14 daily
-    // partitions overlap the slice — require < half as a noise-proof
-    // bound)
-    def bytesOf(paths: Seq[String]): Long = {
-      val conf = spark.sparkContext.hadoopConfiguration
-      paths.map { p =>
-        val hp = new org.apache.hadoop.fs.Path(p)
-        hp.getFileSystem(conf).getFileStatus(hp).getLen
-      }.sum
-    }
-    val prunedBytes = bytesOf(slice.inputFiles.toIndexedSeq)
-    val fullBytes = bytesOf(spark.read.parquet(tablePath).inputFiles.toIndexedSeq)
-    assert(prunedBytes > 0 && prunedBytes * 2 < fullBytes,
-      s"pruned read still scans $prunedBytes of $fullBytes bytes")
-  }
-
   test("z-order clustering gives zone-map pruning on BOTH columns") {
     val base = tmp()
     // one partition dir, many files → pruning comes from clustering only
@@ -515,122 +429,6 @@ class SinkRecoverySpec extends SparkSpec {
     assert(spark.read.parquet(registered: _*).count() === 300)
   }
 
-  test("partition evolution: granularity rewrite commits as a snapshot, old layout expires") {
-    import graft.recovery.VersionedManifest
-    val base = tmp()
-    val mDir = s"$base/manifests"
-    val hourly = SinkConfig(base, "events_hourly", tsColumn = "ts", granularity = "hourly")
-    val daily = SinkConfig(base, "events_daily", tsColumn = "ts", granularity = "daily")
-    PartitionedParquetSink.writeBatch(eventsDf, hourly)
-    val hourlyPath = PartitionedParquetSink.tablePath(hourly)
-    val dailyPath = PartitionedParquetSink.tablePath(daily)
-    val v1 = VersionedManifest.commit(spark, hourlyPath, mDir)
-
-    // evolve: rewrite at daily granularity, commit the NEW layout's
-    // files as the next snapshot of the SAME manifest log — absolute
-    // paths make the log layout-agnostic, exactly like Iceberg metadata
-    Recovery.repartition(spark, hourly, daily)
-    val v2 = VersionedManifest.commitFiles(
-      spark, mDir, Recovery.listDataFiles(spark, dailyPath))
-
-    val n = eventsDf.count()
-    assert(VersionedManifest.readAt(spark, hourlyPath, mDir, Some(v1)).count() === n)
-    val evolved = VersionedManifest.readAt(spark, dailyPath, mDir, Some(v2))
-    assert(evolved.count() === n)
-    // daily layout: no hour partition column survives the rewrite
-    assert(!evolved.columns.contains("hour") && evolved.columns.contains("day"))
-
-    // expiry GCs the ENTIRE hourly generation (cross-directory paths)
-    val hourlyFiles = Recovery.listDataFiles(spark, hourlyPath).count()
-    val (expired, deleted) = VersionedManifest.expireSnapshots(spark, mDir, keepLast = 1)
-    assert(expired === Seq(v1))
-    assert(deleted === hourlyFiles)
-    assert(Recovery.listDataFiles(spark, hourlyPath).count() === 0)
-    spark.catalog.refreshByPath(dailyPath)
-    assert(VersionedManifest.readAt(spark, dailyPath, mDir).count() === n)
-  }
-
-  test("copy-on-write upsert rewrites only affected files, keeps time travel") {
-    import graft.recovery.VersionedManifest
-    val base = tmp()
-    val table = s"$base/events"
-    val mDir = s"$base/manifests"
-    val cfg = SinkConfig(base, "events", tsColumn = "ts", granularity = "daily")
-    PartitionedParquetSink.writeBatch(eventsDf, cfg)
-    val v1 = VersionedManifest.commit(spark, table, mDir, statsColumn = Some("ts"))
-    val v1Files = VersionedManifest.filesAt(spark, mDir, Some(v1))
-      .select("file_path").collect().map(_.getString(0)).toSet
-
-    // update 3 day-1 events' value — only day-1 files should rewrite
-    val ids = eventsDf.filter(dayofmonth(col("ts")) === 1)
-      .select("event_id").limit(3).collect().map(_.getLong(0))
-    val updates = eventsDf.filter(col("event_id").isin(ids.toSeq: _*))
-      .withColumn("value", lit(9999.5))
-    val v2 = VersionedManifest.upsert(spark, table, mDir, updates, "event_id",
-      cfg, statsColumn = Some("ts"))
-    spark.catalog.refreshByPath(table)
-
-    val now = VersionedManifest.readAt(spark, table, mDir, Some(v2))
-    assert(now.count() === eventsDf.count(), "row count must be preserved")
-    val updated = now.filter(col("event_id").isin(ids.toSeq: _*))
-      .select("value").collect().map(_.getDouble(0))
-    assert(updated.length === 3 && updated.forall(_ === 9999.5))
-    // untouched key unchanged
-    val other = now.filter(!col("event_id").isin(ids.toSeq: _*))
-      .agg(sum(col("value"))).collect()(0).getDouble(0)
-    val expOther = eventsDf.filter(!col("event_id").isin(ids.toSeq: _*))
-      .agg(sum(col("value"))).collect()(0).getDouble(0)
-    assert(math.abs(other - expOther) < 1e-6)
-
-    // time travel: v1 still serves the ORIGINAL values
-    val old = VersionedManifest.readAt(spark, table, mDir, Some(v1))
-      .filter(col("event_id") === ids.head).select("value").collect()
-    assert(old.length === 1)
-    assert(old(0).getDouble(0) !== 9999.5)
-
-    // file economy: v2 reuses every untouched v1 file
-    val v2Files = VersionedManifest.filesAt(spark, mDir, Some(v2))
-      .select("file_path").collect().map(_.getString(0)).toSet
-    val reused = (v1Files intersect v2Files).size
-    assert(reused >= v1Files.size - 2,
-      s"upsert rewrote too much: kept $reused of ${v1Files.size}")
-    assert(v2Files != v1Files)
-  }
-
-  test("rollback commits the old file list as a NEW head, history intact") {
-    import graft.recovery.VersionedManifest
-    val base = tmp()
-    val table = s"$base/events"
-    val mDir = s"$base/manifests"
-    val cfg = SinkConfig(base, "events", tsColumn = "ts", granularity = "daily")
-    PartitionedParquetSink.writeBatch(eventsDf, cfg)
-    val v1 = VersionedManifest.commit(spark, table, mDir)
-
-    // a bad upsert lands as v2
-    val ids = eventsDf.select("event_id").limit(2).collect().map(_.getLong(0))
-    val bad = eventsDf.filter(col("event_id").isin(ids.toSeq: _*))
-      .withColumn("value", lit(-1.0))
-    val v2 = VersionedManifest.upsert(spark, table, mDir, bad, "event_id", cfg)
-    spark.catalog.refreshByPath(table)
-
-    // rollback: head becomes v3 whose content EQUALS v1
-    val v3 = VersionedManifest.rollback(spark, mDir, v1)
-    assert(v3 === v2 + 1)
-    assert(VersionedManifest.currentVersion(spark, mDir) === v3)
-    val head = VersionedManifest.readAt(spark, table, mDir)
-    val orig = VersionedManifest.readAt(spark, table, mDir, Some(v1))
-    assert(head.except(orig).count() === 0L && orig.except(head).count() === 0L)
-    // the bad snapshot is still readable (append-only history)
-    val badRead = VersionedManifest.readAt(spark, table, mDir, Some(v2))
-      .filter(col("event_id") === ids.head).select("value").collect()
-    assert(badRead.head.getDouble(0) === -1.0)
-    // rollback of a rollback is idempotent on content
-    val v4 = VersionedManifest.rollback(spark, mDir, v2)
-    val headAgain = VersionedManifest.readAt(spark, table, mDir, Some(v4))
-    assert(headAgain.filter(col("event_id") === ids.head)
-      .select("value").collect().head.getDouble(0) === -1.0)
-  }
-
   test("distributed listing equals the driver walk at every fan-out") {
     import graft.recovery.Recovery
     val base = tmp()
@@ -650,149 +448,6 @@ class SinkRecoverySpec extends SparkSpec {
     assert(wide === driver)
     // empty table
     assert(Recovery.listDataFilesDistributed(spark, s"$base/nope").count() === 0L)
-  }
-
-  test("shallow clone shares data files; tags pin named snapshots") {
-    import graft.recovery.VersionedManifest
-    val base = tmp()
-    val table = s"$base/events"
-    val mDir = s"$base/manifests"
-    val cloneDir = s"$base/clone-manifests"
-    val cfg = SinkConfig(base, "events", tsColumn = "ts", granularity = "daily")
-    PartitionedParquetSink.writeBatch(eventsDf, cfg)
-    val v1 = VersionedManifest.commit(spark, table, mDir)
-    VersionedManifest.writeTag(spark, mDir, "audited", v1)
-
-    // clone: new log, version 1, SAME files (zero copy)
-    val cv = VersionedManifest.cloneTo(spark, mDir, cloneDir)
-    assert(cv === 1L)
-    val srcFiles = VersionedManifest.filesAt(spark, mDir, Some(v1))
-      .select("file_path").collect().map(_.getString(0)).toSet
-    val cloneFiles = VersionedManifest.filesAt(spark, cloneDir, Some(cv))
-      .select("file_path").collect().map(_.getString(0)).toSet
-    assert(cloneFiles === srcFiles)
-    val srcRead = VersionedManifest.readAt(spark, table, mDir, Some(v1))
-    val cloneRead = VersionedManifest.readAt(spark, table, cloneDir, Some(cv))
-    assert(cloneRead.count() === srcRead.count())
-
-    // source evolves (upsert) — the clone must NOT see it
-    val ids = eventsDf.select("event_id").limit(2).collect().map(_.getLong(0))
-    val upd = eventsDf.filter(col("event_id").isin(ids.toSeq: _*))
-      .withColumn("value", lit(123.25))
-    VersionedManifest.upsert(spark, table, mDir, upd, "event_id", cfg)
-    spark.catalog.refreshByPath(table)
-    val cloneAfter = VersionedManifest.readAt(spark, table, cloneDir, Some(cv))
-      .filter(col("event_id") === ids.head).select("value").collect()
-    assert(cloneAfter.head.getDouble(0) !== 123.25)
-
-    // the tag still resolves to the pre-upsert snapshot
-    assert(VersionedManifest.readTag(spark, mDir, "audited") === v1)
-    val tagged = VersionedManifest.readAtTag(spark, table, mDir, "audited")
-      .filter(col("event_id") === ids.head).select("value").collect()
-    assert(tagged.head.getDouble(0) !== 123.25)
-    // tags are overwrite-atomic: repointing works
-    VersionedManifest.writeTag(spark, mDir, "audited",
-      VersionedManifest.currentVersion(spark, mDir))
-    val retagged = VersionedManifest.readAtTag(spark, table, mDir, "audited")
-      .filter(col("event_id") === ids.head).select("value").collect()
-    assert(retagged.head.getDouble(0) === 123.25)
-  }
-
-  test("bloom file index prunes point lookups to a handful of files") {
-    import graft.recovery.VersionedManifest
-    val base = tmp()
-    val table = s"$base/events"
-    val mDir = s"$base/manifests"
-    val cfg = SinkConfig(base, "events", tsColumn = "ts", granularity = "daily")
-    PartitionedParquetSink.writeBatch(eventsDf, cfg)
-    VersionedManifest.commit(spark, table, mDir,
-      statsColumn = Some("ts"), bloomColumn = Some("event_id"))
-    val nFiles = Recovery.listDataFiles(spark, table).count()
-    assert(nFiles > 10, s"fixture too small to prove pruning: $nFiles files")
-
-    // every event id must be found exactly (no false negatives, ever)
-    val probes = eventsDf.select("event_id").collect().map(_.getLong(0)).take(5)
-    probes.foreach { id =>
-      val got = VersionedManifest.readPoint(spark, table, mDir, id)
-      assert(got.count() === 1, s"event $id not found exactly once")
-      assert(got.collect()(0).getAs[Long]("event_id") === id)
-    }
-
-    // pruning: the bloom check must admit FAR fewer files than the table
-    import spark.implicits._
-    val m = VersionedManifest.filesAt(spark, mDir)
-    val admitted = m.select("bloom").as[Array[Byte]].collect().count { b =>
-      org.apache.spark.util.sketch.BloomFilter
-        .readFrom(new java.io.ByteArrayInputStream(b))
-        .mightContainLong(probes.head)
-    }
-    assert(admitted <= math.max(2, nFiles / 4),
-      s"bloom admitted $admitted of $nFiles files")
-    // a key that never existed reads zero rows through the same path
-    assert(VersionedManifest.readPoint(spark, table, mDir, -987654321L).count() === 0)
-  }
-
-  test("incremental read returns exactly the rows added between snapshots") {
-    import graft.recovery.VersionedManifest
-    val base = tmp()
-    val table = s"$base/events"
-    val mDir = s"$base/manifests"
-    val cfg = SinkConfig(base, "events", tsColumn = "ts", granularity = "daily")
-    val day1 = eventsDf.filter(dayofmonth(col("ts")) === 1)
-    val day2 = eventsDf.filter(dayofmonth(col("ts")) === 2)
-    PartitionedParquetSink.writeBatch(day1, cfg)
-    val v1 = VersionedManifest.commit(spark, table, mDir)
-    PartitionedParquetSink.writeBatch(day2, cfg)
-    val v2 = VersionedManifest.commit(spark, table, mDir)
-    val delta = VersionedManifest.readIncremental(spark, table, mDir, v1, Some(v2))
-    assert(delta.count() === day2.count())
-    // only day-2 rows: the day-1 generation is invisible to the delta
-    assert(delta.select(min(dayofmonth(col("ts")))).collect()(0).getInt(0) === 2)
-    // same-version delta is empty; full-range delta is the whole table
-    assert(VersionedManifest.readIncremental(spark, table, mDir, v2).count() === 0)
-    assert(VersionedManifest.readIncremental(spark, table, mDir, 0L).count()
-      === day1.count() + day2.count())
-  }
-
-  test("expire snapshots GCs exactly the files unreachable from retained snapshots") {
-    import graft.recovery.VersionedManifest
-    val base = tmp()
-    val table = s"$base/events"
-    val mDir = s"$base/manifests"
-    val cfg = SinkConfig(base, "events", tsColumn = "ts", granularity = "daily")
-    val day1 = eventsDf.filter(dayofmonth(col("ts")) === 1).localCheckpoint()
-    PartitionedParquetSink.writeBatch(day1, cfg)
-    val v1 = VersionedManifest.commit(spark, table, mDir)
-    PartitionedParquetSink.writeBatch(
-      eventsDf.filter(dayofmonth(col("ts")) === 2), cfg)
-    val v2 = VersionedManifest.commit(spark, table, mDir)
-    val gen1 = Recovery.listDataFiles(spark, table)
-      .collect().map(_.getString(0)).toSet
-
-    // rewrite: write a compacted second generation into the SAME table,
-    // then commit ONLY the new files — gen1 is now superseded but must
-    // stay readable through v1/v2 until expiry
-    val expect = spark.read.parquet(table).count()
-    val copy = spark.read.parquet(table).localCheckpoint()
-    PartitionedParquetSink.writeBatch(copy.drop("year", "month", "day"), cfg)
-    spark.catalog.refreshByPath(table)
-    val gen2 = Recovery.listDataFiles(spark, table)
-      .filter(!col("file_path").isin(gen1.toSeq: _*))
-    val v3 = VersionedManifest.commitFiles(spark, mDir, gen2)
-    assert(VersionedManifest.readAt(spark, table, mDir, Some(v1)).count()
-      === day1.count())
-
-    val (expired, deleted) = VersionedManifest.expireSnapshots(spark, mDir, keepLast = 1)
-    assert(expired === Seq(v1, v2))
-    assert(deleted === gen1.size, "every superseded gen1 file is deleted, nothing else")
-    gen1.foreach(f =>
-      assert(!new java.io.File(new java.net.URI(f).getPath).exists(), s"not deleted: $f"))
-    assert(VersionedManifest.versions(spark, mDir) === Seq(v3))
-    // current snapshot unharmed: full row count through the pointer
-    spark.catalog.refreshByPath(table)
-    assert(VersionedManifest.readAt(spark, table, mDir).count() === expect)
-    // idempotent: nothing left to expire
-    assert(VersionedManifest.expireSnapshots(spark, mDir, keepLast = 1) === (Nil, 0L))
   }
 
   test("schema evolution: widened batches merge, old files read as null") {

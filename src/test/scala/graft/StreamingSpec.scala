@@ -3,9 +3,10 @@ package graft
 import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.sink.PartitionedParquetSink.SinkConfig
-import graft.streaming.StreamingIngest
+import graft.streaming.{Delivery, StreamingIngest}
 
 class StreamingSpec extends SparkSpec {
 
@@ -75,22 +76,31 @@ class StreamingSpec extends SparkSpec {
     val cfg = SinkConfig(base, "events", tsColumn = "ts", granularity = "monthly")
 
     // the file source reads the threshold from the caller's session at
-    // every getBatch, so ingestWithManifest raises it while the query
+    // every getBatch, so both manifest ingests raise it while the query
     // runs; a listener restores the caller's value (set or unset) at
     // termination. Listener events are async — poll briefly.
     val key = "spark.sql.sources.parallelPartitionDiscovery.threshold"
     def explicit = spark.conf.getAll.get(key) // None while unset
     val caller = explicit
-    try Seq(Some("17"), None).zipWithIndex.foreach { case (before, i) =>
+    val events = StreamingIngest.readEvents(spark, srcDir, batch.schema)
+    // the retrying ingest's register seam also sees the value mid-run
+    val during = scala.collection.mutable.ArrayBuffer.empty[String]
+    val starts: Seq[(String, String) => StreamingQuery] = Seq(
+      StreamingIngest.ingestWithManifest(events, cfg, _, _),
+      (chk, man) => Delivery.ingestWithManifestRetrying(events, cfg, chk, man,
+        beforeRegister = _ => during += spark.conf.get(key)))
+    val cases = for (start <- starts; before <- Seq(Some("17"), None))
+      yield (start, before)
+    try cases.zipWithIndex.foreach { case ((start, before), i) =>
       before.fold(spark.conf.unset(key))(spark.conf.set(key, _))
-      StreamingIngest.ingestWithManifest(
-        StreamingIngest.readEvents(spark, srcDir, batch.schema),
-        cfg, s"$base/chk$i", s"$base/manifest$i").awaitTermination()
+      start(s"$base/chk$i", s"$base/manifest$i").awaitTermination()
       val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
       while (explicit != before && System.nanoTime() < deadline)
         Thread.sleep(50)
-      assert(explicit === before)
+      assert(explicit === before, s"case $i")
     } finally caller.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    assert(during.nonEmpty && during.forall(
+      _ == graft.config.ExporterConfig.Batch().sendBatchSize.toString), during)
   }
 
   test("foreachBatch ingest registers every written file in the manifest") {
@@ -174,48 +184,6 @@ class StreamingSpec extends SparkSpec {
       assert(rows("cpu") === ((4L, 500L, 300L, -225L, 950L)))
       assert(rows("quiet") === ((1L, 100L, 100L, 100L, 100L)))
     } finally q.stop()
-  }
-
-  test("streaming CDC apply upserts each micro-batch into a new snapshot") {
-    import graft.recovery.VersionedManifest
-    val base = Files.createTempDirectory("graft-stream-cdc").toString
-    val (srcDir, chk, mDir) = (s"$base/src", s"$base/chk", s"$base/manifest")
-    val table = s"$base/events"
-    val cfg = SinkConfig(base, "events", tsColumn = "ts", granularity = "daily")
-    val ev = Tables.events(spark, sf)
-    val batch1 = ev.filter(dayofmonth(col("ts")) <= 5)
-    batch1.write.parquet(srcDir)
-
-    def run(): Unit = {
-      val q = StreamingIngest.cdcApply(
-        spark.readStream.schema(ev.schema).parquet(srcDir), cfg, chk, mDir,
-        "event_id")
-      q.awaitTermination()
-    }
-    run() // bootstrap snapshot
-    val v1 = VersionedManifest.currentVersion(spark, mDir)
-    assert(VersionedManifest.readAt(spark, table, mDir).count() === batch1.count())
-
-    // change batch: two updates + one brand-new key, appended to the
-    // source — the checkpoint makes run 2 process ONLY this file
-    val ids = batch1.select("event_id").limit(2).collect().map(_.getLong(0))
-    val changes = ev.filter(col("event_id").isin(ids.toSeq: _*))
-      .withColumn("value", lit(111.5))
-      .unionByName(batch1.limit(1).withColumn("event_id", lit(999999999L)))
-    changes.coalesce(1).write.mode("append").parquet(srcDir)
-    run() // resume from checkpoint, apply the delta
-
-    spark.catalog.refreshByPath(table)
-    val now = VersionedManifest.readAt(spark, table, mDir)
-    assert(now.count() === batch1.count() + 1, "insert must add one row")
-    val upd = now.filter(col("event_id").isin(ids.toSeq: _*))
-      .select("value").collect().map(_.getDouble(0))
-    assert(upd.length === 2 && upd.forall(_ === 111.5))
-    assert(now.filter(col("event_id") === 999999999L).count() === 1)
-    // the bootstrap snapshot still serves pre-CDC values
-    val old = VersionedManifest.readAt(spark, table, mDir, Some(v1))
-    assert(old.count() === batch1.count())
-    assert(old.filter(col("event_id") === 999999999L).count() === 0)
   }
 
   test("update-mode materialized view converges to the batch rollup") {

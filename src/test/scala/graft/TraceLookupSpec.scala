@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 import graft.catalog.{IcebergCommit, IcebergMaintenance, IcebergTableReader,
   Puffin, RestCatalogClient}
 import graft.functions.BloomKeys
-import graft.recovery.{Recovery, VersionedManifest}
+import graft.recovery.Recovery
 
 /** STRING-keyed bloom point lookups — the trace_id needle (r12 verdict
   * item 1). The reference renders trace ids as 32-hex-char strings
@@ -15,9 +15,8 @@ import graft.recovery.{Recovery, VersionedManifest}
   * common telemetry query; sketches therefore key on xxhash64 of the
   * value ([[BloomKeys]]) so string needles prune exactly like longs.
   * Pins: build/probe hash agreement per type, ≤¼-of-files pruning on a
-  * string-keyed trace table through BOTH chains (Iceberg sidecar and
-  * the engine-native VersionedManifest), no false negatives, and the
-  * null-key build NPE fixed in [[Recovery.fileBlooms]]. */
+  * string-keyed trace table through the Iceberg bloom sidecar, no false
+  * negatives, and a bloom build that skips null keys. */
 class TraceLookupSpec extends SparkSpec {
 
   private def hex(s: String): String =
@@ -60,8 +59,11 @@ class TraceLookupSpec extends SparkSpec {
     val dataDir = s"$base/data"
     // residue-class layout: every file's id range spans the table, so
     // only the bloom can narrow a needle read — and the key column is
-    // a 32-hex STRING, which the old cast("long") keying nulled out
-    (0L until 4000L).map(i => (hex(i.toString), i)).toDF("trace_id", "id")
+    // a 32-hex STRING, which the old cast("long") keying nulled out.
+    // Spans without a trace id land in every file: the build skips them
+    ((0L until 4000L).map(i => (hex(i.toString), i)) ++
+      (4000L until 4048L).map(i => (null: String, i)))
+      .toDF("trace_id", "id")
       .repartition(16, col("id") % 16)
       .write.parquet(dataDir)
     val paths = listParquet(dataDir)
@@ -102,42 +104,5 @@ class TraceLookupSpec extends SparkSpec {
     // absent needle: no false-negative contract still means 0 rows
     assert(IcebergTableReader.readPoint(
       spark, loc, "trace_id", hex("not-there")).count() === 0)
-  }
-
-  test("native manifest chain: string needle + null keys build safely") {
-    import spark.implicits._
-    val base = Files.createTempDirectory("graft-trace-manifest").toString
-    val table = s"$base/tbl"
-    val mDir = s"$base/manifest"
-    // null trace ids in the data: the old cast-keyed build NPE'd here
-    (0L until 2000L)
-      .map(i => (if (i % 100 == 0) null else hex(i.toString), i))
-      .toDF("trace_id", "id")
-      .repartition(8, col("id") % 8)
-      .write.parquet(table)
-    VersionedManifest.commit(spark, table, mDir,
-      bloomColumn = Some("trace_id"))
-    val needle = hex("1234")
-    val got = VersionedManifest.readPoint(spark, table, mDir, needle)
-      .select($"id").as[Long].collect()
-    assert(got.toSeq === Seq(1234L))
-    // long-keyed manifests keep working through the same probe path
-    val mDir2 = s"$base/manifest2"
-    VersionedManifest.commit(spark, table, mDir2, bloomColumn = Some("id"))
-    val got2 = VersionedManifest.readPoint(spark, table, mDir2, 777L)
-      .select($"trace_id").as[String].collect()
-    assert(got2.toSeq === Seq(hex("777")))
-    assert(VersionedManifest.readPoint(spark, table, mDir, hex("nope"))
-      .count() === 0)
-  }
-
-  test("fileBlooms marks its keying scheme for the manifest probe") {
-    import spark.implicits._
-    val dir = s"${Files.createTempDirectory("graft-fb-scheme")}/t"
-    Seq(("a", 1L), ("b", 2L)).toDF("k", "v").write.parquet(dir)
-    val fb = Recovery.fileBlooms(spark, dir, "k")
-    assert(fb.columns.contains("bloom_keys"))
-    assert(fb.select("bloom_keys").distinct().as[String].collect()
-      .toSeq === Seq(BloomKeys.Scheme))
   }
 }
