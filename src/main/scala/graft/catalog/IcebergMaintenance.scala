@@ -1,7 +1,5 @@
 package graft.catalog
 
-import java.nio.file.{Files => JFiles, Paths}
-
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -61,10 +59,19 @@ object IcebergMaintenance {
   private val PosPathCol = "file_path"
   private val PosCol = "pos"
 
-  private def listParquet(dir: String): Seq[String] =
-    JFiles.list(Paths.get(dir)).toArray.map(_.toString)
-      .filter(p => p.endsWith(".parquet") && !p.contains("_SUCCESS"))
-      .toSeq.sorted
+  /** The parquet files a write left in `dir`, spelled under `dir`. */
+  private def listParquet(spark: SparkSession, dir: String): Seq[String] = {
+    val p = new Path(dir)
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration).listStatus(p).toSeq
+      .map(_.getPath.getName).filter(_.endsWith(".parquet"))
+      .map(n => s"${dir.stripSuffix("/")}/$n").sorted
+  }
+
+  private def removeDir(spark: SparkSession, dir: String): Unit = {
+    val p = new Path(dir)
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
+    ()
+  }
 
   private def tableMeta(spark: SparkSession, tableDir: String) =
     IcebergTableReader.metadata(spark, tableDir)
@@ -121,68 +128,67 @@ object IcebergMaintenance {
   def upsert(spark: SparkSession, tableDir: String, updates: DataFrame,
              keyCols: Seq[String], statsColumn: Option[String] = None,
              numFiles: Int = 1,
-             extraSummary: Map[String, String] = Map.empty): (Long, Long) = {
+             extraSummary: Map[String, String] = Map.empty): (Long, Long) =
+    stageUpsert(spark, tableDir, updates, keyCols, statsColumn, numFiles,
+      extraSummary).fold((-1L, 0L))(s => (s.commit(), s.files.map(_.recordCount).sum))
+
+  /** An [[upsert]] whose data and key files are written: `commit`
+    * publishes them as one snapshot and returns its id. */
+  private[graft] final case class StagedUpsert(files: Seq[DataFile], commit: () => Long)
+
+  /** [[upsert]]'s write half; None (and no files left behind) when
+    * `updates` is empty. */
+  private[graft] def stageUpsert(spark: SparkSession, tableDir: String,
+                                 updates: DataFrame, keyCols: Seq[String],
+                                 statsColumn: Option[String], numFiles: Int,
+                                 extraSummary: Map[String, String])
+      : Option[StagedUpsert] = {
     require(keyCols.nonEmpty, "upsert needs at least one key column")
     val meta = tableMeta(spark, tableDir)
     val ids = keyCols.map(IcebergTableReader.fieldId(meta, _))
     val stamp = System.nanoTime()
-    val dataDir = s"$tableDir/data/upsert-$stamp"
-    updates.repartition(numFiles).write.parquet(dataDir)
-    val dataPaths = listParquet(dataDir)
-    val counts = graft.recovery.Recovery.fileRowCounts(spark, dataPaths)
-    val rows = dataPaths.map(counts(_)).sum
-    if (rows == 0L) {
-      JFiles.walk(Paths.get(dataDir)).sorted(java.util.Comparator.reverseOrder())
-        .forEach(p => JFiles.deleteIfExists(p))
-      return (-1L, 0L)
+    writeUpsertFiles(spark, updates.repartition(numFiles), keyCols,
+      s"$tableDir/data/upsert-$stamp", s"$tableDir/data/eq-delete-$stamp",
+      statsColumn.map(c => (IcebergTableReader.fieldId(meta, c), c)).toSeq
+    ).map { case (data, keys) =>
+      StagedUpsert(data, () => IcebergCommit.commitStandaloneUpsert(
+        spark.sparkContext.hadoopConfiguration, tableDir, meta.schemaJson,
+        None, data, keys.map(IcebergCommit.DeleteFileSpec(_, content = 2, ids)),
+        extraSummary))
     }
-    val stats = statsColumn.map(c =>
-      (IcebergTableReader.fieldId(meta, c),
-        graft.recovery.Recovery.fileColumnStats(spark, dataPaths, c)))
-    val dataFiles = dataPaths.map { p =>
-      val bounds = stats.toSeq.flatMap { case (fid, st) =>
-        st.get(p).map { case (mn, mx) =>
-          (fid, IcebergSingleValue.longBytes(mn),
-            IcebergSingleValue.longBytes(mx))
-        }
-      }
-      DataFile(p, JFiles.size(Paths.get(p)), counts(p), bounds)
-    }
-    // keys are re-read from the WRITTEN files, not the input plan —
-    // a nondeterministic `updates` (sample, shuffle-order top-k) could
-    // otherwise delete keys that differ from the rows that landed
-    val keyDir = s"$tableDir/data/eq-delete-$stamp"
-    spark.read.parquet(dataPaths: _*).select(keyCols.map(col): _*)
+  }
+
+  /** Write `updates` under `dataDir`, then the distinct `keyCols`
+    * tuples of the WRITTEN files under `keyDir` — re-read, not taken
+    * from the input plan: a nondeterministic `updates` (sample,
+    * shuffle-order top-k) could otherwise delete keys that differ from
+    * the rows that landed. Returns (data files, key files); None, with
+    * `dataDir` removed, when no row landed. */
+  private[graft] def writeUpsertFiles(spark: SparkSession, updates: DataFrame,
+                                      keyCols: Seq[String], dataDir: String,
+                                      keyDir: String, stats: Seq[(Int, String)] = Nil)
+      : Option[(Seq[DataFile], Seq[DataFile])] = {
+    updates.write.parquet(dataDir)
+    val data = DataFiles.describe(spark, listParquet(spark, dataDir), stats)
+    if (data.map(_.recordCount).sum == 0L) { removeDir(spark, dataDir); return None }
+    spark.read.parquet(data.map(_.path): _*).select(keyCols.map(col): _*)
       .distinct().coalesce(1).write.parquet(keyDir)
-    val keyPaths = listParquet(keyDir)
-    val keyCounts = graft.recovery.Recovery.fileRowCounts(spark, keyPaths)
-    val snap = IcebergCommit.commitStandaloneUpsert(
-      spark.sparkContext.hadoopConfiguration, tableDir, meta.schemaJson,
-      None, dataFiles,
-      keyPaths.map(p => IcebergCommit.DeleteFileSpec(
-        DataFile(p, JFiles.size(Paths.get(p)), keyCounts(p), Nil),
-        content = 2, ids)), extraSummary)
-    (snap, rows)
+    Some((data, DataFiles.describe(spark, listParquet(spark, keyDir))))
   }
 
   private def commitDeleteDir(spark: SparkSession, tableDir: String,
                               outDir: String, content: Int,
                               equalityIds: Seq[Int]): (Long, Long) = {
     val meta = tableMeta(spark, tableDir)
-    val paths = listParquet(outDir)
-    val counts = graft.recovery.Recovery.fileRowCounts(spark, paths)
-    val rows = paths.map(counts(_)).sum
+    val files = DataFiles.describe(spark, listParquet(spark, outDir))
+    val rows = files.map(_.recordCount).sum
     if (rows == 0L) { // nothing matched: no empty snapshot, no orphan dir
-      JFiles.walk(Paths.get(outDir)).sorted(java.util.Comparator.reverseOrder())
-        .forEach(p => JFiles.deleteIfExists(p))
+      removeDir(spark, outDir)
       return (-1L, 0L)
     }
     val snap = IcebergCommit.commitStandaloneDeletes(
       spark.sparkContext.hadoopConfiguration, tableDir, meta.schemaJson,
-      None,
-      paths.map(p => IcebergCommit.DeleteFileSpec(
-        DataFile(p, JFiles.size(Paths.get(p)), counts(p), Nil),
-        content, equalityIds)))
+      None, files.map(IcebergCommit.DeleteFileSpec(_, content, equalityIds)))
     (snap, rows)
   }
 
@@ -202,24 +208,12 @@ object IcebergMaintenance {
     val live = IcebergTableReader.read(spark, tableDir)
     val outDir = s"$tableDir/data/compact-${System.nanoTime()}"
     live.repartition(numFiles).write.parquet(outDir)
-    val paths = listParquet(outDir)
-    val counts = graft.recovery.Recovery.fileRowCounts(spark, paths)
-    val stats = statsColumn.map(c =>
-      (IcebergTableReader.fieldId(meta, c),
-        graft.recovery.Recovery.fileColumnStats(spark, paths, c)))
-    val files = paths.map { p =>
-      val bounds = stats.toSeq.flatMap { case (fid, st) =>
-        st.get(p).map { case (mn, mx) =>
-          (fid, IcebergSingleValue.longBytes(mn),
-            IcebergSingleValue.longBytes(mx))
-        }
-      }
-      DataFile(p, JFiles.size(Paths.get(p)), counts(p), bounds)
-    }
+    val files = DataFiles.describe(spark, listParquet(spark, outDir),
+      statsColumn.map(c => (IcebergTableReader.fieldId(meta, c), c)).toSeq)
     val snap = IcebergCommit.commitStandaloneReplace(
       spark.sparkContext.hadoopConfiguration, tableDir, meta.schemaJson,
       None, files)
-    (snap, paths.map(counts(_)).sum)
+    (snap, files.map(_.recordCount).sum)
   }
 
   /** Files a snapshot's manifest list reaches: the list itself, every
@@ -448,8 +442,6 @@ object IcebergMaintenance {
           } else rows.repartition(nOut)
         val outDir = s"$tableDir/data/rewrite-${System.nanoTime()}-$gi"
         packed.write.parquet(outDir)
-        val paths = listParquet(outDir)
-        val counts = graft.recovery.Recovery.fileRowCounts(spark, paths)
         // harvest bounds for EVERY field id the input group carried,
         // plus the explicitly requested statsColumn — compaction must
         // not erase the pruning metadata the superseded files had, or
@@ -464,21 +456,9 @@ object IcebergMaintenance {
           .distinct
         val wantIds = (groupIds ++ statsColumn.toSeq.map(c =>
           IcebergTableReader.fieldId(meta, c))).distinct.sorted
-        val statsById = wantIds.flatMap { fid =>
-          scala.util.Try(IcebergTableReader.fieldName(meta, fid)).toOption
-            .map(cname => fid ->
-              graft.recovery.Recovery.fileColumnStats(spark, paths, cname))
-        }
-        paths.map { p =>
-          val bounds = statsById.flatMap { case (fid, st) =>
-            st.get(p).map { case (mn, mx) =>
-              (fid, IcebergSingleValue.longBytes(mn),
-                IcebergSingleValue.longBytes(mx))
-            }
-          }
-          DataFile(p, JFiles.size(Paths.get(p)), counts(p), bounds,
-            partition = tuple)
-        }
+        val stats = wantIds.flatMap(fid =>
+          scala.util.Try(IcebergTableReader.fieldName(meta, fid)).toOption.map(fid -> _))
+        DataFiles.describe(spark, listParquet(spark, outDir), stats, _ => tuple)
     }
 
     // kept files (well-sized + off-spec) as EXISTING entries, grouped
@@ -921,9 +901,7 @@ object IcebergMaintenance {
     val dataDir = s"$destLoc/data/bucketed"
     bucketClustered(df, column, nBuckets)
       .write.partitionBy("__bucket").parquet(dataDir)
-    val paths = graft.recovery.Recovery.listDataFiles(spark, dataDir)
-      .collect().map(_.getString(0)).toSeq.sorted
-    val counts = graft.recovery.Recovery.fileRowCounts(spark, paths)
+    val paths = graft.recovery.Recovery.dataFiles(spark, dataDir).map(_._1).sorted
     // the partition column never lands in the data files, so the file
     // schema is the source schema (also correct when `paths` is empty)
     val (schemaJson, topIds) = RestCatalogClient.icebergSchemaJson(df.schema)
@@ -931,26 +909,13 @@ object IcebergMaintenance {
       s"""{"fields":[{"name":"${column}_bucket",
          |"transform":"bucket[$nBuckets]",
          |"source-id":${topIds(column)},"field-id":1000}]}""".stripMargin)
-    val stats = statsColumn.map(c =>
-      (topIds(c), graft.recovery.Recovery.fileColumnStats(spark, paths, c)))
-    val conf = spark.sparkContext.hadoopConfiguration
-    IcebergCommit.commitStandalone(conf, destLoc,
+    IcebergCommit.commitStandalone(spark.sparkContext.hadoopConfiguration, destLoc,
       org.json4s.jackson.JsonMethods.compact(
         org.json4s.jackson.JsonMethods.render(schemaJson)),
       Some(spec),
-      paths.map { p =>
-        // NULL-key rows land in the writer's default partition dir and
-        // commit with a null partition tuple (spec: null bucket value)
-        val b = "__bucket=(\\d+)".r.findFirstMatchIn(p)
-          .map(_.group(1).toLong)
-        val bounds = stats.toSeq.flatMap { case (fid, byPath) =>
-          byPath.get(p).toSeq.map { case (mn, mx) =>
-            (fid, IcebergSingleValue.longBytes(mn),
-              IcebergSingleValue.longBytes(mx)) }
-        }
-        DataFile(p, new Path(p).getFileSystem(conf)
-          .getFileStatus(new Path(p)).getLen,
-          counts.getOrElse(p, 0L), bounds, Seq(b))
-      })
+      // NULL-key rows land in the writer's default partition dir and
+      // commit with a null partition tuple (spec: null bucket value)
+      DataFiles.describe(spark, paths, statsColumn.map(c => (topIds(c), c)).toSeq,
+        p => Seq("__bucket=(\\d+)".r.findFirstMatchIn(p).map(_.group(1).toLong))))
   }
 }

@@ -485,10 +485,11 @@ class RestCatalogClient(settings: RestCatalogClient.Settings,
     * `assert-ref-snapshot-id` requirement. A concurrent commit turns
     * into a 409 → transient → the retry loop replays against the new
     * head — Iceberg's standard conflict resolution for appends (no
-    * rebase needed: appends commute). */
+    * rebase needed: appends commute). Returns the committed snapshot's
+    * id; None when `files` is empty (nothing is committed). */
   def appendDataFiles(namespace: String, table: String,
-                      files: Seq[DataFile]): Unit = {
-    if (files.isEmpty) return
+                      files: Seq[DataFile]): Option[Long] = {
+    if (files.isEmpty) return None
     Delivery.retry(settings.retry) {
       val info = loadTableOnce(namespace, table).getOrElse(
         throw new PermanentException(s"validation failed: table $namespace.$table does not exist", null))
@@ -556,7 +557,7 @@ class RestCatalogClient(settings: RestCatalogClient.Settings,
               "otel.record_count" -> files.map(_.recordCount).sum.toString,
               "otel.file_size" -> files.map(_.sizeBytes).sum.toString,
               "otel.file_count" -> files.size.toString))))
-      ()
+      Some(snapId)
     }
   }
 

@@ -164,6 +164,14 @@ object GraftFunctions {
       children(1).eval(null).asInstanceOf[Number].intValue)
       .toAggregateExpression())
 
+  /** Every native function graft registers, for [[register]] and for
+    * [[GraftExtensions]] alike. */
+  val descriptors: Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] =
+    Seq(cosineSimDescriptor, bottomKDescriptor, bottomKDistinctDescriptor,
+      topKDescriptor, frequentItemsDescriptor, hilbertDescriptor,
+      bagBoundDescriptor, sortedIntersectDescriptor, ddsketchDescriptor,
+      icebergBucketDescriptor)
+
   def register(spark: SparkSession): Unit = {
     // JVM-GLOBAL: in-memory ImageIO streams for the media kernels (the
     // default cache writes+unlinks a temp FILE per encode/decode call).
@@ -172,13 +180,8 @@ object GraftFunctions {
     // when it first loads on an EXECUTOR, which the session-init call
     // cannot reach on a real cluster.
     javax.imageio.ImageIO.setUseCache(false)
-    Seq(cosineSimDescriptor, bottomKDescriptor, bottomKDistinctDescriptor,
-        topKDescriptor,
-        frequentItemsDescriptor, hilbertDescriptor, bagBoundDescriptor,
-        sortedIntersectDescriptor, ddsketchDescriptor,
-        icebergBucketDescriptor).foreach {
-      case (id, info, builder) =>
-        spark.sessionState.functionRegistry.registerFunction(id, info, builder)
+    descriptors.foreach { case (id, info, builder) =>
+      spark.sessionState.functionRegistry.registerFunction(id, info, builder)
     }
     // optimizer rewrites (conf-gated, default off) — idempotent add
     Seq(graft.plans.TopKWindowRewrite, graft.plans.ApproxDistinctRewrite,

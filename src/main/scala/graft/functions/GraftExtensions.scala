@@ -8,15 +8,7 @@ import org.apache.spark.sql.SparkSessionExtensions
   * Driver-owned sessions use [[GraftFunctions.register]] instead. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction(GraftFunctions.cosineSimDescriptor)
-    ext.injectFunction(GraftFunctions.bottomKDescriptor)
-    ext.injectFunction(GraftFunctions.topKDescriptor)
-    ext.injectFunction(GraftFunctions.frequentItemsDescriptor)
-    ext.injectFunction(GraftFunctions.hilbertDescriptor)
-    ext.injectFunction(GraftFunctions.bagBoundDescriptor)
-    ext.injectFunction(GraftFunctions.sortedIntersectDescriptor)
-    ext.injectFunction(GraftFunctions.ddsketchDescriptor)
-    ext.injectFunction(GraftFunctions.icebergBucketDescriptor)
+    GraftFunctions.descriptors.foreach(ext.injectFunction)
     ext.injectOptimizerRule(_ => graft.plans.TopKWindowRewrite)
     ext.injectOptimizerRule(_ => graft.plans.ApproxDistinctRewrite)
     ext.injectOptimizerRule(_ => graft.plans.RangeJoinRewrite)

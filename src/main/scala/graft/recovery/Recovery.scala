@@ -54,7 +54,7 @@ object Recovery {
     }
 
   /** The table's data files, listed on the driver. */
-  private def dataFiles(spark: SparkSession, tablePath: String): Seq[(String, Long)] = {
+  private[graft] def dataFiles(spark: SparkSession, tablePath: String): Seq[(String, Long)] = {
     val path = new Path(tablePath)
     val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val files = ArrayBuffer.empty[(String, Long)]
@@ -283,14 +283,14 @@ object Recovery {
     }
   }
 
-  /** Append `fresh` as one new part and return the manifest. A manifest
-    * that already has a part gains nothing when `fresh` is empty; a
-    * missing one is created, so it reads back as empty. When the append
-    * would take the manifest past [[ManifestFoldParts]] parts, one
-    * folded part with every entry is written instead and replaces the
-    * others. */
+  /** Append `fresh` as one new part and drop cached listings of the
+    * manifest. A manifest that already has a part gains nothing when
+    * `fresh` is empty; a missing one is created, so it reads back as
+    * empty. When the append would take the manifest past
+    * [[ManifestFoldParts]] parts, one folded part with every entry is
+    * written instead and replaces the others. */
   private def append(spark: SparkSession, m: Manifest,
-                     fresh: Seq[(String, Long)]): DataFrame = {
+                     fresh: Seq[(String, Long)]): Unit = {
     if (fresh.nonEmpty || m.parts.isEmpty) {
       if (m.parts.size < ManifestFoldParts) m.writePart(fresh)
       else {
@@ -299,7 +299,7 @@ object Recovery {
         m.dropParts(m.parts)
       }
     }
-    publishedManifest(spark, m.dir.toString)
+    spark.catalog.refreshByPath(m.dir.toString)
   }
 
   /** Drop cached listings of the manifest, then read it back. */
@@ -332,11 +332,11 @@ object Recovery {
   def reconcile(spark: SparkSession, tablePath: String,
                 manifestPath: String,
                 distributedListing: Boolean = false): DataFrame = {
-    val m = new Manifest(spark, manifestPath)
     if (!distributedListing) {
-      val registered = m.registered
-      append(spark, m, dataFiles(spark, tablePath).filterNot(f => registered(f._1)))
+      registerOrphans(spark, tablePath, manifestPath)
+      readManifest(spark, manifestPath)
     } else {
+      val m = new Manifest(spark, manifestPath)
       val staging = new Path(m.dir, s".append-${UUID.randomUUID()}")
       scanOrphans(spark, tablePath, readManifest(spark, manifestPath),
         distributedListing = true).repartition(1).write.parquet(staging.toString)
@@ -353,6 +353,17 @@ object Recovery {
     }
   }
 
+  /** [[reconcile]]'s driver-side registration without reading the
+    * manifest back: returns the (path, size) entries it appended. */
+  private[graft] def registerOrphans(spark: SparkSession, tablePath: String,
+                                     manifestPath: String): Seq[(String, Long)] = {
+    val m = new Manifest(spark, manifestPath)
+    val registered = m.registered
+    val fresh = dataFiles(spark, tablePath).filterNot(f => registered(f._1))
+    append(spark, m, fresh)
+    fresh
+  }
+
   /** Register an EXPLICIT file set into the manifest — reconcile with a
     * caller-filtered candidate list (e.g. [[RecoveryCli]]'s
     * `--after`/`--before` partition-time window). Same idempotent
@@ -364,6 +375,7 @@ object Recovery {
     val fresh = files.select(col("file_path"), col("file_size")).collect()
       .map(r => (r.getString(0), r.getLong(1))).filter(e => seen.add(e._1))
     append(spark, m, fresh.toSeq)
+    readManifest(spark, manifestPath)
   }
 
   /** One file's footer → (min, max, rows) for `column`. Runs on
@@ -424,10 +436,6 @@ object Recovery {
       .toDF("file_path", "min_val", "max_val", "n_rows")
   }
 
-  /** Row counts for an EXPLICIT file list, from parquet footers, as a
-    * distributed job (r6 — catalog registration carries real per-file
-    * record counts, matching the reference exporter's snapshot summary,
-    * instead of a hardcoded 0). Metadata-only like [[fileStats]]. */
   /** Per-file min/max of one INT64/INT32-physical column, harvested
     * from parquet FOOTERS only (no data pages) — the stats a catalog
     * commit embeds into manifest-entry `lower_bounds`/`upper_bounds`
@@ -437,64 +445,16 @@ object Recovery {
     * footer open per file across the cluster, collected driver-side
     * (bytes-per-file: two longs). */
   def fileColumnStats(spark: SparkSession, paths: Seq[String],
-                      column: String): Map[String, (Long, Long)] = {
-    if (paths.isEmpty) return Map.empty
-    val confB = spark.sparkContext.broadcast(
-      new org.apache.spark.util.SerializableConfiguration(
-        spark.sparkContext.hadoopConfiguration))
-    val slices = math.max(1, math.min(paths.length,
-      spark.sparkContext.defaultParallelism))
-    spark.sparkContext.parallelize(paths.toIndexedSeq, slices)
-      .mapPartitions { it =>
-        val conf = confB.value.value
-        it.flatMap { p =>
-          val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
-            org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-              new Path(p), conf))
-          try {
-            import scala.jdk.CollectionConverters._
-            val longs = reader.getFooter.getBlocks.asScala
-              .flatMap(_.getColumns.asScala)
-              .filter(_.getPath.toDotString == column)
-              .map(_.getStatistics)
-              .filter(s => s != null && s.hasNonNullValue)
-              .flatMap { s =>
-                (s.genericGetMin, s.genericGetMax) match {
-                  case (mn: java.lang.Long, mx: java.lang.Long) =>
-                    Some((mn.longValue, mx.longValue))
-                  case (mn: java.lang.Integer, mx: java.lang.Integer) =>
-                    Some((mn.longValue, mx.longValue))
-                  case _ => None
-                }
-              }
-            if (longs.isEmpty) None
-            else Some(p -> (longs.map(_._1).min, longs.map(_._2).max))
-          } finally reader.close()
-        }
-      }.collect().toMap
-  }
+                      column: String): Map[String, (Long, Long)] =
+    graft.catalog.DataFiles.footers(spark, paths, Seq(column))
+      .flatMap(f => f.bounds.get(column).map(f.path -> _)).toMap
 
-  def fileRowCounts(spark: SparkSession, paths: Seq[String]): Map[String, Long] = {
-    if (paths.isEmpty) return Map.empty
-    val confB = spark.sparkContext.broadcast(
-      new org.apache.spark.util.SerializableConfiguration(
-        spark.sparkContext.hadoopConfiguration))
-    val slices = math.max(1, math.min(paths.length,
-      spark.sparkContext.defaultParallelism))
-    spark.sparkContext.parallelize(paths.toIndexedSeq, slices)
-      .mapPartitions { it =>
-        val conf = confB.value.value
-        it.map { p =>
-          val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
-            org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-              new Path(p), conf))
-          try {
-            import scala.jdk.CollectionConverters._
-            p -> reader.getFooter.getBlocks.asScala.map(_.getRowCount).sum
-          } finally reader.close()
-        }
-      }.collect().toMap
-  }
+  /** Row counts for an EXPLICIT file list, from parquet footers, as a
+    * distributed job (r6 — catalog registration carries real per-file
+    * record counts, matching the reference exporter's snapshot summary,
+    * instead of a hardcoded 0). Metadata-only like [[fileStats]]. */
+  def fileRowCounts(spark: SparkSession, paths: Seq[String]): Map[String, Long] =
+    graft.catalog.DataFiles.footers(spark, paths, Nil).map(f => f.path -> f.rows).toMap
 
   /** Time-sliced read with ZONE-MAP SKIPPING: prune files whose footer
     * [min,max] can't overlap [startUs, endUs) before Spark ever lists

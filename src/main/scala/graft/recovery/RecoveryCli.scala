@@ -262,10 +262,8 @@ object RecoveryCli {
                 case Some(c) =>
                   // real per-file record counts from the footers — the
                   // snapshot summary the reference exporter publishes
-                  val counts = Recovery.fileRowCounts(spark, candidates.map(_._1))
-                  c.appendDataFiles(a.namespace, t, candidates.map {
-                    case (p, sz) => graft.catalog.RestCatalogClient.DataFile(
-                      p, sz, counts.getOrElse(p, 0L)) })
+                  c.appendDataFiles(a.namespace, t,
+                    graft.catalog.DataFiles.describe(spark, candidates.map(_._1)))
                   registered += candidates.size
                 case None =>
                   import spark.implicits._

@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 import graft.sink.PartitionedParquetSink
 import graft.sink.PartitionedParquetSink.SinkConfig
@@ -21,12 +22,12 @@ import graft.sink.PartitionedParquetSink.SinkConfig
   *    retry up to `maxAttempts` with doubling, capped sleeps; permanent
   *    errors fail FAST (first occurrence, wrapped as
   *    [[PermanentException]] so callers can `errors.As`-style match).
-  *  - [[ingestWithManifestRetrying]] applies both to the
-  *    write-then-register micro-batch loop: the batch write + manifest
-  *    registration retry as a unit, and because registration dedups on
-  *    path ([[graft.recovery.Recovery.reconcile]]) a replay after a
-  *    mid-flight crash re-registers harmlessly — at-least-once delivery
-  *    with idempotent commit, no duplicate manifest entries.
+  *  - [[ingestWithManifestRetrying]] and [[ingestWithCatalogRetrying]]
+  *    run the write-then-register micro-batch loop ([[IngestLoop]])
+  *    under both: a batch's write + registration retry as a unit, and
+  *    because registration dedups on path a replay after a mid-flight
+  *    crash re-registers harmlessly — at-least-once delivery with
+  *    idempotent commit, no path registered twice.
   */
 object Delivery {
 
@@ -178,10 +179,7 @@ object Delivery {
     * fails the query fast so the checkpoint pins the batch for a fixed
     * deploy, not a hot retry loop. `beforeRegister` is a test/metrics
     * seam between the two stages (where the reference's process could
-    * die between write and catalog registration). Like
-    * `ingestWithManifest`, the query holds the listing threshold at
-    * [[StreamingIngest.SpoolStatThreshold]] while it runs, so `getBatch`
-    * stats the batch's spool files on the driver. */
+    * die between write and catalog registration). */
   def ingestWithManifestRetrying(events: DataFrame, cfg: SinkConfig,
                                  checkpoint: String, manifestPath: String,
                                  policy: RetryPolicy = RetryPolicy(),
@@ -189,52 +187,10 @@ object Delivery {
                                  beforeRegister: DataFrame => Unit = _ => (),
                                  telemetry: Option[ExportTelemetry.Collector] = None)
       : StreamingQuery =
-    PartitionedParquetSink.startWithConfs(events.sparkSession, Seq(
-        "spark.sql.sources.parallelPartitionDiscovery.threshold" ->
-          StreamingIngest.SpoolStatThreshold.toString)) {
-      events.writeStream
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          // stabilize the batch so retries re-write identical rows instead
-          // of re-reading a source that may have advanced
-          val pinned = batch.localCheckpoint()
-          val spark = pinned.sparkSession
-          val t0 = System.nanoTime()
-          var retries = 0L
-          val errs = scala.collection.mutable.ArrayBuffer.empty[String]
-          val hook: (Int, Throwable) => Unit = { (a, e) =>
-            retries += 1; errs += s"attempt $a: ${e.getMessage}"; onRetry(a, e)
-          }
-          // files/bytes written = the manifest's before/after delta (one
-          // tiny metadata read each side; retried attempts' orphan files
-          // count too — they ARE bytes the export path produced)
-          val before = telemetry.map(_ =>
-            ExportTelemetry.manifestTotals(spark, manifestPath))
-          def emit(outcome: String, err: Option[Throwable]): Unit =
-            telemetry.foreach { t =>
-              val (fb, bb) = before.getOrElse((0L, 0L))
-              val (fa, ba) =
-                ExportTelemetry.manifestTotals(spark, manifestPath)
-              t.record(ExportTelemetry.BatchMetric(
-                batchId, cfg.table, outcome, pinned.count(),
-                fa - fb, ba - bb, retries,
-                (System.nanoTime() - t0) / 1000000L,
-                (errs ++ err.map(e => s"final: ${e.getMessage}")).toSeq))
-            }
-          try {
-            retry(policy, hook) {
-              PartitionedParquetSink.writeBatch(pinned, cfg)
-              beforeRegister(pinned)
-              graft.recovery.Recovery.reconcile(
-                spark, PartitionedParquetSink.tablePath(cfg), manifestPath)
-            }
-            emit("success", None)
-          } catch { case e: Throwable => emit("failed", Some(e)); throw e }
-          ()
-        }
-        .option("checkpointLocation", checkpoint)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-    }
+    IngestLoop.start(events, checkpoint,
+      StreamingIngest.manifestCommit(cfg, manifestPath), policy = policy,
+      onRetry = onRetry, beforeRegister = beforeRegister,
+      telemetry = telemetry, table = cfg.table)
 
   /** The reference exporter's full loop: micro-batch → partitioned
     * parquet → REST CATALOG append commit (writer.go write path +
@@ -245,8 +201,7 @@ object Delivery {
     * lost) re-registers nothing twice: at-least-once delivery,
     * exactly-once catalog registration. The table is created on first
     * batch with the sink's partition-value columns as an identity spec
-    * (buildIcebergPartitionSpec's shape). File listings here are
-    * catalog-metadata scale (the distributed path is Recovery). */
+    * (buildIcebergPartitionSpec's shape). */
   def ingestWithCatalogRetrying(events: DataFrame, cfg: SinkConfig,
                                 checkpoint: String,
                                 client: graft.catalog.RestCatalogClient,
@@ -254,52 +209,49 @@ object Delivery {
                                 policy: RetryPolicy = RetryPolicy(),
                                 onRetry: (Int, Throwable) => Unit = (_, _) => ())
       : StreamingQuery =
-    events.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val pinned = batch.localCheckpoint()
-        val spark = pinned.sparkSession
-        retry(policy, onRetry) {
-          PartitionedParquetSink.writeBatch(pinned, cfg)
-          client.ensureNamespace(namespace)
-          val partCols = PartitionedParquetSink.partitionColumns(cfg.granularity)
-          val tableSchema = org.apache.spark.sql.types.StructType(
-            pinned.schema.fields ++ partCols.map(c =>
-              org.apache.spark.sql.types.StructField(
-                c, org.apache.spark.sql.types.StringType, nullable = false)))
-          client.ensureTable(namespace, table, tableSchema, partCols)
-          val live = graft.recovery.Recovery.listDataFiles(
-            spark, PartitionedParquetSink.tablePath(cfg))
-            .collect().map(r => (r.getString(0), r.getLong(1)))
-          val registered = client.listDataFiles(namespace, table).toSet
-          val fresh = live.filterNot { case (p, _) => registered(p) }
-          // real record counts from the fresh files' footers, so the
-          // snapshot summary matches the reference exporter's
-          // otel.record_count (r6 — was hardcoded 0)
-          val counts = graft.recovery.Recovery.fileRowCounts(
-            spark, fresh.map(_._1).toSeq)
-          // ts-column min/max from the same footers → manifest-entry
-          // bounds, so cold readers prune time slices from metadata
-          // alone (IcebergTableReader.readSlice)
-          val stats = graft.recovery.Recovery.fileColumnStats(
-            spark, fresh.map(_._1).toSeq, cfg.tsColumn)
-          val tsFieldId = client.loadTable(namespace, table)
-            .flatMap(ti => graft.catalog.RestCatalogClient.fieldIdOf(
-              ti.schemaJson, cfg.tsColumn))
-          client.appendDataFiles(namespace, table,
-            fresh.map { case (p, sz) =>
-              val bounds = (tsFieldId, stats.get(p)) match {
-                case (Some(id), Some((mn, mx))) => Seq((id,
-                  graft.catalog.IcebergSingleValue.longBytes(mn),
-                  graft.catalog.IcebergSingleValue.longBytes(mx)))
-                case _ => Nil
-              }
-              graft.catalog.RestCatalogClient.DataFile(
-                p, sz, counts.getOrElse(p, 0L), bounds)
-            }.toSeq)
-        }
-        ()
+    IngestLoop.start(events, checkpoint,
+      catalogCommit(cfg, client, namespace, table), policy = policy,
+      onRetry = onRetry)
+
+  /** Write a batch into the partitioned layout, then append the table's
+    * files the catalog does not hold yet, with record counts and
+    * ts-column bounds from their footers (so the snapshot summary
+    * carries the reference's `otel.record_count` and cold readers
+    * prune time slices from metadata alone). The catalog's file list
+    * costs a read of every manifest of the snapshot, so the registered
+    * paths are kept on the driver and re-read from the catalog only
+    * when they may be stale: on the first registration, after one
+    * failed, and when the table's current snapshot is not the one the
+    * last registration committed. */
+  private[streaming] def catalogCommit(cfg: SinkConfig,
+                                       client: graft.catalog.RestCatalogClient,
+                                       namespace: String, table: String)
+      : IngestLoop.Commit = {
+    val partCols = PartitionedParquetSink.partitionColumns(cfg.granularity)
+    val tablePath = PartitionedParquetSink.tablePath(cfg)
+    // (registered paths, the snapshot that registered them last)
+    var known: Option[(Set[String], Option[Long])] = None
+    (batch, _) => {
+      PartitionedParquetSink.writeBatch(batch, cfg)
+      () => {
+        val spark = batch.sparkSession
+        client.ensureNamespace(namespace)
+        client.ensureTable(namespace, table, StructType(batch.schema.fields ++
+          partCols.map(StructField(_, StringType, nullable = false))), partCols)
+        val info = client.loadTable(namespace, table).getOrElse(
+          throw new IllegalStateException(s"table $namespace.$table missing after ensureTable"))
+        val registered = known.collect {
+          case (paths, snap) if snap == info.currentSnapshotId => paths
+        }.getOrElse(client.listDataFiles(namespace, table).toSet)
+        known = None
+        val fresh = graft.recovery.Recovery.dataFiles(spark, tablePath)
+          .filterNot { case (p, _) => registered(p) }
+        val tsId = graft.catalog.RestCatalogClient.fieldIdOf(info.schemaJson, cfg.tsColumn)
+        val snap = client.appendDataFiles(namespace, table, graft.catalog.DataFiles
+          .describe(spark, fresh.map(_._1), tsId.map(_ -> cfg.tsColumn).toSeq))
+        known = Some((registered ++ fresh.map(_._1), snap.orElse(info.currentSnapshotId)))
+        fresh
       }
-      .option("checkpointLocation", checkpoint)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
+    }
+  }
 }

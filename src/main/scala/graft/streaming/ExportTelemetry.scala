@@ -9,15 +9,16 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * telemetry of its own export path). [[graft.config.ExporterConfig]]
   * validates the knob; this is what it controls: per-micro-batch
   * rows / files / bytes / retries / duration / outcome, recorded by
-  * the ingest loops ([[Delivery.ingestWithManifestRetrying]],
+  * the ingest loop ([[IngestLoop]], behind
+  * [[Delivery.ingestWithManifestRetrying]] and
   * [[StreamingIngest.ingestWithManifest]]) and queryable as a
   * DataFrame — what an operator running the exporter at scale
   * dashboards and alerts on.
   *
   * Scale shape: one in-memory row per micro-batch (bounded by batch
-  * cadence, never by data volume); the per-batch counters come from
-  * aggregates the loop already computes or cheap manifest diffs —
-  * never a second scan of the batch data. */
+  * cadence, never by data volume); files and bytes are the entries the
+  * batch's register step appended, rows one count of the pinned batch
+  * — never a read of the manifest or a second scan of the source. */
 object ExportTelemetry {
 
   final case class BatchMetric(
@@ -55,20 +56,5 @@ object ExportTelemetry {
         .toDF("batch_id", "table", "outcome", "rows", "files", "bytes",
           "retries", "duration_ms", "errors")
     }
-  }
-
-  /** (files, bytes) currently registered in the manifest — the
-    * before/after diff of this is a batch's files/bytes written,
-    * costing one tiny manifest read, never a data scan. */
-  private[streaming] def manifestTotals(spark: SparkSession,
-                                        manifestPath: String): (Long, Long) = {
-    val r = graft.recovery.Recovery.readManifest(spark, manifestPath)
-      .agg(org.apache.spark.sql.functions.count(
-        org.apache.spark.sql.functions.lit(1)),
-        org.apache.spark.sql.functions.coalesce(
-          org.apache.spark.sql.functions.sum("file_size"),
-          org.apache.spark.sql.functions.lit(0L)))
-      .collect()(0)
-    (r.getLong(0), r.getLong(1))
   }
 }

@@ -1,10 +1,10 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.json4s.jackson.JsonMethods.{compact => jcompact, render}
 
-import graft.catalog.{IcebergMaintenance, IcebergTableMetadata,
+import graft.catalog.{IcebergCommit, IcebergMaintenance, IcebergTableMetadata,
   RestCatalogClient}
 
 /** EXACTLY-ONCE streaming CDC into the Iceberg merge-on-read chain —
@@ -66,32 +66,53 @@ object IcebergCdcSink {
         }
     }
 
+  private def epochSummary(streamId: Option[String], batchId: Long): Map[String, String] =
+    Map("graft.batch_id" -> batchId.toString, "graft.epoch" -> epochKey(streamId, batchId))
+
+  /** A replayed batch still runs, writing nowhere: a stateful query
+    * commits its state stores only when the batch executes, and fails
+    * the batch if they were not committed. */
+  private def drain(batch: DataFrame): Unit =
+    batch.write.format("noop").mode("overwrite").save()
+
   /** Apply one CDC micro-batch: bootstrap the chain on first contact,
     * skip if `batchId` is already on it, else upsert. Returns true if
-    * the batch was applied, false if it was a detected replay.
+    * the batch was applied, false if it was a detected replay or empty.
     * `streamId` scopes the epoch to a checkpoint lineage (see
     * [[streamIdOf]]); None keeps the legacy bare-batch-id key. */
   def applyBatch(spark: SparkSession, tableDir: String, batch: DataFrame,
                  batchId: Long, keyCols: Seq[String],
                  statsColumn: Option[String] = None,
-                 streamId: Option[String] = None): Boolean = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val meta = IcebergTableMetadata.load(conf, tableDir)
-    val replay = meta.exists(m =>
-      isReplay(m.snapshots.map(_.summary), streamId, batchId))
-    if (replay) return false
-    if (meta.isEmpty) {
-      val (schemaJson, _) = RestCatalogClient.icebergSchemaJson(batch.schema)
-      IcebergTableMetadata.commit(conf, tableDir,
-        jcompact(render(schemaJson)), None, None)
+                 streamId: Option[String] = None): Boolean =
+    commit(tableDir, keyCols, statsColumn, streamId)(batch, batchId)().nonEmpty
+
+  /** [[applyBatch]] as a loop commit: the write stages the upsert's
+    * data and key files, the register step commits them as one
+    * snapshot. A batch whose epoch is already on the chain writes and
+    * commits nothing. */
+  private[streaming] def commit(tableDir: String, keyCols: Seq[String],
+                                statsColumn: Option[String],
+                                streamId: Option[String]): IngestLoop.Commit =
+    (batch, batchId) => {
+      val spark = batch.sparkSession
+      val conf = spark.sparkContext.hadoopConfiguration
+      val meta = IcebergTableMetadata.load(conf, tableDir)
+      val staged =
+        if (meta.exists(m => isReplay(m.snapshots.map(_.summary), streamId, batchId))) {
+          drain(batch); None
+        } else {
+          if (meta.isEmpty) {
+            val (schemaJson, _) = RestCatalogClient.icebergSchemaJson(batch.schema)
+            IcebergTableMetadata.commit(conf, tableDir,
+              jcompact(render(schemaJson)), None, None)
+          }
+          IcebergMaintenance.stageUpsert(spark, tableDir, batch, keyCols,
+            statsColumn, numFiles = 1, epochSummary(streamId, batchId))
+        }
+      staged.fold[IngestLoop.Register](() => Nil) { s => () =>
+        s.commit(); s.files.map(f => (f.path, f.sizeBytes))
+      }
     }
-    // pin the batch: the upsert reads `updates` twice (data + keys)
-    val delta = batch.localCheckpoint()
-    IcebergMaintenance.upsert(spark, tableDir, delta, keyCols, statsColumn,
-      extraSummary = Map("graft.batch_id" -> batchId.toString,
-        "graft.epoch" -> epochKey(streamId, batchId)))
-    true
-  }
 
   /** Continuous keyed-change apply: `changes` rows upsert into the
     * Iceberg table at `tableDir` by `keyCols`, one snapshot per
@@ -100,15 +121,8 @@ object IcebergCdcSink {
   def cdcApply(changes: DataFrame, tableDir: String, checkpoint: String,
                keyCols: Seq[String],
                statsColumn: Option[String] = None): StreamingQuery =
-    changes.writeStream
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        applyBatch(batch.sparkSession, tableDir, batch, id, keyCols,
-          statsColumn, streamId = Some(streamIdOf(checkpoint)))
-        ()
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
+    IngestLoop.start(changes, checkpoint,
+      commit(tableDir, keyCols, statsColumn, Some(streamIdOf(checkpoint))))
 
   /** [[applyBatch]]'s CATALOGED twin: one CDC micro-batch lands as one
     * merge-on-read `overwrite` snapshot committed THROUGH THE REST
@@ -125,52 +139,45 @@ object IcebergCdcSink {
   def applyBatchCatalog(spark: SparkSession, client: RestCatalogClient,
                         namespace: String, table: String, batch: DataFrame,
                         batchId: Long, keyCols: Seq[String],
-                        streamId: Option[String] = None): Boolean = {
-    require(keyCols.nonEmpty, "catalog CDC needs at least one key column")
-    client.ensureNamespace(namespace)
-    client.ensureTable(namespace, table, batch.schema)
-    val info = client.loadTable(namespace, table).getOrElse(
-      throw new IllegalStateException(
-        s"table $namespace.$table missing after ensureTable"))
-    if (isReplay(info.snapshotSummaries.values, streamId, batchId))
-      return false
-    // pin the batch (the upsert reads it twice: data + keys), then
-    // land the files under the CATALOG's table location
-    val delta = batch.localCheckpoint()
-    val stamp = java.util.UUID.randomUUID().toString.take(16)
-    val dataDir = s"${info.location}/data/cdc-upsert-$stamp"
-    delta.coalesce(1).write.parquet(dataDir)
-    val dataPaths = spark.read.parquet(dataDir).inputFiles.toSeq.sorted
-    val counts = graft.recovery.Recovery.fileRowCounts(spark, dataPaths)
-    if (dataPaths.map(counts.getOrElse(_, 0L)).sum == 0L) return false
-    // keys re-read from the WRITTEN files (nondeterministic inputs
-    // must delete exactly the keys that landed — the upsert rule)
-    val keyDir = s"${info.location}/data/cdc-eqdel-$stamp"
-    spark.read.parquet(dataPaths: _*)
-      .select(keyCols.map(org.apache.spark.sql.functions.col): _*)
-      .distinct().coalesce(1).write.parquet(keyDir)
-    val keyPaths = spark.read.parquet(keyDir).inputFiles.toSeq.sorted
-    val keyCounts = graft.recovery.Recovery.fileRowCounts(spark, keyPaths)
-    val conf = spark.sparkContext.hadoopConfiguration
-    def sizeOf(p: String): Long = {
-      val hp = new org.apache.hadoop.fs.Path(p)
-      hp.getFileSystem(conf).getFileStatus(hp).getLen
+                        streamId: Option[String] = None): Boolean =
+    commitCatalog(client, namespace, table, keyCols, streamId)(batch, batchId)().nonEmpty
+
+  /** [[applyBatchCatalog]] as a loop commit: the write lands the data
+    * and key files under the catalog's table location, the register
+    * step commits them. A batch whose epoch is already in the catalog
+    * writes and commits nothing. */
+  private[streaming] def commitCatalog(client: RestCatalogClient,
+                                       namespace: String, table: String,
+                                       keyCols: Seq[String],
+                                       streamId: Option[String]): IngestLoop.Commit =
+    (batch, batchId) => {
+      require(keyCols.nonEmpty, "catalog CDC needs at least one key column")
+      val spark = batch.sparkSession
+      client.ensureNamespace(namespace)
+      client.ensureTable(namespace, table, batch.schema)
+      val info = client.loadTable(namespace, table).getOrElse(
+        throw new IllegalStateException(
+          s"table $namespace.$table missing after ensureTable"))
+      val staged =
+        if (isReplay(info.snapshotSummaries.values, streamId, batchId)) { drain(batch); None }
+        else {
+          val stamp = java.util.UUID.randomUUID().toString.take(16)
+          IcebergMaintenance.writeUpsertFiles(spark, batch.coalesce(1), keyCols,
+            s"${info.location}/data/cdc-upsert-$stamp", s"${info.location}/data/cdc-eqdel-$stamp")
+        }
+      staged.fold[IngestLoop.Register](() => Nil) { case (data, keys) =>
+        val ids = keyCols.map(c =>
+          RestCatalogClient.fieldIdOf(info.schemaJson, c).getOrElse(
+            throw new IllegalArgumentException(
+              s"key column $c not in $namespace.$table schema")))
+        () => {
+          client.upsertFiles(namespace, table, data,
+            keys.map(IcebergCommit.DeleteFileSpec(_, content = 2, ids)),
+            extraSummary = epochSummary(streamId, batchId))
+          data.map(f => (f.path, f.sizeBytes))
+        }
+      }
     }
-    val ids = keyCols.map(c =>
-      RestCatalogClient.fieldIdOf(info.schemaJson, c).getOrElse(
-        throw new IllegalArgumentException(
-          s"key column $c not in $namespace.$table schema")))
-    client.upsertFiles(namespace, table,
-      dataPaths.map(p => graft.catalog.RestCatalogClient.DataFile(
-        p, sizeOf(p), counts.getOrElse(p, 0L))),
-      keyPaths.map(p => graft.catalog.IcebergCommit.DeleteFileSpec(
-        graft.catalog.RestCatalogClient.DataFile(
-          p, sizeOf(p), keyCounts.getOrElse(p, 0L)),
-        content = 2, ids)),
-      extraSummary = Map("graft.batch_id" -> batchId.toString,
-        "graft.epoch" -> epochKey(streamId, batchId)))
-    true
-  }
 
   /** Continuous keyed-change apply into a REST-CATALOGED table: the
     * [[cdcApply]] twin routed through [[applyBatchCatalog]] — one
@@ -179,13 +186,6 @@ object IcebergCdcSink {
   def cdcApplyCatalog(changes: DataFrame, client: RestCatalogClient,
                       namespace: String, table: String, checkpoint: String,
                       keyCols: Seq[String]): StreamingQuery =
-    changes.writeStream
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        applyBatchCatalog(batch.sparkSession, client, namespace, table,
-          batch, id, keyCols, streamId = Some(streamIdOf(checkpoint)))
-        ()
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
+    IngestLoop.start(changes, checkpoint,
+      commitCatalog(client, namespace, table, keyCols, Some(streamIdOf(checkpoint))))
 }

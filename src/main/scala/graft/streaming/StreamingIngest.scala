@@ -29,31 +29,32 @@ object StreamingIngest {
 
   /** The reference exporter's full loop — write files, then register
     * them with the catalog (exporter.go: write parquet → Iceberg REST
-    * register) — as a foreachBatch pipeline: each micro-batch lands in
-    * the partitioned layout and the manifest is reconciled to cover
-    * every file on storage. Registration is idempotent (reconcile
-    * dedups on path), so foreachBatch's at-least-once replay after a
-    * crash re-registers harmlessly — the reference's own recovery
-    * semantics.
+    * register) — on [[IngestLoop]]: each micro-batch lands in the
+    * partitioned layout and the manifest is reconciled to cover every
+    * file on storage. Registration is idempotent (reconcile dedups on
+    * path), so foreachBatch's at-least-once replay after a crash
+    * re-registers harmlessly — the reference's own recovery semantics.
     *
     * Per-batch cost: the data write is the batch's only Spark job work.
-    * `getBatch` stats the batch's spool files on the driver (the
-    * listing threshold is held at [[SpoolStatThreshold]] while the
-    * query runs, and restored when it stops), and
-    * [[graft.recovery.Recovery.reconcile]] runs on the driver: a
-    * `listStatus` walk of the table, a diff against the registered
-    * paths, and one new manifest part holding only this batch's files.
-    * Driver time grows with the number of table directories and files
-    * listed, not with the data. Jobs carry the description
-    * `ingest batch <id>: write` or `...: register`.
+    * `getBatch` stats the batch's spool files on the driver (the loop
+    * holds the listing threshold at [[IngestLoop.SpoolStatThreshold]]
+    * while the query runs), and registration
+    * ([[graft.recovery.Recovery.reconcile]]'s driver path) runs on the
+    * driver: a `listStatus` walk of the table, a diff against the
+    * registered paths, and one new manifest part holding only this
+    * batch's files. Driver time grows with the number of table
+    * directories and files listed, not with the data. Jobs carry the
+    * description `ingest batch <id>: write` or `...: register`.
     *
     * `trigger` is the micro-batch cadence — a live deployment passes
     * [[graft.config.ExporterConfig.Config.streamTrigger]] (the
     * collector `batch.timeout` knob); the default AvailableNow drains
     * the backlog and stops (specs, catch-up jobs). `sinkParallelism`
-    * caps concurrent sink writers per micro-batch
-    * (`sending_queue.num_consumers`): a narrow coalesce, so it limits
-    * write tasks (and files per partition dir) without a shuffle. */
+    * (`sending_queue.num_consumers`) narrow-coalesces the batch before
+    * the write, so it caps the tasks that decode and flatten it. It
+    * does not cap write tasks or files per partition directory:
+    * [[PartitionedParquetSink.writeBatch]] shuffles rows onto their
+    * partition values first. */
   def ingestWithManifest(events: DataFrame, cfg: SinkConfig,
                          checkpoint: String, manifestPath: String,
                          telemetry: Option[ExportTelemetry.Collector] = None,
@@ -61,53 +62,18 @@ object StreamingIngest {
                            org.apache.spark.sql.streaming.Trigger.AvailableNow(),
                          sinkParallelism: Option[Int] = None)
       : StreamingQuery =
-    PartitionedParquetSink.startWithConfs(events.sparkSession, Seq(
-        "spark.sql.sources.parallelPartitionDiscovery.threshold" ->
-          SpoolStatThreshold.toString)) {
-      events.writeStream
-        .foreachBatch { (batch0: DataFrame, batchId: Long) =>
-          val spark = batch0.sparkSession
-          val t0 = System.nanoTime()
-          val batch = sinkParallelism.map(batch0.coalesce).getOrElse(batch0)
-          val pinned = if (telemetry.isDefined) batch.localCheckpoint() else batch
-          val before = telemetry.map(_ =>
-            ExportTelemetry.manifestTotals(spark, manifestPath))
-          described(spark, s"ingest batch $batchId: write") {
-            PartitionedParquetSink.writeBatch(pinned, cfg)
-          }
-          described(spark, s"ingest batch $batchId: register") {
-            graft.recovery.Recovery.reconcile(
-              spark, PartitionedParquetSink.tablePath(cfg), manifestPath)
-          }
-          telemetry.foreach { t =>
-            val (fb, bb) = before.getOrElse((0L, 0L))
-            val (fa, ba) = ExportTelemetry.manifestTotals(spark, manifestPath)
-            t.record(ExportTelemetry.BatchMetric(
-              batchId, cfg.table, "success", pinned.count(), fa - fb, ba - bb,
-              0L, (System.nanoTime() - t0) / 1000000L, Nil))
-          }
-          ()
-        }
-        .option("checkpointLocation", checkpoint)
-        .trigger(trigger)
-        .start()
-    }
+    IngestLoop.start(events, checkpoint,
+      manifestCommit(cfg, manifestPath, sinkParallelism), trigger,
+      telemetry = telemetry, table = cfg.table)
 
-  /** Paths a listing stats on the driver before Spark lists them with a
-    * job (`spark.sql.sources.parallelPartitionDiscovery.threshold`,
-    * default 32). The file source re-stats every file of a micro-batch
-    * in `getBatch`, reading the conf from the session that created the
-    * stream; above the default a steady batch paid a ~0.5 s listing job
-    * for what the driver stats in milliseconds. Set to the exporter's
-    * default `send_batch_size`, the largest batch it asks for. */
-  private[streaming] val SpoolStatThreshold = graft.config.ExporterConfig.Batch().sendBatchSize
-
-  /** Run `body` with its Spark jobs described as `what`. */
-  private def described[T](spark: SparkSession, what: String)(body: => T): T = {
-    val sc = spark.sparkContext
-    val prev = sc.getLocalProperty("spark.job.description")
-    sc.setJobDescription(what)
-    try body finally sc.setJobDescription(prev)
+  /** Write a batch into the partitioned layout, then register the
+    * table's unregistered files in the manifest. */
+  private[streaming] def manifestCommit(cfg: SinkConfig, manifestPath: String,
+                                        sinkParallelism: Option[Int] = None)
+      : IngestLoop.Commit = (batch, _) => {
+    PartitionedParquetSink.writeBatch(sinkParallelism.fold(batch)(batch.coalesce), cfg)
+    () => graft.recovery.Recovery.registerOrphans(
+      batch.sparkSession, PartitionedParquetSink.tablePath(cfg), manifestPath)
   }
 
   /** Streaming trending top-k: the k most frequent event types per

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, Trigger}
 
 /** Streaming MAINTENANCE of the hourly events rollup — the other half
   * of [[graft.plans.RollupRewrite]]: the optimizer rule answers
@@ -110,24 +110,18 @@ object StreamingRollup {
   /** The same maintenance into an ICEBERG table — each micro-batch's
     * changed groups land as one merge-on-read upsert snapshot
     * ([[IcebergCdcSink.applyBatch]]: equality-delete + append, O(delta),
-    * exactly-once across restarts via batch-id replay detection). The
-    * rollup gains the chain's whole lifecycle for free: TIME TRAVEL to
-    * the view as of any past micro-batch, compaction when the upsert
-    * deltas fragment it, expiry, branches. This is what "materialized
-    * view" looks like on the lakehouse: a first-class table, not a
-    * side file. */
+    * exactly-once across restarts via epoch replay detection scoped to
+    * the checkpoint, so a fresh checkpoint over an existing table
+    * applies its batches). The rollup gains the chain's whole lifecycle
+    * for free: TIME TRAVEL to the view as of any past micro-batch,
+    * compaction when the upsert deltas fragment it, expiry, branches.
+    * This is what "materialized view" looks like on the lakehouse: a
+    * first-class table, not a side file. */
   def maintainIceberg(events: DataFrame, tableDir: String,
                       checkpoint: String, tsCol: String = "ts",
                       watermark: String = "720 hours"): StreamingQuery =
-    rollupFrame(events.withWatermark(tsCol, watermark), tsCol)
-      .writeStream
-      .outputMode("update")
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        IcebergCdcSink.applyBatch(batch.sparkSession, tableDir, batch, id,
-          Seq("hour_ts", "event_type"))
-        ()
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
+    IngestLoop.start(rollupFrame(events.withWatermark(tsCol, watermark), tsCol),
+      checkpoint, IcebergCdcSink.commit(tableDir, Seq("hour_ts", "event_type"),
+        None, Some(IcebergCdcSink.streamIdOf(checkpoint))),
+      outputMode = OutputMode.Update())
 }

@@ -61,4 +61,25 @@ class SqlSurfaceSpec extends SparkSpec {
     assert(ddSql === ddDf)
     spark.catalog.dropTempView("ev_sql")
   }
+
+  test("spark.sql.extensions injects every function register adds") {
+    import org.apache.spark.sql.{SparkSessionExtensions, TestExtensions}
+    val ext = new SparkSessionExtensions
+    new graft.functions.GraftExtensions().apply(ext)
+    GraftFunctions.register(spark)
+    val fns = spark.sessionState.functionRegistry
+    val tvfs = spark.sessionState.tableFunctionRegistry
+    def graftOnly(names: Seq[org.apache.spark.sql.catalyst.FunctionIdentifier],
+                  info: org.apache.spark.sql.catalyst.FunctionIdentifier =>
+                    Option[org.apache.spark.sql.catalyst.expressions.ExpressionInfo]) =
+      names.filter(id => info(id).exists(_.getClassName.startsWith("graft."))).map(_.funcName).toSet
+    val registered = graftOnly(fns.listFunction(), fns.lookupFunction)
+    val registeredTvfs = graftOnly(tvfs.listFunction(), tvfs.lookupFunction)
+    assert(registered.contains("bottomk_distinct"), registered)
+    assert(registeredTvfs.nonEmpty)
+    assert(registered.subsetOf(TestExtensions.functions(ext).toSet),
+      registered -- TestExtensions.functions(ext))
+    assert(registeredTvfs.subsetOf(TestExtensions.tableFunctions(ext).toSet),
+      registeredTvfs -- TestExtensions.tableFunctions(ext))
+  }
 }

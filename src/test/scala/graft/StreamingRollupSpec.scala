@@ -173,6 +173,54 @@ class StreamingRollupSpec extends SparkSpec {
     } finally spark.conf.unset(graft.plans.RollupRewrite.SPEC_KEY)
   }
 
+  test("Iceberg rollup: a fresh checkpoint over an existing table lands its groups") {
+    import spark.implicits._
+    val base = Files.createTempDirectory("graft-roll-fresh").toString
+    def source(dir: String, day: String, types: Seq[String]): org.apache.spark.sql.DataFrame = {
+      types.zipWithIndex.map { case (t, i) => (s"$day 0$i:30:00", t, i + 1.0, i.toLong) }
+        .toDF("ts", "event_type", "value", "user_id")
+        .withColumn("ts", to_timestamp($"ts")).write.parquet(dir)
+      spark.readStream.schema(spark.read.parquet(dir).schema).parquet(dir)
+    }
+    def groups = graft.catalog.IcebergTableReader.read(spark, s"$base/tbl")
+      .select(date_format($"hour_ts", "yyyy-MM-dd HH").as("h"), $"event_type")
+      .collect().map(r => (r.getString(0), r.getString(1))).toSet
+    StreamingRollup.maintainIceberg(source(s"$base/a", "2024-01-01", Seq("click", "view")),
+      s"$base/tbl", s"$base/chk-a").awaitTermination()
+    // a new query on the same table: its batch ids restart at 0
+    StreamingRollup.maintainIceberg(source(s"$base/b", "2024-02-01", Seq("buy")),
+      s"$base/tbl", s"$base/chk-b").awaitTermination()
+    assert(groups === Set(("2024-01-01 00", "click"), ("2024-01-01 01", "view"),
+      ("2024-02-01 00", "buy")))
+
+  }
+
+  test("Iceberg rollup: a replayed batch is skipped and its state still commits") {
+    import spark.implicits._
+    val base = Files.createTempDirectory("graft-roll-replay").toString
+    Seq(("2024-01-01 00:30:00", "click", 1.0, 1L)).toDF("ts", "event_type", "value", "user_id")
+      .withColumn("ts", to_timestamp($"ts")).write.parquet(s"$base/src")
+    def run() = {
+      val q = StreamingRollup.maintainIceberg(spark.readStream
+        .schema(spark.read.parquet(s"$base/src").schema).parquet(s"$base/src"),
+        s"$base/tbl", s"$base/chk")
+      q.awaitTermination()
+      q.recentProgress.map(p => (p.batchId, p.numInputRows)).toSeq
+    }
+    def snapshots = graft.catalog.IcebergTableReader.metadata(spark, s"$base/tbl").snapshots.size
+    // batch 0 is the only batch: no trailing no-data batch commits after it
+    val key = "spark.sql.streaming.noDataMicroBatches.enabled"
+    spark.conf.set(key, "false")
+    try {
+      assert(run() === Seq((0L, 1L)) && snapshots === 1)
+      // a crash after the table commit, before the checkpoint's: the
+      // restarted query replays batch 0 and finds its epoch
+      Seq("0", ".0.crc").foreach(f => Files.delete(java.nio.file.Paths.get(s"$base/chk/commits/$f")))
+      assert(run() === Seq((0L, 1L)))
+      assert(snapshots === 1)
+    } finally spark.conf.unset(key)
+  }
+
   test("RollupRewrite answers raw-table aggregates from the STREAMED snapshot") {
     import spark.implicits._
     graft.functions.GraftFunctions.register(spark)
