@@ -265,8 +265,13 @@ final class OtlpGrpcReceiver(spoolDir: String, host: String = "127.0.0.1",
     streams.remove(sid)
     val path = st.headers.getOrElse(":path", "")
     val ct = st.headers.getOrElse("content-type", "")
-    try respondInner(out, sid, st, path, ct)
+    // the stream's hold is released before the response leaves, so a
+    // client that has its reply never sees the valve still charged
+    val resp = new java.io.ByteArrayOutputStream()
+    try respondInner(resp, sid, st, path, ct)
     finally releaseHold(st)
+    resp.writeTo(out)
+    out.flush()
   }
 
   private def respondInner(out: OutputStream, sid: Int, st: StreamState,

@@ -406,6 +406,49 @@ class RestCatalogSpec extends SparkSpec {
     }
   }
 
+  test("streaming ingest commits each batch to the catalog exactly once, through a 503") {
+    withCatalog { (fake, client) =>
+      import graft.sink.PartitionedParquetSink
+      import graft.sink.PartitionedParquetSink.SinkConfig
+      import graft.streaming.{Delivery, StreamingIngest}
+      val base = Files.createTempDirectory("graft-restcat-stream").toString
+      val batch = Tables.events(spark, sf).limit(400)
+      val srcDir = s"$base/src"
+      batch.write.parquet(srcDir)
+      val cfg = SinkConfig(base, "events", tsColumn = "ts", granularity = "daily")
+
+      // a transient 503 lands mid-first-batch: the client's retry layer
+      // must absorb it (invisible to the batch) without double-registering
+      fake.failNext503.set(1)
+      Delivery.ingestWithCatalogRetrying(
+        StreamingIngest.readEvents(spark, srcDir, batch.schema), cfg,
+        s"$base/chk", client, "otel", "events", policy = fastRetry)
+        .awaitTermination()
+      assert(fake.failNext503.get() === 0, "injected 503 was never served")
+
+      val tablePath = PartitionedParquetSink.tablePath(cfg)
+      def storagePaths = graft.recovery.Recovery.listDataFiles(spark, tablePath)
+        .collect().map(_.getString(0)).toSet
+      val reg1 = client.listDataFiles("otel", "events")
+      assert(reg1.toSet === storagePaths && reg1.nonEmpty)
+      assert(reg1.size === reg1.distinct.size)
+      // catalog table got the sink's partition columns as identity spec
+      val spec = (fake.tables(("otel", "events")).specJson \ "fields")
+        .extract[Seq[JValue]].map(f => (f \ "name").extract[String])
+      assert(spec === Seq("year", "month", "day"))
+
+      // second run with NEW source files: exactly the delta registers
+      batch.limit(100).write.mode("append").parquet(srcDir)
+      Delivery.ingestWithCatalogRetrying(
+        StreamingIngest.readEvents(spark, srcDir, batch.schema), cfg,
+        s"$base/chk", client, "otel", "events", policy = fastRetry)
+        .awaitTermination()
+      val reg2 = client.listDataFiles("otel", "events")
+      assert(reg2.toSet === storagePaths)
+      assert(reg2.size === reg2.distinct.size, "a path was registered twice")
+    }
+  }
+
   test("end-to-end: sink-written parquet registered and listed through the catalog") {
     withCatalog { (fake, client) =>
       import graft.sink.PartitionedParquetSink

@@ -397,6 +397,38 @@ class SinkRecoverySpec extends SparkSpec {
     assert(onDisk().size === 2 * fold + 3)
   }
 
+  test("a failure between write and register leaves orphans the next reconcile registers once") {
+    import graft.streaming.{Delivery, StreamingIngest}
+    val base = tmp()
+    val batch = eventsDf.limit(300)
+    val srcDir = s"$base/src"
+    batch.write.parquet(srcDir)
+    val cfg = SinkConfig(base, "events", tsColumn = "ts", granularity = "daily")
+    val tablePath = PartitionedParquetSink.tablePath(cfg)
+    val manifestPath = s"$base/manifest"
+    // the process dies between the data write and the registration
+    val q = Delivery.ingestWithManifestRetrying(
+      StreamingIngest.readEvents(spark, srcDir, batch.schema), cfg,
+      s"$base/chk", manifestPath,
+      policy = Delivery.RetryPolicy(maxAttempts = 1),
+      beforeRegister = _ => throw new java.io.IOException("killed before register"))
+    intercept[org.apache.spark.sql.streaming.StreamingQueryException](q.awaitTermination())
+    val onDisk = Recovery.listDataFiles(spark, tablePath).collect().map(_.getString(0)).toSeq
+    assert(onDisk.nonEmpty)
+    assert(Recovery.readManifest(spark, manifestPath).count() === 0)
+
+    val registered = Recovery.reconcile(spark, tablePath, manifestPath)
+      .collect().map(_.getString(0)).toSeq
+    assert(registered.sorted === onDisk.sorted)
+    val parts = ManifestDir.parts(manifestPath)
+    assert(parts.size === 1)
+    // a second call finds nothing new and writes nothing
+    assert(Recovery.reconcile(spark, tablePath, manifestPath).count() === onDisk.size)
+    assert(ManifestDir.parts(manifestPath) === parts)
+    assert(ManifestDir.residue(manifestPath).isEmpty, ManifestDir.residue(manifestPath))
+    assert(spark.read.parquet(registered: _*).count() === 300)
+  }
+
   test("distributed listing equals the driver walk at every fan-out") {
     import graft.recovery.Recovery
     val base = tmp()
