@@ -4,6 +4,7 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.metadata.BlockMetaData
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.SparkSession
 
@@ -15,11 +16,34 @@ import graft.catalog.RestCatalogClient.DataFile
   * opens each footer once, whatever the number of stats columns. */
 object DataFiles {
 
-  /** One footer's facts: file length, row count, and the min/max of
-    * each requested column whose footer carries comparable INT64/INT32
-    * statistics (other columns are absent from `bounds`). */
+  /** One footer's facts: file length, row count, and the
+    * [[columnBounds]] of each requested column that has them. */
   private[graft] final case class Footer(path: String, size: Long, rows: Long,
                                          bounds: Map[String, (Long, Long)])
+
+  /** The file-level min/max of `column` over a footer's row groups.
+    * Every row group must carry comparable INT64/INT32 statistics for
+    * it: one row group without them (stats missing or not comparable,
+    * or the column absent) leaves the file unbounded, because bounds
+    * over the other row groups would be narrower than its rows and a
+    * planner pruning on them would skip matches. */
+  private[graft] def columnBounds(blocks: Seq[BlockMetaData],
+                                  column: String): Option[(Long, Long)] = {
+    val ranges = blocks.map { b =>
+      b.getColumns.asScala.find(_.getPath.toDotString == column)
+        .map(_.getStatistics)
+        .filter(s => s != null && s.hasNonNullValue)
+        .flatMap(s => (s.genericGetMin, s.genericGetMax) match {
+          case (mn: java.lang.Long, mx: java.lang.Long) =>
+            Some((mn.longValue, mx.longValue))
+          case (mn: java.lang.Integer, mx: java.lang.Integer) =>
+            Some((mn.longValue, mx.longValue))
+          case _ => None
+        })
+    }
+    if (ranges.isEmpty || ranges.exists(_.isEmpty)) None
+    else Some((ranges.flatten.map(_._1).min, ranges.flatten.map(_._2).max))
+  }
 
   /** Footers of `paths`, in order, harvested as one Spark job (a wide
     * commit has ~10^5 footers; a driver sweep would dominate it). */
@@ -39,23 +63,7 @@ object DataFiles {
           val reader = ParquetFileReader.open(file)
           try {
             val blocks = reader.getFooter.getBlocks.asScala.toSeq
-            val bounds = columns.flatMap { c =>
-              val longs = blocks.flatMap(_.getColumns.asScala)
-                .filter(_.getPath.toDotString == c)
-                .map(_.getStatistics)
-                .filter(s => s != null && s.hasNonNullValue)
-                .flatMap { s =>
-                  (s.genericGetMin, s.genericGetMax) match {
-                    case (mn: java.lang.Long, mx: java.lang.Long) =>
-                      Some((mn.longValue, mx.longValue))
-                    case (mn: java.lang.Integer, mx: java.lang.Integer) =>
-                      Some((mn.longValue, mx.longValue))
-                    case _ => None
-                  }
-                }
-              if (longs.isEmpty) None
-              else Some(c -> (longs.map(_._1).min, longs.map(_._2).max))
-            }.toMap
+            val bounds = columns.flatMap(c => columnBounds(blocks, c).map(c -> _)).toMap
             Footer(p, file.getLength, blocks.map(_.getRowCount).sum, bounds)
           } finally reader.close()
         }

@@ -485,64 +485,29 @@ class RestCatalogClient(settings: RestCatalogClient.Settings,
     * `assert-ref-snapshot-id` requirement. A concurrent commit turns
     * into a 409 → transient → the retry loop replays against the new
     * head — Iceberg's standard conflict resolution for appends (no
-    * rebase needed: appends commute). Returns the committed snapshot's
-    * id; None when `files` is empty (nothing is committed). */
+    * rebase needed: appends commute). The snapshot id is picked once,
+    * before the loop: an attempt that finds it already in the table
+    * (the catalog took an earlier POST whose response was lost, or the
+    * stand-alone metadata write failed after it) skips the POST and
+    * only finishes the stand-alone step, so a retry never appends the
+    * same files twice. Returns the committed snapshot's id; None when
+    * `files` is empty (nothing is committed). */
   def appendDataFiles(namespace: String, table: String,
                       files: Seq[DataFile]): Option[Long] = {
     if (files.isEmpty) return None
+    val snapId = System.nanoTime() // unique, monotone enough per-process
+    var posted: Option[IcebergTableMetadata.SnapshotMeta] = None
     Delivery.retry(settings.retry) {
       val info = loadTableOnce(namespace, table).getOrElse(
         throw new PermanentException(s"validation failed: table $namespace.$table does not exist", null))
-      val snapId = System.nanoTime() // unique, monotone enough per-process
-      val seqNum = info.lastSequenceNumber + 1
-      // Real Iceberg v2 metadata: an Avro manifest with one ADDED entry
-      // per data file, then an Avro manifest list that CARRIES FORWARD
-      // every prior manifest (per the spec a snapshot's list is the
-      // complete table state — sequence numbers preserved, so any
-      // single-snapshot reader sees the whole table) — the layout
-      // iceberg-go's transaction append produces
-      // (catalog_rest.go:292,345-358). Shared mechanics: [[IcebergCommit]];
-      // hand-rolled OCF: [[AvroOcf]]. Pre-r6 JSON-lines parent lists
-      // can't carry (no manifest records); [[listDataFiles]]'s
-      // all-snapshot union still covers those.
-      val parentList = info.currentSnapshotId
-        .flatMap(cur => info.snapshots.find(_._1 == cur).map(_._2))
-      val (_, listPath) = IcebergCommit.writeManifests(
-        hadoopConf, info.location, info.schemaJson, snapId, seqNum,
-        info.currentSnapshotId, parentList, files,
-        info.defaultSpec.map(IcebergPartitioning.fieldsOf).getOrElse(Nil),
-        specId = info.defaultSpec.flatMap(sp => (sp \ "spec-id").toOption
-          .collect { case JInt(n) => n.toInt }).getOrElse(0))
-      val summary = JObject(
-        "operation" -> JString("append"),
-        "otel.exporter" -> JString("iceberg"),
-        "otel.record_count" -> JString(files.map(_.recordCount).sum.toString),
-        "otel.file_size" -> JString(files.map(_.sizeBytes).sum.toString),
-        "otel.file_count" -> JString(files.size.toString))
-      val commitTsMs = System.currentTimeMillis()
-      val snapshot = JObject(
-        "snapshot-id" -> JInt(BigInt(snapId)),
-        "parent-snapshot-id" -> info.currentSnapshotId
-          .map(v => JInt(BigInt(v)): JValue).getOrElse(JNull),
-        "sequence-number" -> JInt(BigInt(seqNum)),
-        "timestamp-ms" -> JInt(BigInt(commitTsMs)),
-        "manifest-list" -> JString(listPath),
-        "summary" -> summary)
-      val body = compact(render(JObject(
-        "identifier" -> JObject(
-          "namespace" -> JArray(List(JString(namespace))),
-          "name" -> JString(table)),
-        "requirements" -> JArray(List(JObject(
-          "type" -> JString("assert-ref-snapshot-id"),
-          "ref" -> JString("main"),
-          "snapshot-id" -> info.currentSnapshotId
-            .map(v => JInt(BigInt(v)): JValue).getOrElse(JNull)))),
-        "updates" -> JArray(List(
-          JObject("action" -> JString("add-snapshot"), "snapshot" -> snapshot),
-          JObject("action" -> JString("set-snapshot-ref"),
-            "ref-name" -> JString("main"), "type" -> JString("branch"),
-            "snapshot-id" -> JInt(BigInt(snapId))))))))
-      call("POST", s"$prefix/namespaces/$namespace/tables/$table", Some(body))
+      val meta =
+        if (info.snapshots.exists(_._1 == snapId)) posted.get
+        else {
+          val (m, body) = appendSnapshot(namespace, table, info, snapId, files)
+          posted = Some(m) // before the POST: its response may be lost
+          call("POST", s"$prefix/namespaces/$namespace/tables/$table", Some(body))
+          m
+        }
       // STAND-ALONE metadata chain: after the catalog accepts the
       // snapshot, append it to the table's vN.metadata.json chain so
       // the directory is cold-readable without the catalog
@@ -550,15 +515,71 @@ class RestCatalogClient(settings: RestCatalogClient.Settings,
       // on another host; the catalog stays the source of truth and the
       // next commit repairs any lag).
       IcebergTableMetadata.commit(hadoopConf, info.location,
-        info.schemaJson, info.defaultSpec,
-        Some(IcebergTableMetadata.SnapshotMeta(
-          snapId, info.currentSnapshotId, seqNum, commitTsMs, listPath,
-          Map("operation" -> "append",
-              "otel.record_count" -> files.map(_.recordCount).sum.toString,
-              "otel.file_size" -> files.map(_.sizeBytes).sum.toString,
-              "otel.file_count" -> files.size.toString))))
+        info.schemaJson, info.defaultSpec, Some(meta))
       Some(snapId)
     }
+  }
+
+  /** One append attempt against the loaded head `info`: write the
+    * manifests and return the snapshot as the stand-alone chain records
+    * it, with the catalog commit body that adds it. */
+  private def appendSnapshot(namespace: String, table: String, info: TableInfo,
+                             snapId: Long, files: Seq[DataFile])
+      : (IcebergTableMetadata.SnapshotMeta, String) = {
+    val seqNum = info.lastSequenceNumber + 1
+    // Real Iceberg v2 metadata: an Avro manifest with one ADDED entry
+    // per data file, then an Avro manifest list that CARRIES FORWARD
+    // every prior manifest (per the spec a snapshot's list is the
+    // complete table state — sequence numbers preserved, so any
+    // single-snapshot reader sees the whole table) — the layout
+    // iceberg-go's transaction append produces
+    // (catalog_rest.go:292,345-358). Shared mechanics: [[IcebergCommit]];
+    // hand-rolled OCF: [[AvroOcf]]. Pre-r6 JSON-lines parent lists
+    // can't carry (no manifest records); [[listDataFiles]]'s
+    // all-snapshot union still covers those.
+    val parentList = info.currentSnapshotId
+      .flatMap(cur => info.snapshots.find(_._1 == cur).map(_._2))
+    val (_, listPath) = IcebergCommit.writeManifests(
+      hadoopConf, info.location, info.schemaJson, snapId, seqNum,
+      info.currentSnapshotId, parentList, files,
+      info.defaultSpec.map(IcebergPartitioning.fieldsOf).getOrElse(Nil),
+      specId = info.defaultSpec.flatMap(sp => (sp \ "spec-id").toOption
+        .collect { case JInt(n) => n.toInt }).getOrElse(0))
+    val summary = JObject(
+      "operation" -> JString("append"),
+      "otel.exporter" -> JString("iceberg"),
+      "otel.record_count" -> JString(files.map(_.recordCount).sum.toString),
+      "otel.file_size" -> JString(files.map(_.sizeBytes).sum.toString),
+      "otel.file_count" -> JString(files.size.toString))
+    val commitTsMs = System.currentTimeMillis()
+    val snapshot = JObject(
+      "snapshot-id" -> JInt(BigInt(snapId)),
+      "parent-snapshot-id" -> info.currentSnapshotId
+        .map(v => JInt(BigInt(v)): JValue).getOrElse(JNull),
+      "sequence-number" -> JInt(BigInt(seqNum)),
+      "timestamp-ms" -> JInt(BigInt(commitTsMs)),
+      "manifest-list" -> JString(listPath),
+      "summary" -> summary)
+    val body = compact(render(JObject(
+      "identifier" -> JObject(
+        "namespace" -> JArray(List(JString(namespace))),
+        "name" -> JString(table)),
+      "requirements" -> JArray(List(JObject(
+        "type" -> JString("assert-ref-snapshot-id"),
+        "ref" -> JString("main"),
+        "snapshot-id" -> info.currentSnapshotId
+          .map(v => JInt(BigInt(v)): JValue).getOrElse(JNull)))),
+      "updates" -> JArray(List(
+        JObject("action" -> JString("add-snapshot"), "snapshot" -> snapshot),
+        JObject("action" -> JString("set-snapshot-ref"),
+          "ref-name" -> JString("main"), "type" -> JString("branch"),
+          "snapshot-id" -> JInt(BigInt(snapId))))))))
+    (IcebergTableMetadata.SnapshotMeta(
+      snapId, info.currentSnapshotId, seqNum, commitTsMs, listPath,
+      Map("operation" -> "append",
+          "otel.record_count" -> files.map(_.recordCount).sum.toString,
+          "otel.file_size" -> files.map(_.sizeBytes).sum.toString,
+          "otel.file_count" -> files.size.toString)), body)
   }
 
   /** MERGE-ON-READ DML through the REST catalog (r18) — the commit

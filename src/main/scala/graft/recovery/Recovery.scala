@@ -378,37 +378,6 @@ object Recovery {
     readManifest(spark, manifestPath)
   }
 
-  /** One file's footer → (min, max, rows) for `column`. Runs on
-    * executors (see [[fileStats]]); pure function of (path, conf). */
-  private def harvestFooter(pathStr: String, conf: org.apache.hadoop.conf.Configuration,
-                            column: String): (String, Option[Long], Option[Long], Long) = {
-    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
-      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(new Path(pathStr), conf))
-    try {
-      import scala.jdk.CollectionConverters._
-      var mn: Option[Long] = None
-      var mx: Option[Long] = None
-      var rows = 0L
-      var ok = true
-      reader.getFooter.getBlocks.asScala.foreach { block =>
-        rows += block.getRowCount
-        block.getColumns.asScala
-          .find(_.getPath.toDotString == column) match {
-          case Some(cc) if cc.getStatistics != null &&
-                           !cc.getStatistics.isEmpty =>
-            (cc.getStatistics.genericGetMin, cc.getStatistics.genericGetMax) match {
-              case (lo: java.lang.Long, hi: java.lang.Long) =>
-                mn = Some(mn.fold(lo.longValue)(math.min(_, lo.longValue)))
-                mx = Some(mx.fold(hi.longValue)(math.max(_, hi.longValue)))
-              case _ => ok = false
-            }
-          case _ => ok = false
-        }
-      }
-      (pathStr, if (ok) mn else None, if (ok) mx else None, rows)
-    } finally reader.close()
-  }
-
   /** File-level column statistics (zone map) harvested from parquet
     * FOOTERS — the per-file min/max metrics an Iceberg catalog keeps,
     * reconstructed from storage alone. Metadata-only: footers are read,
@@ -423,17 +392,10 @@ object Recovery {
     import spark.implicits._
     val paths = listDataFiles(spark, tablePath)
       .select("file_path").as[String].collect().toIndexedSeq
-    val confB = spark.sparkContext.broadcast(
-      new org.apache.spark.util.SerializableConfiguration(
-        spark.sparkContext.hadoopConfiguration))
-    val slices = math.max(1, math.min(paths.length,
-      spark.sparkContext.defaultParallelism))
-    spark.sparkContext.parallelize(paths, slices)
-      .mapPartitions { it =>
-        val conf = confB.value.value
-        it.map(p => harvestFooter(p, conf, column))
-      }
-      .toDF("file_path", "min_val", "max_val", "n_rows")
+    graft.catalog.DataFiles.footers(spark, paths, Seq(column)).map { f =>
+      val b = f.bounds.get(column)
+      (f.path, b.map(_._1), b.map(_._2), f.rows)
+    }.toDF("file_path", "min_val", "max_val", "n_rows")
   }
 
   /** Per-file min/max of one INT64/INT32-physical column, harvested

@@ -2,10 +2,11 @@ package graft.streaming
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.{Dataset, Encoder, Encoders}
+import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TTLConfig,
+  TimeMode, TimerValues, ValueState}
 
-/** Streaming z-score anomaly alerts via flatMapGroupsWithState — the
+/** Streaming z-score anomaly alerts on `transformWithState` — the
   * streaming twin of [[graft.telemetry.Telemetry.anomaly]]: each metric
   * series keeps running (n, Σ, Σ²) moments in state and every incoming
   * event is scored against the statistics of the events BEFORE it
@@ -29,43 +30,53 @@ object StreamingAnomaly {
   case class Alert(series: String, event_id: Long, ts: Timestamp,
                    value: Double, z: Double, n_baseline: Long)
 
-  /** Group-state transition: score each event (in event-time order)
-    * against the prior moments, then fold it in. Events arriving before
-    * `minN` baseline points are absorbed silently (warmup). A zero-
-    * variance baseline cannot be scored (z undefined) — such events
-    * only extend the baseline. */
-  def stateFn(zThreshold: Double, minN: Long)(
-      series: String, events: Iterator[MetricEvent],
-      state: GroupState[SeriesStats]): Iterator[Alert] = {
-    var st = state.getOption.getOrElse(SeriesStats(0L, 0L, 0L))
-    val out = scala.collection.mutable.ArrayBuffer.empty[Alert]
-    events.toSeq.sortBy(e => (e.ts.getTime, e.event_id)).foreach { e =>
-      val v = math.round(e.value * 100)
-      if (st.n >= minN) {
-        val n = st.n.toDouble
-        val mean = st.s.toDouble / n
-        val sd = math.sqrt((st.ss.toDouble - st.s.toDouble * st.s.toDouble / n) / (n - 1))
-        if (sd > 0) {
-          val z = (v - mean) / sd
-          if (math.abs(z) >= zThreshold)
-            out += Alert(series, e.event_id, e.ts, e.value, z, st.n)
+  /** Score each event (in event-time order) against the prior
+    * moments, then fold it in. Events arriving before `minN` baseline
+    * points are absorbed silently (warmup). A zero-variance baseline
+    * cannot be scored (z undefined) — such events only extend the
+    * baseline. */
+  class Processor(zThreshold: Double, minN: Long)
+      extends StatefulProcessor[String, MetricEvent, Alert] {
+
+    @transient private var stats: ValueState[SeriesStats] = _
+
+    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
+      stats = getHandle.getValueState[SeriesStats]("stats",
+        Encoders.product[SeriesStats], TTLConfig.NONE)
+
+    override def handleInputRows(series: String, events: Iterator[MetricEvent],
+                                 timers: TimerValues): Iterator[Alert] = {
+      var st = if (stats.exists()) stats.get() else SeriesStats(0L, 0L, 0L)
+      val out = scala.collection.mutable.ArrayBuffer.empty[Alert]
+      events.toSeq.sortBy(e => (e.ts.getTime, e.event_id)).foreach { e =>
+        val v = math.round(e.value * 100)
+        if (st.n >= minN) {
+          val n = st.n.toDouble
+          val mean = st.s.toDouble / n
+          val sd = math.sqrt((st.ss.toDouble - st.s.toDouble * st.s.toDouble / n) / (n - 1))
+          if (sd > 0) {
+            val z = (v - mean) / sd
+            if (math.abs(z) >= zThreshold)
+              out += Alert(series, e.event_id, e.ts, e.value, z, st.n)
+          }
         }
+        st = SeriesStats(st.n + 1, st.s + v, st.ss + v * v)
       }
-      st = SeriesStats(st.n + 1, st.s + v, st.ss + v * v)
+      stats.update(st)
+      out.iterator
     }
-    state.update(st)
-    out.iterator
   }
 
+  /** Append-mode alert stream. Event-time mode, so the watermark drops
+    * late events; requires the RocksDB state store. */
   def alerts(events: Dataset[MetricEvent], zThreshold: Double = 3.0,
              minN: Long = 30): Dataset[Alert] = {
-    implicit val stateEnc = Encoders.product[SeriesStats]
-    implicit val outEnc = Encoders.product[Alert]
-    implicit val keyEnc = Encoders.STRING
+    implicit val keyEnc: Encoder[String] = Encoders.STRING
+    implicit val outEnc: Encoder[Alert] = Encoders.product[Alert]
     events
       .withWatermark("ts", "10 minutes")
       .groupByKey(_.series)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
-        stateFn(zThreshold, minN))
+      .transformWithState(new Processor(zThreshold, minN),
+        TimeMode.EventTime(), OutputMode.Append())
   }
 }

@@ -21,8 +21,8 @@ import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TTLConfig,
   * same total order every batch twin uses, so replay after checkpoint
   * recovery converges to the identical view.
   *
-  * Why transformWithState (vs flatMapGroupsWithState, which the other
-  * streaming ops here use): the state TTL is declarative — RocksDB
+  * Why transformWithState (the one stateful API every streaming op
+  * here uses): the state TTL is declarative — RocksDB
   * expires idle keys itself (`TTLConfig`), so abandoned keys cost
   * nothing and state stays bounded by ACTIVE key cardinality without
   * hand-written timeout plumbing. State is one row per key; the stream

@@ -21,8 +21,9 @@ import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TTLConfig,
   * micro-batch rows fold in doc_id order, so batch cuts + within-batch
   * order fully specify the outcome and a from-scratch serial replay is
   * bit-identical (the [[StreamingHeavyHitters]] determinism contract).
-  * Feed the stream in md5 order as one batch and the admissions equal
-  * the batch op's selection exactly — spec-asserted.
+  * On a corpus whose doc_id order is also its md5(doc_id) order,
+  * arrival order is the batch op's order, and the admissions equal its
+  * selection over every prefix (StreamingParitySpec).
   *
   * Every document is emitted WITH its verdict and the before/after
   * running totals (auditable admission, not silent drops — the

@@ -7,22 +7,27 @@ import org.apache.spark.sql.streaming.{ExpiredTimerInfo, OutputMode,
   StatefulProcessor, TTLConfig, TimeMode, TimerValues, ValueState}
 
 /** Streaming sessionization on Spark 4's `transformWithState` — the
-  * timer-based twin of [[StatefulSessions]] (flatMapGroupsWithState):
-  * same session semantics (gap split inside a batch, watermark-driven
-  * close for idle users), expressed with the modern API's explicit
-  * EVENT-TIME TIMERS instead of a per-group timeout side-channel.
+  * streaming twin of [[graft.telemetry.Telemetry.sessionize]]: a
+  * session closes either on a gap inside a batch or when the event-time
+  * watermark passes last_event + gap, expressed with explicit
+  * EVENT-TIME TIMERS.
   *
   * Per open session the processor keeps one ValueState record and ONE
   * registered timer at last_event + gap; a newer event deletes and
-  * re-registers the timer (the API requires explicit re-arming —
-  * timers don't implicitly supersede like setTimeoutTimestamp did).
+  * re-registers the timer (the API requires explicit re-arming).
   * When the watermark passes the timer, `handleExpiredTimer` emits the
   * closed session and clears state. State per key is O(1); the stream
   * shuffles once on user_id; RocksDB owns the state files.
   */
 object TwsSessions {
 
-  import StatefulSessions.{ClosedSession, SessionEvent, SessionState}
+  case class SessionEvent(user_id: Long, ts: Timestamp, value: Double)
+  case class SessionState(start: Long, last: Long, n: Long, sum: Double)
+  case class ClosedSession(user_id: Long, session_start: Timestamp,
+                           session_end: Timestamp, n_events: Long,
+                           sum_value: Double)
+
+  val DefaultGapMs: Long = 30L * 60 * 1000
 
   class SessionProcessor(gapMs: Long)
       extends StatefulProcessor[Long, SessionEvent, ClosedSession] {
@@ -82,7 +87,7 @@ object TwsSessions {
   }
 
   def sessionize(events: Dataset[SessionEvent],
-                 gapMs: Long = StatefulSessions.DefaultGapMs): Dataset[ClosedSession] = {
+                 gapMs: Long = DefaultGapMs): Dataset[ClosedSession] = {
     implicit val keyEnc: Encoder[Long] = Encoders.scalaLong
     implicit val outEnc: Encoder[ClosedSession] = Encoders.product[ClosedSession]
     events

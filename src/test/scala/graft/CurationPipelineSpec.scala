@@ -31,18 +31,6 @@ class CurationPipelineSpec extends SparkSpec {
   /** Save/restore the state-store provider around the test body — the
     * shared session must not leak RocksDB into later suites (same
     * helper as StreamingNearDupSpec). */
-  private def withRocksDb(f: => Unit): Unit = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try f
-    finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
-  }
-
   test("collector drop → quality gate → streaming dedup → curated store") {
     import spark.implicits._
     withRocksDb {

@@ -13,6 +13,8 @@ import org.json4s.jackson.JsonMethods.parse
   class FakeRestCatalog {
     val tokenIssued = new AtomicInteger(0)
     val failNext503 = new AtomicInteger(0)
+    // commits that apply their updates and then answer 503 (a lost response)
+    val loseNextCommitResponse = new AtomicInteger(0)
     @volatile var validToken: String = "tok-0"
     val namespaces = mutable.LinkedHashSet.empty[String]
     // (ns, table) -> (location, snapshots as (id, manifestList), currentId)
@@ -203,7 +205,10 @@ import org.json4s.jackson.JsonMethods.parse
                   case _ => ()
                 }
               }
-              reply(ex, 200, s"""{"metadata-location":"${tbl.location}/metadata/v2.json","metadata":{}}""")
+              if (loseNextCommitResponse.getAndUpdate(n => math.max(0, n - 1)) > 0)
+                reply(ex, 503, """{"error":"response lost"}""")
+              else
+                reply(ex, 200, s"""{"metadata-location":"${tbl.location}/metadata/v2.json","metadata":{}}""")
           }
 
         case _ => reply(ex, 404, s"""{"error":"no route: $method $path"}""")

@@ -188,6 +188,25 @@ class RestCatalogSpec extends SparkSpec {
     }
   }
 
+  test("a commit whose response is lost is not appended twice on retry") {
+    withCatalog { (fake, client) =>
+      client.ensureNamespace("otel")
+      client.ensureTable("otel", "t", Tables.events(spark, sf).limit(1).schema)
+      // the catalog commits the snapshot, then the response is lost:
+      // the retry must find its snapshot and only finish the stand-alone step
+      fake.loseNextCommitResponse.set(1)
+      val snap = client.appendDataFiles("otel", "t",
+        Seq(DataFile("f1", 1, 1), DataFile("f2", 2, 2)))
+      val tbl = fake.tables(("otel", "t"))
+      assert(tbl.snapshots.map(_._1) === Seq(snap.get))
+      assert(fake.requests.count(_ == "POST /v1/demo/namespaces/otel/tables/t") === 1)
+      assert(client.listDataFiles("otel", "t").sorted === Seq("f1", "f2"))
+      val chain = graft.catalog.IcebergTableMetadata.load(
+        spark.sparkContext.hadoopConfiguration, tbl.location).get
+      assert(chain.snapshots.map(_.snapshotId) === Seq(snap.get))
+    }
+  }
+
   test("commit conflict (409) retries optimistically against the new head") {
     withCatalog { (fake, client) =>
       client.ensureNamespace("otel")

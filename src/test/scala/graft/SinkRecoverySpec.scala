@@ -172,6 +172,30 @@ class SinkRecoverySpec extends SparkSpec {
     assert(!back.columns.contains("hour"))
   }
 
+  test("footer bounds: one stat-less row group leaves the column unbounded") {
+    import org.apache.parquet.column.statistics.{LongStatistics, Statistics}
+    import org.apache.parquet.hadoop.metadata.{BlockMetaData, ColumnChunkMetaData,
+      ColumnPath, CompressionCodecName}
+    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
+    import org.apache.parquet.schema.Types
+    val ts = Types.required(PrimitiveTypeName.INT64).named("ts")
+    def rowGroup(values: Long*): BlockMetaData = {
+      val stats = Statistics.createStats(ts).asInstanceOf[LongStatistics]
+      values.foreach(v => stats.updateStats(v))
+      val b = new BlockMetaData()
+      b.setRowCount(values.size.max(1).toLong)
+      b.addColumn(ColumnChunkMetaData.get(ColumnPath.get("ts"), ts,
+        CompressionCodecName.UNCOMPRESSED, null, java.util.Collections.emptySet(),
+        stats, 0L, 0L, b.getRowCount, 0L, 0L))
+      b
+    }
+    val bounds = graft.catalog.DataFiles.columnBounds _
+    assert(bounds(Seq(rowGroup(5, 9), rowGroup(1, 3)), "ts") === Some((1L, 9L)))
+    // the stat-less row group's rows may lie anywhere: (5, 9) would prune them
+    assert(bounds(Seq(rowGroup(5, 9), rowGroup()), "ts") === None)
+    assert(bounds(Seq(rowGroup(5, 9)), "absent") === None)
+  }
+
   test("zone-map file stats skip non-overlapping files in readSlice") {
     val base = tmp()
     val cfg = SinkConfig(base, "events", tsColumn = "ts", granularity = "daily")

@@ -2,51 +2,33 @@ package graft
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.apache.spark.sql.streaming.Trigger
+import graft.StreamingParity.Ev
 
-import graft.streaming.StatefulSessions
-import graft.streaming.StatefulSessions.SessionEvent
-
+/** The hand-built scenario of the retired flatMapGroupsWithState
+  * sessionizer, run against TwsSessions and checked against
+  * tel_sessionize after every micro-batch. */
 class StatefulSessionsSpec extends SparkSpec {
 
   // Base well past epoch 0: an event at exactly the initial watermark
   // (epoch 0) is dropped as late by the stateful operator.
   private val base = 1704067200000L // 2024-01-01T00:00:00Z
   private def ts(minutes: Long): Timestamp = new Timestamp(base + minutes * 60000L)
+  private def ev(id: Long, user: Long, minutes: Long, value: Double): Ev =
+    Ev(id, ts(minutes), user, "view", value)
 
   test("sessions split on in-batch gaps and close via event-time timeout") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[SessionEvent]
-    val sessions = StatefulSessions.sessionize(input.toDS())
-    val q = sessions.writeStream.format("memory").queryName("sessions_out")
-      .outputMode("append").trigger(Trigger.ProcessingTime(0)).start()
-    try {
+    val closed = StreamingParity.sessions(this, Seq(
       // user 1: two bursts separated by > 30 min inside one batch →
-      // first session closes immediately on the in-batch gap.
-      input.addData(
-        SessionEvent(1L, ts(0), 1.0), SessionEvent(1L, ts(5), 2.0),
-        SessionEvent(1L, ts(60), 3.0),
-        SessionEvent(7L, ts(60), 0.0)) // watermark driver
-      q.processAllAvailable()
-      val afterBatch1 = spark.sql("select * from sessions_out").as[StatefulSessions.ClosedSession].collect()
-      assert(afterBatch1.length === 1)
-      assert(afterBatch1(0).user_id === 1L)
-      assert(afterBatch1(0).n_events === 2L)
-      assert(afterBatch1(0).sum_value === 3.0)
-
-      // advance the watermark far past user 1's open tail (+ gap) →
-      // its state times out and the second session closes.
-      input.addData(SessionEvent(7L, ts(300), 0.0))
-      q.processAllAvailable()
-      input.addData(SessionEvent(7L, ts(600), 0.0))
-      q.processAllAvailable()
-      val all = spark.sql("select * from sessions_out").as[StatefulSessions.ClosedSession].collect()
-      val user1 = all.filter(_.user_id == 1L).sortBy(_.session_start.getTime)
-      assert(user1.length === 2)
-      assert(user1(1).n_events === 1L)
-      assert(user1(1).session_start === ts(60))
-    } finally q.stop()
+      // first session closes immediately on the in-batch gap; user 7
+      // drives the watermark
+      Seq(ev(1, 1L, 0, 1.0), ev(2, 1L, 5, 2.0), ev(3, 1L, 60, 3.0),
+          ev(4, 7L, 60, 0.0)),
+      // the watermark passes user 1's open tail + gap → its timer
+      // closes the second session
+      Seq(ev(5, 7L, 300, 0.0)),
+      Seq(ev(6, 7L, 600, 0.0))))
+    val user1 = closed.filter(_.user_id == 1L).sortBy(_.session_start.getTime)
+    assert(user1.map(s => (s.n_events, s.sum_value)) === Seq((2L, 3.0), (1L, 3.0)))
+    assert(user1(1).session_start === ts(60))
   }
 }

@@ -1,70 +1,22 @@
 package graft
 
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.apache.spark.sql.streaming.Trigger
-
-import graft.streaming.StreamingAbTest
-import graft.streaming.StreamingAbTest.{Ev, Read}
-import graft.telemetry.Telemetry
-
 /** Streaming A/B: integer sufficient statistics make the streamed
-  * read-out IDENTICAL to the batch Welch query after full replay —
-  * regardless of batch cuts or arrival order. */
+  * read-out IDENTICAL to the batch Welch query over every prefix,
+  * whatever the arrival order. */
 class StreamingAbTestSpec extends SparkSpec {
-
-  private def withRocksDb(f: => Unit): Unit = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try f
-    finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
-  }
 
   test("streamed read-out equals the batch Welch t-test after replay") {
     import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    // the batch query's own arm/v100 derivation, collected as the feed
+    // adversarial order: all of one arm first, then the other (the
+    // batch query's own arm/v100 derivation decides the order)
     val events = Tables.events(spark, sf)
-      .selectExpr("event_type",
-        "CAST(CAST(conv(substring(md5(CAST(user_id AS STRING)), 1, 15), 16, 10)" +
-          " AS LONG) % 2 AS INT) AS arm",
+      .selectExpr("event_id", "ts", "user_id", "event_type", "value",
+        "CAST(conv(substring(md5(CAST(user_id AS STRING)), 1, 15), 16, 10)" +
+          " AS LONG) % 2 AS arm",
         "greatest(CAST(round(value * 100) AS LONG), 1L) AS v100")
-      .as[Ev].collect()
-    // adversarial order: all of arm B first, then arm A
-    val shuffled = events.sortBy(e => (e.arm, e.v100))
-    val half = shuffled.length / 2
-    val batches = Seq(shuffled.take(half), shuffled.drop(half))
-    val want = Telemetry.abTest(spark, sf).collect().map { r =>
-      r.getAs[String]("event_type") -> ((r.getAs[Long]("n_a"),
-        r.getAs[Long]("n_b"), r.getAs[Double]("mean_a"),
-        r.getAs[Double]("mean_b"), r.getAs[Double]("t_stat"),
-        r.getAs[Boolean]("significant")))
-    }.toMap
-    withRocksDb {
-      val input = MemoryStream[Ev]
-      val q = StreamingAbTest.reads(input.toDS())
-        .writeStream.format("memory").queryName("ab_out")
-        .outputMode("update").trigger(Trigger.ProcessingTime(0)).start()
-      try {
-        batches.foreach { b =>
-          input.addData(b.toIndexedSeq)
-          q.processAllAvailable()
-        }
-        val got = spark.sql(
-          "select * from (select *, row_number() over " +
-          "(partition by event_type order by n_a + n_b desc) rn from ab_out) " +
-          "where rn = 1")
-          .drop("rn").as[Read].collect()
-          .map(r => r.event_type ->
-            ((r.n_a, r.n_b, r.mean_a, r.mean_b, r.t_stat, r.significant)))
-          .toMap
-        assert(got === want)
-        assert(got.nonEmpty)
-      } finally q.stop()
-    }
+      .orderBy("arm", "v100", "event_id")
+      .drop("arm", "v100").as[StreamingParity.Ev].collect().toSeq
+    val batches = events.grouped((events.size + 1) / 2).toSeq
+    assert(StreamingParity.abTest(this, batches).nonEmpty)
   }
 }

@@ -12,18 +12,6 @@ import graft.streaming.StreamingAudioDedup.{Clip, DupEdge}
   * stream and batch share the decode + energy-delta kernel verbatim. */
 class StreamingAudioDedupSpec extends SparkSpec {
 
-  private def withRocksDb(f: => Unit): Unit = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try f
-    finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
-  }
-
   test("streamed clips reproduce the batch band-collision structure") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext

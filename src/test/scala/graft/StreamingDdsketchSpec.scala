@@ -13,18 +13,6 @@ import graft.telemetry.Telemetry
   * split points and arrival order cannot matter. */
 class StreamingDdsketchSpec extends SparkSpec {
 
-  private def withRocksDb(f: => Unit): Unit = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try f
-    finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
-  }
-
   test("streamed sketches equal the batch ddsketch after full replay") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext

@@ -11,18 +11,6 @@ import graft.streaming.StreamingDedup.{Doc, Kept}
   * agreement with the batch dedup_exact semantics. */
 class StreamingDedupSpec extends SparkSpec {
 
-  private def withRocksDb(f: => Unit): Unit = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try f
-    finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
-  }
-
   test("first-seen wins within and across batches; duplicates never re-emit") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
@@ -89,29 +77,6 @@ class StreamingDedupSpec extends SparkSpec {
   }
 
   test("streaming keep-set equals the batch dedup_exact canonical set") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    withRocksDb {
-      // random docs with forced duplicate content, split over 3 batches
-      val texts = (0 until 40).map(i => s"doc content ${i % 17}")
-      val docs = texts.zipWithIndex.map { case (t, i) => Doc(i.toLong, t) }
-      val input = MemoryStream[Doc]
-      val q = StreamingDedup.dedupStream(input.toDS())
-        .writeStream.format("memory").queryName("dedup_parity")
-        .outputMode("append").trigger(Trigger.ProcessingTime(0)).start()
-      try {
-        docs.grouped(15).foreach { g =>
-          input.addData(g: _*); q.processAllAvailable()
-        }
-        val streamed = spark.sql("select * from dedup_parity").as[Kept]
-          .collect().map(k => k.content_md5 -> k.doc_id).toMap
-        // batch twin: smallest doc_id per content hash — but ACROSS
-        // batches the stream pins the first batch's winner, which here
-        // is also the global minimum because ids arrive in order
-        val expected = docs.groupBy(d => StreamingDedup.md5Hex(d.text))
-          .map { case (h, ds) => h -> ds.map(_.doc_id).min }
-        assert(streamed === expected)
-      } finally q.stop()
-    }
+    StreamingParity.check(this, "StreamingDedup")
   }
 }

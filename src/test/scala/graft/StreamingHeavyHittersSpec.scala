@@ -12,18 +12,6 @@ import graft.streaming.StreamingHeavyHitters.{Ev, HH}
   * the stream. */
 class StreamingHeavyHittersSpec extends SparkSpec {
 
-  private def withRocksDb(f: => Unit): Unit = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try f
-    finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
-  }
-
   private val K = 16
 
   test("streamed MG equals a serial replay and keeps every true hitter") {

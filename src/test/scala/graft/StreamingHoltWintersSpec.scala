@@ -5,72 +5,14 @@ import org.apache.spark.sql.streaming.Trigger
 
 import graft.streaming.StreamingHoltWinters
 import graft.streaming.StreamingHoltWinters.{Ev, Forecast}
-import graft.telemetry.Telemetry
 
 /** Streaming Holt-Winters: the incrementally-maintained (level, trend,
   * seasonals) state must be bit-identical to the batch fold over the
   * same closed hours when the corpus replays chronologically. */
 class StreamingHoltWintersSpec extends SparkSpec {
 
-  private def withRocksDb(f: => Unit): Unit = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try f
-    finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
-  }
-
   test("streamed hourly closes reproduce the batch Holt-Winters state exactly") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val events = Tables.events(spark, sf)
-      .selectExpr("event_type", "unix_micros(ts) as ts")
-      .as[Ev].collect().sortBy(_.ts)
-    val h0 = Math.floorDiv(events.head.ts, 3600000000L)
-    val h1 = Math.floorDiv(events.last.ts, 3600000000L)
-    // sentinel per series one hour past the grid: closes h1 so the
-    // stream has folded exactly the batch grid h0..h1 (the sentinel's
-    // own hour stays open and never folds)
-    val sentinels = events.map(_.event_type).distinct
-      .map(et => Ev(et, (h1 + 1) * 3600000000L))
-    val half = events.length / 2
-    val batches: Seq[Array[Ev]] =
-      Seq(events.take(half), events.drop(half), sentinels)
-    val want = Telemetry.holtWinters(spark, sf).collect().map { r =>
-      r.getAs[String]("event_type") ->
-        (r.getAs[Long]("n"), r.getAs[Double]("level"),
-         r.getAs[Double]("trend"), r.getAs[Double]("s_next"),
-         r.getAs[Double]("forecast"))
-    }.toMap
-    withRocksDb {
-      val input = MemoryStream[Ev]
-      val q = StreamingHoltWinters.forecasts(input.toDS(), 24, h0)
-        .writeStream.format("memory").queryName("hw_out")
-        .outputMode("update").trigger(Trigger.ProcessingTime(0)).start()
-      try {
-        batches.foreach { b =>
-          input.addData(b.toIndexedSeq)
-          q.processAllAvailable()
-        }
-        val round6 = (x: Double) =>
-          BigDecimal(x).setScale(6,
-            scala.math.BigDecimal.RoundingMode.HALF_UP).toDouble
-        val got = spark.sql(
-          "select * from (select *, row_number() over " +
-          "(partition by event_type order by n_hours desc) rn from hw_out) " +
-          "where rn = 1")
-          .drop("rn").as[Forecast].collect()
-          .map(f => f.event_type ->
-            (f.n_hours, round6(f.level), round6(f.trend), round6(f.s_next),
-             round6(f.forecast)))
-          .toMap
-        assert(got === want)
-      } finally q.stop()
-    }
+    StreamingParity.check(this, "StreamingHoltWinters")
   }
 
   test("gap hours close as zero: sparse series match a dense-fold replica") {

@@ -11,18 +11,6 @@ import graft.streaming.StreamingNearDup.{Doc, DupEdge}
   * stream and batch share the same shingle/permutation/band kernel. */
 class StreamingNearDupSpec extends SparkSpec {
 
-  private def withRocksDb(f: => Unit): Unit = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try f
-    finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
-  }
-
   test("streamed corpus reproduces the batch band-collision edges exactly") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext

@@ -12,18 +12,6 @@ import graft.streaming.StreamingPsiDrift.{Drift, Ev}
   * shifts — the semantic contract a drift detector exists for. */
 class StreamingPsiDriftSpec extends SparkSpec {
 
-  private def withRocksDb(f: => Unit): Unit = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try f
-    finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
-  }
-
   test("streamed PSI equals a from-scratch fold; shifted stream alarms") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext

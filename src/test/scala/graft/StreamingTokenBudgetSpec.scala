@@ -1,113 +1,12 @@
 package graft
 
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
-
-import graft.streaming.StreamingTokenBudget
-import graft.streaming.StreamingTokenBudget.{Doc, Verdict}
-
 /** Streaming token-budget gate: fed in the batch op's md5 order it
-  * reproduces the batch selection exactly; state carries the running
-  * total across micro-batch cuts; admission stops at the budget. */
+  * reproduces the batch selection after every micro-batch, and every
+  * verdict obeys the straddler rule. */
 class StreamingTokenBudgetSpec extends SparkSpec {
-
-  private def withRocksDb(f: => Unit): Unit = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try f
-    finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
-  }
-
-  private val Budget = 800L
-
-  /** Corpus in the batch op's (md5(doc_id), doc_id) order, with the
-    * same whitespace token count. */
-  private def orderedDocs(): Array[Doc] = {
-    import spark.implicits._
-    Tables.documents(spark, sf)
-      .select($"doc_id", $"source",
-        size(split(trim($"text"), "\\s+")).cast("long").as("n_tok"),
-        md5($"doc_id".cast("string")).as("h"))
-      .orderBy($"h", $"doc_id")
-      .as[(Long, String, Long, String)].collect()
-      .map(r => Doc(r._1, r._2, r._3))
-  }
-
-  private def runGate(batches: Seq[Array[Doc]], name: String): Array[Verdict] = {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[Doc]
-    val q = StreamingTokenBudget.gate(input.toDS(), Budget)
-      .writeStream.format("memory").queryName(name)
-      .outputMode("append").trigger(Trigger.ProcessingTime(0)).start()
-    try {
-      batches.foreach { b =>
-        input.addData(b.toIndexedSeq)
-        q.processAllAvailable()
-      }
-      spark.table(name).as[Verdict].collect()
-    } finally q.stop()
-  }
 
   test("md5-ordered single batch reproduces the batch op's selection; " +
       "cuts don't change admissions; budget rule holds per verdict") {
-    import spark.implicits._
-    val docs = orderedDocs()
-    withRocksDb {
-      val one = runGate(Seq(docs), "tb_one")
-      // batch-op equivalence: same kept docs, same kept token mass.
-      // BUT the stream folds per-source in doc_id order within the
-      // batch while the batch op uses md5 order — feed per-source
-      // md5-ordered slices as separate batches so within-batch doc_id
-      // sorting can't reorder them: one doc per batch is the fully
-      // order-pinned feed.
-      val perDoc = runGate(docs.map(Array(_)).toSeq, "tb_perdoc")
-      val batchOp = graft.llm.TextOps.tokenBudget(spark, sf, Budget)
-        .select($"source", $"n_kept", $"tokens_kept")
-        .as[(String, Long, Long)].collect()
-        .map(r => r._1 -> ((r._2, r._3))).toMap
-      val streamed = perDoc.groupBy(_.source).map { case (src, vs) =>
-        src -> ((vs.count(_.admitted).toLong,
-          vs.filter(_.admitted).map(_.n_tok).sum))
-      }
-      assert(streamed === batchOp,
-        "md5-order feed must reproduce the batch selection")
-      // cut-invariance under order-preserving batching: the single
-      // batch folds each source's rows in doc_id order; 3 doc_id-
-      // ordered batches must admit identically
-      val byId = docs.sortBy(_.doc_id)
-      val third = byId.length / 3
-      val cuts = Seq(byId.take(third), byId.slice(third, 2 * third),
-        byId.drop(2 * third))
-      val a = runGate(Seq(byId), "tb_a").sortBy(_.doc_id)
-      val b = runGate(cuts, "tb_b").sortBy(_.doc_id)
-      assert(a.length === byId.length && b.length === byId.length)
-      assert(a.map(v => (v.doc_id, v.admitted, v.tok_before, v.tok_after))
-        .toSeq === b.map(v => (v.doc_id, v.admitted, v.tok_before,
-          v.tok_after)).toSeq,
-        "batch cuts changed admissions despite identical fold order")
-      // the admission rule, row by row: admitted iff before < budget;
-      // totals chain; nothing admitted after the budget filled
-      Seq(one, a, b).foreach { vs =>
-        vs.groupBy(_.source).foreach { case (src, rows) =>
-          val seq = rows.sortBy(v => (v.tok_before, v.doc_id))
-          seq.foreach { v =>
-            assert(v.admitted === (v.tok_before < Budget), s"$src $v")
-            assert(v.tok_after ===
-              (if (v.admitted) v.tok_before + v.n_tok else v.tok_before))
-          }
-          val admitted = seq.filter(_.admitted)
-          assert(admitted.nonEmpty, s"$src: first doc always admitted")
-          assert(admitted.map(_.n_tok).sum >=
-            math.min(Budget, seq.map(_.n_tok).sum))
-        }
-      }
-    }
+    StreamingParity.check(this, "StreamingTokenBudget")
   }
 }

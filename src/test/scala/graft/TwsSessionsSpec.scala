@@ -5,11 +5,10 @@ import java.sql.Timestamp
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.Trigger
 
-import graft.streaming.{StatefulSessions, TwsSessions}
-import graft.streaming.StatefulSessions.{ClosedSession, SessionEvent}
+import graft.streaming.TwsSessions
+import graft.streaming.TwsSessions.{ClosedSession, SessionEvent}
 
-/** The transformWithState sessionizer must reproduce the
-  * flatMapGroupsWithState twin's semantics: in-batch gap splits,
+/** The transformWithState sessionizer: in-batch gap splits,
   * timer-driven closes on watermark, stale-timer safety. */
 class TwsSessionsSpec extends SparkSpec {
 
@@ -19,88 +18,51 @@ class TwsSessionsSpec extends SparkSpec {
   test("tws sessions: in-batch gap split, timer close, timer re-arm") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val input = MemoryStream[SessionEvent]
-    val q = TwsSessions.sessionize(input.toDS())
-      .writeStream.format("memory").queryName("tws_sessions_out")
-      .outputMode("append").trigger(Trigger.ProcessingTime(0)).start()
-    def got(): Seq[ClosedSession] =
-      spark.sql("select * from tws_sessions_out").as[ClosedSession].collect().toSeq
-    try {
-      // in-batch gap: burst, >30min hole, second burst → first closes now
-      input.addData(
-        SessionEvent(1L, ts(0), 1.0), SessionEvent(1L, ts(5), 2.0),
-        SessionEvent(1L, ts(60), 3.0),
-        SessionEvent(7L, ts(60), 0.0)) // watermark driver
-      q.processAllAvailable()
-      assert(got().count(_.user_id == 1L) === 1)
-      assert(got().find(_.user_id == 1L).get.n_events === 2L)
+    withRocksDb {
+      val input = MemoryStream[SessionEvent]
+      val q = TwsSessions.sessionize(input.toDS())
+        .writeStream.format("memory").queryName("tws_sessions_out")
+        .outputMode("append").trigger(Trigger.ProcessingTime(0)).start()
+      def got(): Seq[ClosedSession] =
+        spark.sql("select * from tws_sessions_out").as[ClosedSession].collect().toSeq
+      try {
+        // in-batch gap: burst, >30min hole, second burst → first closes now
+        input.addData(
+          SessionEvent(1L, ts(0), 1.0), SessionEvent(1L, ts(5), 2.0),
+          SessionEvent(1L, ts(60), 3.0),
+          SessionEvent(7L, ts(60), 0.0)) // watermark driver
+        q.processAllAvailable()
+        assert(got().count(_.user_id == 1L) === 1)
+        assert(got().find(_.user_id == 1L).get.n_events === 2L)
 
-      // user 1 extends its open session BEFORE the old timer fires —
-      // the re-armed timer must supersede (no premature close)
-      input.addData(SessionEvent(1L, ts(80), 4.0),
-                    SessionEvent(7L, ts(85), 0.0))
-      q.processAllAvailable()
-      assert(got().count(_.user_id == 1L) === 1)
+        // user 1 extends its open session BEFORE the old timer fires —
+        // the re-armed timer must supersede (no premature close)
+        input.addData(SessionEvent(1L, ts(80), 4.0),
+                      SessionEvent(7L, ts(85), 0.0))
+        q.processAllAvailable()
+        assert(got().count(_.user_id == 1L) === 1)
 
-      // watermark sails past last + gap → timer fires, session closes
-      input.addData(SessionEvent(7L, ts(300), 0.0))
-      q.processAllAvailable()
-      input.addData(SessionEvent(7L, ts(600), 0.0))
-      q.processAllAvailable()
-      val u1 = got().filter(_.user_id == 1L).sortBy(_.session_start.getTime)
-      assert(u1.length === 2)
-      assert(u1(1).session_start === ts(60))
-      assert(u1(1).session_end === ts(80))
-      assert(u1(1).n_events === 2L)
-      assert(u1(1).sum_value === 7.0)
-    } finally {
-      q.stop()
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None    => spark.conf.unset(key)
-      }
+        // watermark sails past last + gap → timer fires, session closes
+        input.addData(SessionEvent(7L, ts(300), 0.0))
+        q.processAllAvailable()
+        input.addData(SessionEvent(7L, ts(600), 0.0))
+        q.processAllAvailable()
+        val u1 = got().filter(_.user_id == 1L).sortBy(_.session_start.getTime)
+        assert(u1.length === 2)
+        assert(u1(1).session_start === ts(60))
+        assert(u1(1).session_end === ts(80))
+        assert(u1(1).n_events === 2L)
+        assert(u1(1).sum_value === 7.0)
+      } finally q.stop()
     }
   }
 
   test("tws and fmgws sessionizers agree on a replayed stream") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    // the flatMapGroupsWithState twin is retired: the replayed stream
+    // answers to the batch reference, tel_sessionize, after every batch
     val events = (0 until 120).map { i =>
-      SessionEvent((i % 5).toLong, ts(i * 7L), i.toDouble)
-    } :+ SessionEvent(99L, ts(3000), 0.0) // final watermark driver
-    def run(f: org.apache.spark.sql.Dataset[SessionEvent] =>
-              org.apache.spark.sql.Dataset[ClosedSession],
-            name: String): Set[(Long, Long, Long, Long, Double)] = {
-      val in = MemoryStream[SessionEvent]
-      val q = f(in.toDS()).writeStream.format("memory").queryName(name)
-        .outputMode("append").trigger(Trigger.ProcessingTime(0)).start()
-      try {
-        events.grouped(30).foreach { batch =>
-          in.addData(batch: _*); q.processAllAvailable()
-        }
-      } finally q.stop()
-      spark.sql(s"select * from $name").as[ClosedSession].collect()
-        .map(s => (s.user_id, s.session_start.getTime, s.session_end.getTime,
-          s.n_events, s.sum_value)).toSet
-    }
-    try {
-      val tws = run(TwsSessions.sessionize(_), "agree_tws")
-      val fmg = run(StatefulSessions.sessionize(_), "agree_fmg")
-      assert(tws === fmg)
-      assert(tws.nonEmpty)
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None    => spark.conf.unset(key)
-      }
-    }
+      StreamingParity.Ev(i.toLong, ts(i * 7L), (i % 5).toLong, "view", i.toDouble)
+    } :+ StreamingParity.Ev(120L, ts(3000), 99L, "view", 0.0) // final watermark driver
+    assert(StreamingParity.sessions(this, events.grouped(30).toSeq).nonEmpty)
   }
 }
