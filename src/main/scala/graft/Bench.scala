@@ -28,7 +28,8 @@ object Bench {
     spark.sparkContext.setLogLevel("WARN")
 
     // Warm-up: JIT/codegen paths + parquet footers, untimed. `events`
-    // needs the nanos-ts legacy conf, so it only warms via Tables.events.
+    // needs the nanos-ts legacy conf, so it only warms via Tables.events
+    // (which leaves that conf set: scans re-read it at execution time).
     spark.range(1000000).selectExpr("sum(id)").collect()
     Tables.all.filterNot(_ == "events").foreach { t =>
       try Tables.load(spark, sfDir, t).count() catch { case _: Throwable => () }

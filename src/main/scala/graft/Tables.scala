@@ -47,7 +47,15 @@ object Tables {
   def lineitem(s: SparkSession, d: String): DataFrame  = load(s, d, "lineitem")
   /** `events.ts` is parquet TIMESTAMP(NANOS), which Spark's vectorized
     * reader rejects. We read it as a raw long (legacy conf) and truncate
-    * to microseconds — Spark's native timestamp precision. */
+    * to microseconds — Spark's native timestamp precision.
+    *
+    * Unlike [[load]]'s conf, `spark.sql.legacy.parquet.nanosAsLong`
+    * stays set on the session: Spark 4.1 reads it again at SCAN time
+    * (`ParquetFileFormat.setupHadoopConf`, called from
+    * `buildReaderWithPartitionValues`), not only when the schema is
+    * inferred, so restoring it after the read would break every later
+    * scan of the returned frame. Later TIMESTAMP(NANOS) reads in the
+    * same session therefore also see raw longs. */
   def events(s: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.functions._
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.catalog.IcebergTableReader.{DeleteEntry, FileEntry}
 import graft.catalog.RestCatalogClient.DataFile
-import graft.functions.GraftFunctions
+import graft.functions.GraftFunctions.{bottomKDistinct, icebergBucket}
 
 /** High-level Iceberg v2 table MAINTENANCE over the catalog-free
   * chain — the user-facing verbs a curated 100 TB corpus needs on top
@@ -823,7 +823,6 @@ object IcebergMaintenance {
     require(columns.nonEmpty, "writeNdvIndex needs at least one column")
     require(k >= 16, s"k=$k too small for a meaningful estimate")
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     val meta = tableMeta(spark, tableDir)
     val snapId = meta.currentSnapshotId.getOrElse(
       throw new IllegalArgumentException(
@@ -834,8 +833,7 @@ object IcebergMaintenance {
       // bit-identical to distinct().orderBy(h).limit(k): the aggregate
       // keeps the k smallest distinct signed hashes, already sorted
       val hashes = live.where(col(c).isNotNull)
-        .agg(call_function("bottomk_distinct",
-          xxhash64(col(c)), lit(k)).as("ks"))
+        .agg(bottomKDistinct(xxhash64(col(c)), k).as("ks"))
         .select(explode($"ks").as("h"))
         .as[Long].collect()
       val bos = new java.io.ByteArrayOutputStream()
@@ -867,9 +865,7 @@ object IcebergMaintenance {
       case other => throw new UnsupportedOperationException(
         s"bucket clustering on $column: $other (supported: long, int, string)")
     }
-    GraftFunctions.register(df.sparkSession)
-    df.withColumn("__bucket",
-        call_function("iceberg_bucket", lit(nBuckets), col(column)))
+    df.withColumn("__bucket", icebergBucket(nBuckets, col(column)))
       .repartition(col("__bucket"))
   }
 

@@ -53,7 +53,7 @@ object IcebergSqlDemo {
   /** Per-type aggregate over the merge-on-read chain, via plain SQL
     * through the [[IcebergTvf]] table function. */
   def query(spark: SparkSession, sfDir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
+    graft.functions.GraftFunctions.register(spark) // arms the graft_iceberg TVF for the SQL text
     val loc = ensureChain(spark, sfDir)
     spark.sql(
       s"""SELECT event_type, CAST(count(*) AS BIGINT) AS n_events,
@@ -231,7 +231,7 @@ object IcebergSqlDemo {
     * anti-join → strictly-below semantics (the re-inserted `error`
     * row surviving) against the independent engine. */
   def eqdelQuery(spark: SparkSession, sfDir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
+    graft.functions.GraftFunctions.register(spark) // arms the graft_iceberg TVF for the SQL text
     val loc = ensureEqChain(spark, sfDir)
     spark.sql(
       s"""SELECT event_type, CAST(count(*) AS BIGINT) AS n_events,
@@ -247,7 +247,7 @@ object IcebergSqlDemo {
     * the whole chain: the delete that [[query]] sees must NOT leak
     * into the older snapshot's read. */
   def timeTravelQuery(spark: SparkSession, sfDir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
+    graft.functions.GraftFunctions.register(spark) // arms the graft_iceberg TVF for the SQL text
     val loc = ensureChain(spark, sfDir)
     val first = IcebergTableReader.metadata(spark, loc)
       .snapshots.minBy(_.sequenceNumber).snapshotId

@@ -118,8 +118,8 @@ object IcebergTvf {
   val all = Seq(readDescriptor, filesDescriptor, snapshotsDescriptor,
     pointDescriptor, ndvDescriptor)
 
-  /** Post-construction registration for driver-owned sessions (the
-    * [[graft.functions.GraftFunctions.register]] path). */
+  /** Post-construction registration for driver-owned sessions; called
+    * by [[graft.functions.GraftFunctions.register]]. */
   def register(spark: SparkSession): Unit =
     all.foreach { case (id, info, builder) =>
       spark.sessionState.tableFunctionRegistry

@@ -1,9 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
@@ -77,127 +75,4 @@ case class CosineSim(left: Expression, right: Expression)
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): CosineSim =
     copy(left = newLeft, right = newRight)
-}
-
-/** Registration for driver-created sessions (idempotent). With
-  * session-construction control, the same builder can be injected via
-  * `SparkSessionExtensions.injectFunction` instead. */
-object GraftFunctions {
-  val cosineSimDescriptor: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("cosine_sim"),
-    new ExpressionInfo(classOf[CosineSim].getName, "cosine_sim"),
-    (children: Seq[Expression]) => CosineSim(children(0), children(1)))
-
-  val bottomKDescriptor: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("bottomk_by_hash"),
-    new ExpressionInfo(classOf[BottomKByHash].getName, "bottomk_by_hash"),
-    (children: Seq[Expression]) => BottomKByHash(
-      children(0),
-      children(1).eval(null).asInstanceOf[Number].intValue)
-      .toAggregateExpression())
-
-  val bottomKDistinctDescriptor: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("bottomk_distinct"),
-    new ExpressionInfo(classOf[BottomKDistinct].getName, "bottomk_distinct"),
-    (children: Seq[Expression]) => BottomKDistinct(
-      children(0),
-      children(1).eval(null).asInstanceOf[Number].intValue)
-      .toAggregateExpression())
-
-  val topKDescriptor: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("top_k_structs"),
-    new ExpressionInfo(classOf[TopKStructs].getName, "top_k_structs"),
-    // top_k_structs(struct, k[, ascending_array[, nulls_first_array]]):
-    // with directions given, only the leading |ascending| fields are
-    // compared — the rest is payload (may be unorderable, e.g. maps)
-    (children: Seq[Expression]) => {
-      def boolSeq(e: Expression): Seq[Boolean] =
-        e.eval(null).asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
-          .toBooleanArray().toSeq
-      val asc = if (children.length > 2) boolSeq(children(2)) else Nil
-      val nf  = if (children.length > 3) boolSeq(children(3)) else asc.map(_ => false)
-      TopKStructs(
-        children(0),
-        children(1).eval(null).asInstanceOf[Number].intValue,
-        ascending = asc, nullsFirst = nf)
-        .toAggregateExpression()
-    })
-
-  val frequentItemsDescriptor: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("frequent_items"),
-    new ExpressionInfo(classOf[FrequentItems].getName, "frequent_items"),
-    (children: Seq[Expression]) => FrequentItems(
-      children(0),
-      children(1).eval(null).asInstanceOf[Number].intValue)
-      .toAggregateExpression())
-
-  val hilbertDescriptor: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("hilbert_index"),
-    new ExpressionInfo(classOf[graft.sink.HilbertIndex].getName, "hilbert_index"),
-    (children: Seq[Expression]) =>
-      graft.sink.HilbertIndex(children(0), children(1)))
-
-  val bagBoundDescriptor: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("bag_bound"),
-    new ExpressionInfo(classOf[BagBound].getName, "bag_bound"),
-    (children: Seq[Expression]) => BagBound(children(0), children(1)))
-
-  val sortedIntersectDescriptor: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("sorted_intersect_count"),
-    new ExpressionInfo(classOf[SortedIntersectCount].getName,
-      "sorted_intersect_count"),
-    (children: Seq[Expression]) => SortedIntersectCount(children(0), children(1)))
-
-  val icebergBucketDescriptor: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("iceberg_bucket"),
-    new ExpressionInfo(classOf[IcebergBucket].getName, "iceberg_bucket"),
-    // iceberg_bucket(n, col): n is a foldable bucket count
-    (children: Seq[Expression]) => IcebergBucket(
-      children(0).eval(null).asInstanceOf[Number].intValue,
-      children(1)))
-
-  val ddsketchDescriptor: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("ddsketch_agg"),
-    new ExpressionInfo(classOf[DdsketchAgg].getName, "ddsketch_agg"),
-    (children: Seq[Expression]) => DdsketchAgg(
-      children(0),
-      children(1).eval(null).asInstanceOf[Number].intValue)
-      .toAggregateExpression())
-
-  /** Every native function graft registers, for [[register]] and for
-    * [[GraftExtensions]] alike. */
-  val descriptors: Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] =
-    Seq(cosineSimDescriptor, bottomKDescriptor, bottomKDistinctDescriptor,
-      topKDescriptor, frequentItemsDescriptor, hilbertDescriptor,
-      bagBoundDescriptor, sortedIntersectDescriptor, ddsketchDescriptor,
-      icebergBucketDescriptor)
-
-  def register(spark: SparkSession): Unit = {
-    // JVM-GLOBAL: in-memory ImageIO streams for the media kernels (the
-    // default cache writes+unlinks a temp FILE per encode/decode call).
-    // Declared here — the engine's explicit init path — so the driver
-    // opts in visibly; ImageOps' object initializer sets the same flag
-    // when it first loads on an EXECUTOR, which the session-init call
-    // cannot reach on a real cluster.
-    javax.imageio.ImageIO.setUseCache(false)
-    descriptors.foreach { case (id, info, builder) =>
-      spark.sessionState.functionRegistry.registerFunction(id, info, builder)
-    }
-    // optimizer rewrites (conf-gated, default off) — idempotent add
-    Seq(graft.plans.TopKWindowRewrite, graft.plans.ApproxDistinctRewrite,
-        graft.plans.RangeJoinRewrite, graft.plans.RollupRewrite)
-      .foreach { rule =>
-        if (!spark.experimental.extraOptimizations.contains(rule)) {
-          spark.experimental.extraOptimizations =
-            spark.experimental.extraOptimizations :+ rule
-        }
-      }
-    // Iceberg-chain table functions (idempotent: re-register overwrites)
-    graft.catalog.IcebergTvf.register(spark)
-    // planner strategy for the native as-of join (idempotent add)
-    if (!spark.experimental.extraStrategies.contains(graft.plans.AsOfJoinStrategy)) {
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ graft.plans.AsOfJoinStrategy
-    }
-  }
 }

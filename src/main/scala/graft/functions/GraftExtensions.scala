@@ -4,16 +4,16 @@ import org.apache.spark.sql.SparkSessionExtensions
 
 /** SparkSessionExtensions entry point, for sessions built with
   * `.config("spark.sql.extensions", "graft.functions.GraftExtensions")`
-  * — registers graft's native expressions at session construction.
-  * Driver-owned sessions use [[GraftFunctions.register]] instead. */
+  * — injects at session construction the same SQL-text functions, table
+  * functions, optimizer rules and strategies that
+  * [[GraftFunctions.register]] adds to a driver-owned session.
+  * DataFrame code needs neither: it uses the typed builders on
+  * [[GraftFunctions]]. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     GraftFunctions.descriptors.foreach(ext.injectFunction)
-    ext.injectOptimizerRule(_ => graft.plans.TopKWindowRewrite)
-    ext.injectOptimizerRule(_ => graft.plans.ApproxDistinctRewrite)
-    ext.injectOptimizerRule(_ => graft.plans.RangeJoinRewrite)
-    ext.injectOptimizerRule(_ => graft.plans.RollupRewrite)
-    ext.injectPlannerStrategy(_ => graft.plans.AsOfJoinStrategy)
+    GraftFunctions.optimizerRules.foreach(rule => ext.injectOptimizerRule(_ => rule))
+    GraftFunctions.strategies.foreach(strategy => ext.injectPlannerStrategy(_ => strategy))
     graft.catalog.IcebergTvf.all.foreach(ext.injectTableFunction)
   }
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.functions.GraftFunctions.sortedIntersectCount
 
 /** CROSS-MODAL caption↔image operators (r12): the image family
   * ([[ImageOps]], really-decoded PNG pixels) and the text family
@@ -103,7 +104,6 @@ object CrossModal {
   def jointPairs(spark: SparkSession, sfDir: String,
                  tau: Int = 3, jaccMicro: Long = 200000L): DataFrame = {
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     val pairs = ImageOps.imgAhashPairs(spark, sfDir, tau)
       .select($"doc_a", $"doc_b", $"hamming")
     val sh = Dedup.shingles(spark, sfDir).toDF()
@@ -113,9 +113,7 @@ object CrossModal {
         $"n_sh".as("na")), "doc_a")
       .join(sh.select($"doc_id".as("doc_b"), $"sh".as("sh_b"),
         $"n_sh".as("nb")), "doc_b")
-      .withColumn("inter",
-        call_function("sorted_intersect_count", $"sh_a", $"sh_b")
-          .cast("long"))
+      .withColumn("inter", sortedIntersectCount($"sh_a", $"sh_b").cast("long"))
       // exact integer division on both engines (Spark `div`, DuckDB //)
       .withColumn("jacc_micro",
         expr("1000000 * inter div (na + nb - inter)"))

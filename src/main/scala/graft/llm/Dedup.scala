@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
-import graft.functions.GraftFunctions
+import graft.functions.GraftFunctions.{bagBound, cosineSim, sortedIntersectCount}
 
 /** Near-duplicate detection for training-data pipelines (SURVEY.md §2.3):
   * MinHash+LSH, SimHash, and exact n-gram Jaccard.
@@ -162,12 +162,10 @@ object Dedup {
       .select($"doc_a", $"doc_b").distinct()
     val shA = docs.select($"doc_id".as("doc_a"), $"sh".as("sh_a"))
     val shB = docs.select($"doc_id".as("doc_b"), $"sh".as("sh_b"))
-    GraftFunctions.register(spark)
     candidates.join(shA, "doc_a").join(shB, "doc_b")
       // shingle arrays are sorted at the source → codegen'd two-pointer
       // intersect; |A∪B| = |A|+|B|−|A∩B| (arrays are distinct)
-      .withColumn("inter",
-        call_function("sorted_intersect_count", $"sh_a", $"sh_b"))
+      .withColumn("inter", sortedIntersectCount($"sh_a", $"sh_b"))
       .withColumn("jaccard", round(
         $"inter" / (size($"sh_a") + size($"sh_b") - $"inter"), 4))
       .filter($"jaccard" >= threshold)
@@ -261,14 +259,13 @@ object Dedup {
   def embeddingCosine(spark: SparkSession, sfDir: String,
                       threshold: Double = 0.35): DataFrame = {
     import spark.implicits._
-    GraftFunctions.register(spark)
     val emb = Tables.embeddings(spark, sfDir)
       .select($"vec_id", $"label",
               $"embedding".cast("array<double>").as("vec"))
     val a = emb.select($"label", $"vec_id".as("vec_a"), $"vec".as("va"))
     val b = emb.select($"label", $"vec_id".as("vec_b"), $"vec".as("vb"))
     a.join(b, "label").filter($"vec_a" < $"vec_b")
-      .withColumn("cosine", round(call_function("cosine_sim", $"va", $"vb"), 6))
+      .withColumn("cosine", round(cosineSim($"va", $"vb"), 6))
       .filter($"cosine" >= threshold)
       .select($"vec_a", $"vec_b", $"label", $"cosine")
   }
@@ -387,7 +384,6 @@ object Dedup {
                        probeSources: Seq[String] = Seq("src18", "src19"))
       : DataFrame = {
     import spark.implicits._
-    GraftFunctions.register(spark)
     val docs = signatures(spark, sfDir).toDF()
       .join(Tables.documents(spark, sfDir).select($"doc_id", $"source"),
             "doc_id")
@@ -404,8 +400,7 @@ object Dedup {
     val verified = candidates
       .join(fresh.select($"doc_id".as("new_id"), $"sh".as("sh_n")), "new_id")
       .join(existing.select($"doc_id".as("old_id"), $"sh".as("sh_o")), "old_id")
-      .withColumn("inter",
-        call_function("sorted_intersect_count", $"sh_n", $"sh_o"))
+      .withColumn("inter", sortedIntersectCount($"sh_n", $"sh_o"))
       .withColumn("jaccard", round(
         $"inter" / (size($"sh_n") + size($"sh_o") - $"inter"), 4))
       .groupBy($"new_id")
@@ -802,7 +797,6 @@ object Dedup {
       .select($"doc_id", $"sh", size($"sh").cast("long").as("n_sh"))
       .localCheckpoint()
     val t = threshold - 1e-4
-    GraftFunctions.register(spark)
     // `sh` is sorted at the source, so the prefix is a plain slice
     val prefix = docs.select(
         explode(slice($"sh", lit(1),
@@ -817,8 +811,7 @@ object Dedup {
                         $"n_sh".as("na")), "doc_a")
       .join(docs.select($"doc_id".as("doc_b"), $"sh".as("sh_b"),
                         $"n_sh".as("nb")), "doc_b")
-      .withColumn("inter",
-        call_function("sorted_intersect_count", $"sh_a", $"sh_b").cast("long"))
+      .withColumn("inter", sortedIntersectCount($"sh_a", $"sh_b").cast("long"))
       .withColumn("jaccard", round($"inter" / ($"na" + $"nb" - $"inter"), 4))
       .filter($"jaccard" >= threshold)
       .select($"doc_a", $"doc_b", $"inter", $"jaccard")
@@ -873,7 +866,6 @@ object Dedup {
     def freqArr(c: Column): Column = array(alphabet.map { ch =>
       (length(c) - length(replace(c, lit(ch.toString), lit("")))).cast("int")
     }: _*)
-    GraftFunctions.register(spark)
     // the 27-counter char-frequency projection scans the text 27×; it
     // feeds BOTH join sides, so spread it across cores and materialize
     // once (r15 — it used to run twice, single-partition)
@@ -891,7 +883,7 @@ object Dedup {
           ($"band" < $"band_b" ||
            ($"band" === $"band_b" && $"doc_id" < $"doc_b")) &&
           abs($"len" - $"len_b") <= tau)
-      .filter(call_function("bag_bound", $"freq", $"freq_b") <= tau)
+      .filter(bagBound($"freq", $"freq_b") <= tau)
       .select($"doc_id", $"doc_b")
     val texts = Tables.documents(spark, sfDir).select($"doc_id", $"text")
     survivors
@@ -915,14 +907,13 @@ object Dedup {
     * clamped); the cumulative window runs over ≤ 21 bins. */
   def thresholdSweep(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    GraftFunctions.register(spark)
     val emb = Tables.embeddings(spark, sfDir)
       .select($"vec_id", $"label", $"embedding".cast("array<double>").as("vec"))
     val a = emb.select($"label", $"vec_id".as("vec_a"), $"vec".as("va"))
     val b = emb.select($"label", $"vec_id".as("vec_b"), $"vec".as("vb"))
     val bins = a.join(b, Seq("label"))
       .filter($"vec_a" < $"vec_b")
-      .withColumn("cos6", round(call_function("cosine_sim", $"va", $"vb"), 6))
+      .withColumn("cos6", round(cosineSim($"va", $"vb"), 6))
       .withColumn("bin",
         greatest(least(floor($"cos6" * 10).cast("long"), lit(10L)), lit(-10L)))
       .groupBy($"bin").agg(count(lit(1)).as("n_pairs"))
@@ -981,13 +972,12 @@ object Dedup {
   def semantic(spark: SparkSession, sfDir: String,
                threshold: Double = 0.35, cap: Int = 64): DataFrame = {
     import spark.implicits._
-    GraftFunctions.register(spark)
     val emb = Tables.embeddings(spark, sfDir)
       .select($"vec_id", $"embedding".cast("array<double>").as("vec"))
     val idx = SimOps.clusterAssignments(spark, sfDir).join(emb, "vec_id")
     SimOps.cappedClusterPairs(idx, cap, "vec_a", "va", "vec_b", "vb")
       .filter($"vec_a" < $"vec_b")
-      .withColumn("cosine", round(call_function("cosine_sim", $"va", $"vb"), 6))
+      .withColumn("cosine", round(cosineSim($"va", $"vb"), 6))
       .filter($"cosine" >= threshold)
       .select($"vec_a", $"vec_b", $"cid", $"cosine")
   }

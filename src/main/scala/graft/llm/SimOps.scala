@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
-import graft.functions.GraftFunctions
+import graft.functions.GraftFunctions.{cosineSim, topKStructs}
 
 /** Similarity search over embedding columns (SURVEY.md §2.3).
   *
@@ -39,21 +39,18 @@ object SimOps {
   def hybridRrf(spark: SparkSession, sfDir: String, kEach: Int = 30,
                 topK: Int = 10, rrfK: Int = 60): DataFrame = {
     import spark.implicits._
-    GraftFunctions.register(spark)
     val emb = Tables.embeddings(spark, sfDir)
       .select($"vec_id", $"embedding".cast("array<double>").as("vec"))
     val q = emb.filter($"vec_id" === 0)
       .select($"vec".as("qvec"))
     val vecRanked = emb.filter($"vec_id" =!= 0)
       .crossJoin(broadcast(q))
-      .withColumn("cos6", round(call_function("cosine_sim", $"vec", $"qvec"), 6))
-      .agg(call_function("top_k_structs",
-        struct($"cos6", (-$"vec_id").as("nid"), $"vec_id"), lit(kEach)).as("top"))
+      .withColumn("cos6", round(cosineSim($"vec", $"qvec"), 6))
+      .agg(topKStructs(struct($"cos6", (-$"vec_id").as("nid"), $"vec_id"), kEach).as("top"))
       .select(posexplode($"top").as(Seq("p", "s")))
       .select($"s.vec_id".as("item_id"), ($"p" + 1).cast("long").as("rank_vec"))
     val lexRanked = TextOps.bm25Scores(spark, sfDir, Seq("dup", "vector", "scan"))
-      .agg(call_function("top_k_structs",
-        struct($"score_micro", (-$"doc_id").as("nid"), $"doc_id"), lit(kEach))
+      .agg(topKStructs(struct($"score_micro", (-$"doc_id").as("nid"), $"doc_id"), kEach)
         .as("top"))
       .select(posexplode($"top").as(Seq("p", "s")))
       .select($"s.doc_id".as("item_id"), ($"p" + 1).cast("long").as("rank_lex"))
@@ -91,17 +88,16 @@ object SimOps {
                    lamTenths: Int = 7): DataFrame = {
     require(lamTenths >= 0 && lamTenths <= 10, "λ is in tenths, 0..10")
     import spark.implicits._
-    GraftFunctions.register(spark)
     val emb = Tables.embeddings(spark, sfDir)
       .select($"vec_id", $"embedding".cast("array<double>").as("vec"))
     val q = emb.filter($"vec_id" < nQueries)
       .select($"vec_id".as("query_id"), $"vec".as("qvec"))
     val short = emb.crossJoin(broadcast(q))
       .filter($"vec_id" =!= $"query_id")
-      .withColumn("cos6", round(call_function("cosine_sim", $"vec", $"qvec"), 6))
+      .withColumn("cos6", round(cosineSim($"vec", $"qvec"), 6))
       .groupBy($"query_id")
-      .agg(call_function("top_k_structs",
-        struct($"cos6", (-$"vec_id").as("nid"), $"vec_id"), lit(nShort)).as("top"))
+      .agg(topKStructs(
+        struct($"cos6", (-$"vec_id").as("nid"), $"vec_id"), nShort).as("top"))
       .select($"query_id", explode($"top").as("s"))
       .select($"query_id", $"s.vec_id".as("cand_id"),
         round($"s.cos6" * 1000000, 0).cast("long").as("rel_micro"))
@@ -162,14 +158,13 @@ object SimOps {
   def simTopkBruteforce(spark: SparkSession, sfDir: String,
                         nQueries: Int = 8, k: Int = 5): DataFrame = {
     import spark.implicits._
-    GraftFunctions.register(spark)
     val emb = Tables.embeddings(spark, sfDir)
       .select($"vec_id", $"embedding".cast("array<double>").as("vec"))
     val q = emb.filter($"vec_id" < nQueries)
       .select($"vec_id".as("query_id"), $"vec".as("qvec"))
     val ranked = emb.crossJoin(broadcast(q))
       .filter($"vec_id" =!= $"query_id")
-      .withColumn("cos6", round(call_function("cosine_sim", $"vec", $"qvec"), 6))
+      .withColumn("cos6", round(cosineSim($"vec", $"qvec"), 6))
       .withColumn("rnk", row_number().over(
         Window.partitionBy($"query_id").orderBy($"cos6".desc, $"vec_id".asc)))
     ranked.filter($"rnk" <= k)
@@ -188,18 +183,16 @@ object SimOps {
   def ivfAnn(spark: SparkSession, sfDir: String, nCentroids: Int = 4,
              nQueries: Int = 8, k: Int = 5, nprobe: Int = 1): DataFrame = {
     import spark.implicits._
-    GraftFunctions.register(spark)
     val emb = Tables.embeddings(spark, sfDir)
       .select($"vec_id", $"embedding".cast("array<double>").as("vec"))
     val cents = emb.filter($"vec_id" < nCentroids)
       .select($"vec_id".as("cid"), $"vec".as("cvec"))
     val scored = emb.filter($"vec_id" >= nCentroids)
       .crossJoin(broadcast(cents))
-      .withColumn("cos6", round(call_function("cosine_sim", $"vec", $"cvec"), 6))
+      .withColumn("cos6", round(cosineSim($"vec", $"cvec"), 6))
     val assign = scored
       .groupBy($"vec_id")
-      .agg(element_at(call_function("top_k_structs",
-        struct($"cos6", (-$"cid").as("ncid"), $"cid"), lit(1)), 1)
+      .agg(element_at(topKStructs(struct($"cos6", (-$"cid").as("ncid"), $"cid"), 1), 1)
         .getField("cid").as("cid"))
     val indexed = assign.join(emb, "vec_id")
     // queries probe their top-`nprobe` centroid lists (the FAISS recall
@@ -207,13 +200,12 @@ object SimOps {
     // adds candidates — no dedup needed
     val q = scored.filter($"vec_id" < nCentroids + nQueries)
       .groupBy($"vec_id")
-      .agg(call_function("top_k_structs",
-        struct($"cos6", (-$"cid").as("ncid"), $"cid"), lit(nprobe)).as("top"))
+      .agg(topKStructs(struct($"cos6", (-$"cid").as("ncid"), $"cid"), nprobe).as("top"))
       .select($"vec_id".as("query_id"), explode($"top.cid").as("cid"))
       .join(emb.select($"vec_id".as("query_id"), $"vec".as("qvec")), "query_id")
     indexed.join(broadcast(q), Seq("cid"))
       .filter($"vec_id" =!= $"query_id")
-      .withColumn("cos6", round(call_function("cosine_sim", $"vec", $"qvec"), 6))
+      .withColumn("cos6", round(cosineSim($"vec", $"qvec"), 6))
       .withColumn("rnk", row_number().over(
         Window.partitionBy($"query_id").orderBy($"cos6".desc, $"vec_id".asc)))
       .filter($"rnk" <= k)
@@ -255,7 +247,6 @@ object SimOps {
   def lshAnn(spark: SparkSession, sfDir: String,
              nQueries: Int = 8, k: Int = 5): DataFrame = {
     import spark.implicits._
-    GraftFunctions.register(spark)
     val emb = Tables.embeddings(spark, sfDir)
       .select($"vec_id", $"embedding")
       .as[(Long, Array[Float])]
@@ -271,7 +262,7 @@ object SimOps {
     val ranked = emb.select($"vec_id", $"vec", $"bucket")
       .join(broadcast(q), "bucket")
       .filter($"vec_id" =!= $"query_id")
-      .withColumn("cos6", round(call_function("cosine_sim", $"vec", $"qvec"), 6))
+      .withColumn("cos6", round(cosineSim($"vec", $"qvec"), 6))
       .withColumn("rnk", row_number().over(
         Window.partitionBy($"query_id").orderBy($"cos6".desc, $"vec_id".asc)))
     ranked.filter($"rnk" <= k)
@@ -572,7 +563,6 @@ object SimOps {
                     emb: org.apache.spark.sql.Dataset[(Long, Array[Double])],
                     nTrain: Int, nQueries: Int, k: Int): DataFrame = {
     import spark.implicits._
-    GraftFunctions.register(spark)
     val subDim = 16 // 64 dims / M=4 subspaces
     val M = 4
     // Codebook + query vectors are bounded, metadata-sized sets (nTrain
@@ -655,10 +645,9 @@ object SimOps {
     // global merge of the tiny partials: bounded TopKStructs aggregate
     // ((adist asc, vec_id asc) — identical tie-break to the oracle)
     partials.groupBy($"query_id")
-      .agg(call_function("top_k_structs",
+      .agg(topKStructs(
         struct($"adist_raw", (-$"neighbor_id").as("neg_id"), $"neighbor_id"),
-        lit(k), array(lit(true), lit(false)),
-        array(lit(false), lit(false))).as("top"))
+        k, Seq(true, false)).as("top"))
       .select($"query_id", posexplode($"top"))
       .select($"query_id", $"col.neighbor_id".as("neighbor_id"),
               round($"col.adist_raw", 6).as("adist"),
@@ -690,7 +679,6 @@ object SimOps {
   def ivfPqAnn(spark: SparkSession, sfDir: String, nTrain: Int = 8,
                nQueries: Int = 8, k: Int = 5): DataFrame = {
     import spark.implicits._
-    GraftFunctions.register(spark)
     val subDim = 16
     val M = 4
     val ds = quantized(spark, sfDir).localCheckpoint()
@@ -772,10 +760,9 @@ object SimOps {
       }
     }.toDF("query_id", "neighbor_id", "adist_raw")
     partials.groupBy($"query_id")
-      .agg(call_function("top_k_structs",
+      .agg(topKStructs(
         struct($"adist_raw", (-$"neighbor_id").as("neg_id"), $"neighbor_id"),
-        lit(k), array(lit(true), lit(false)),
-        array(lit(false), lit(false))).as("top"))
+        k, Seq(true, false)).as("top"))
       .select($"query_id", posexplode($"top"))
       // report in UNIT² (÷ micro² = 1e12, one exact IEEE division):
       // raw micro² distances are ~1e12, where a 6-decimal cross-engine
@@ -789,7 +776,6 @@ object SimOps {
   def int8Topk(spark: SparkSession, sfDir: String,
                nQueries: Int = 8, k: Int = 5): DataFrame = {
     import spark.implicits._
-    GraftFunctions.register(spark)
     val emb = Tables.embeddings(spark, sfDir)
       .select($"vec_id", $"embedding".cast("array<double>").as("vec"))
       .withColumn("m", array_max(transform($"vec", x => abs(x))))
@@ -806,12 +792,9 @@ object SimOps {
     // ≤k rows per partition before the one tiny exchange
     emb.crossJoin(broadcast(q))
       .filter($"vec_id" =!= $"query_id")
-      .withColumn("cos6", round(call_function("cosine_sim", $"q", $"qq"), 6))
+      .withColumn("cos6", round(cosineSim($"q", $"qq"), 6))
       .groupBy($"query_id")
-      .agg(call_function("top_k_structs",
-        struct($"cos6", $"vec_id"),
-        lit(k), array(lit(false), lit(true)),
-        array(lit(false), lit(false))).as("top"))
+      .agg(topKStructs(struct($"cos6", $"vec_id"), k, Seq(false, true)).as("top"))
       .select($"query_id", posexplode($"top"))
       .select($"query_id", $"col.vec_id".as("neighbor_id"),
               $"col.cos6".as("cosine"), ($"pos" + 1).cast("long").as("rnk"))
@@ -845,7 +828,6 @@ object SimOps {
   def binaryQuantAnn(spark: SparkSession, sfDir: String,
                      nQueries: Int = 8, m: Int = 20, k: Int = 5): DataFrame = {
     import spark.implicits._
-    GraftFunctions.register(spark)
     val ds = quantized(spark, sfDir)
     val dim = ds.head()._2.length
     require(dim <= 64, s"binaryQuantAnn packs 2×32-bit words, got dim=$dim")
@@ -885,9 +867,9 @@ object SimOps {
         (bit_count($"w0".bitwiseXOR($"qw0")) +
          bit_count($"w1".bitwiseXOR($"qw1"))).cast("long"))
       .groupBy($"query_id")
-      .agg(call_function("top_k_structs",
+      .agg(topKStructs(
         struct((-$"ham").as("nham"), (-$"vec_id").as("nid"),
-               $"vec_id", $"ham"), lit(m)).as("top"))
+               $"vec_id", $"ham"), m).as("top"))
       .select($"query_id", explode($"top").as("s"))
       .select($"query_id", $"s.vec_id".as("neighbor_id"), $"s.ham".as("hamming"))
     val emb = Tables.embeddings(spark, sfDir)
@@ -896,7 +878,7 @@ object SimOps {
       .join(emb.select($"vec_id".as("neighbor_id"), $"vec"), "neighbor_id")
       .join(broadcast(emb.filter($"vec_id" < nQueries)
         .select($"vec_id".as("query_id"), $"vec".as("qvec"))), "query_id")
-      .withColumn("cos6", round(call_function("cosine_sim", $"vec", $"qvec"), 6))
+      .withColumn("cos6", round(cosineSim($"vec", $"qvec"), 6))
       .withColumn("rnk", row_number().over(
         Window.partitionBy($"query_id").orderBy($"cos6".desc, $"neighbor_id".asc)))
       .filter($"rnk" <= k)
@@ -1160,7 +1142,6 @@ object SimOps {
   private def ivfProbe(spark: SparkSession, assign: DataFrame, sfDir: String,
                        nQueries: Int, k: Int): DataFrame = {
     import spark.implicits._
-    GraftFunctions.register(spark)
     val emb = Tables.embeddings(spark, sfDir)
       .select($"vec_id", $"embedding".cast("array<double>").as("vec"))
     val idx = assign.join(emb, "vec_id")
@@ -1168,7 +1149,7 @@ object SimOps {
       .select($"vec_id".as("query_id"), $"cid", $"vec".as("qvec"))
     idx.join(broadcast(q), Seq("cid"))
       .filter($"vec_id" =!= $"query_id")
-      .withColumn("cos6", round(call_function("cosine_sim", $"vec", $"qvec"), 6))
+      .withColumn("cos6", round(cosineSim($"vec", $"qvec"), 6))
       .withColumn("rnk", row_number().over(
         Window.partitionBy($"query_id").orderBy($"cos6".desc, $"vec_id".asc)))
       .filter($"rnk" <= k)
@@ -1461,14 +1442,13 @@ object SimOps {
   def rangeSearch(spark: SparkSession, sfDir: String,
                   nQueries: Int = 8, tau: Double = 0.3): DataFrame = {
     import spark.implicits._
-    GraftFunctions.register(spark)
     val emb = Tables.embeddings(spark, sfDir)
       .select($"vec_id", $"embedding".cast("array<double>").as("vec"))
     val q = emb.filter($"vec_id" < nQueries)
       .select($"vec_id".as("query_id"), $"vec".as("qvec"))
     emb.crossJoin(broadcast(q))
       .filter($"vec_id" =!= $"query_id")
-      .withColumn("cos6", round(call_function("cosine_sim", $"vec", $"qvec"), 6))
+      .withColumn("cos6", round(cosineSim($"vec", $"qvec"), 6))
       .filter($"cos6" >= tau)
       .select($"query_id", $"vec_id".as("neighbor_id"), $"cos6".as("cosine"))
   }
@@ -1521,17 +1501,14 @@ object SimOps {
   def knnGraph(spark: SparkSession, sfDir: String, k: Int = 3,
                cap: Int = 64): DataFrame = {
     import spark.implicits._
-    GraftFunctions.register(spark)
     val emb = Tables.embeddings(spark, sfDir)
       .select($"vec_id", $"embedding".cast("array<double>").as("vec"))
     val idx = clusterAssignments(spark, sfDir).join(emb, "vec_id")
     cappedClusterPairs(idx, cap, "vec_id", "vec", "nbr", "nvec")
       .filter($"vec_id" =!= $"nbr")
-      .withColumn("cos6", round(call_function("cosine_sim", $"vec", $"nvec"), 6))
+      .withColumn("cos6", round(cosineSim($"vec", $"nvec"), 6))
       .groupBy($"vec_id")
-      .agg(call_function("top_k_structs",
-        struct($"cos6", $"nbr"), lit(k),
-        array(lit(false), lit(true)), array(lit(false), lit(false))).as("top"))
+      .agg(topKStructs(struct($"cos6", $"nbr"), k, Seq(false, true)).as("top"))
       .select($"vec_id", posexplode($"top"))
       .select($"vec_id", $"col.nbr".as("neighbor_id"),
               $"col.cos6".as("cosine"), ($"pos" + 1).cast("long").as("rnk"))
@@ -1573,7 +1550,6 @@ object SimOps {
                               nQueries: Int, graphK: Int)
       : (DataFrame, DataFrame) = {
     import spark.implicits._
-    GraftFunctions.register(spark)
     // emb feeds exactly ONE consumer (the assign join below) — the
     // former localCheckpoint was a pure extra materialization job of a
     // corpus-sized frame (r16)
@@ -1592,12 +1568,11 @@ object SimOps {
     val directed = cappedClusterPairs(assign.join(emb, "vec_id"), 64,
         "vec_id", "vec", "nbr", "nvec")
       .filter($"vec_id" =!= $"nbr")
-      .withColumn("cos6",
-        round(call_function("cosine_sim", $"vec", $"nvec"), 6))
+      .withColumn("cos6", round(cosineSim($"vec", $"nvec"), 6))
       .groupBy($"vec_id")
-      .agg(call_function("top_k_structs",
-        struct($"cos6", $"nbr", $"nvec"), lit(graphK),
-        array(lit(false), lit(true)), array(lit(false), lit(false))).as("top"),
+      .agg(topKStructs(
+        struct($"cos6", $"nbr", $"nvec"), graphK,
+        Seq(false, true)).as("top"),
         first($"vec").as("svec"))
       .select($"vec_id", $"svec", posexplode($"top"))
       .select($"vec_id".as("src"), $"svec",
@@ -1654,7 +1629,6 @@ object SimOps {
                             nQueries: Int, beam: Int, hops: Int, k: Int)
       : DataFrame = {
     import spark.implicits._
-    GraftFunctions.register(spark)
     // edges (src, dst, dvec) are referenced once per hop; callers hand
     // either plain parquet scans (persisted index — rescanning is the
     // cheap option) or an already-checkpointed build (inline), so no
@@ -1691,8 +1665,7 @@ object SimOps {
       seeds.filter($"cand" =!= $"query_id")
         .join(emb.select($"vec_id".as("cand"), $"vec"), Seq("cand"))
         .join(broadcast(q), Seq("query_id"))
-        .withColumn("cos6",
-          round(call_function("cosine_sim", $"vec", $"qvec"), 6))
+        .withColumn("cos6", round(cosineSim($"vec", $"qvec"), 6))
         .select($"query_id", $"cand", $"cos6"), beam)
       .select($"query_id", $"cand", $"cos6").localCheckpoint()
     for (_ <- 1 to hops) {
@@ -1700,8 +1673,7 @@ object SimOps {
         .select($"query_id", $"dst".as("cand"), $"dvec")
         .filter($"cand" =!= $"query_id")
         .join(broadcast(q), Seq("query_id"))
-        .withColumn("cos6",
-          round(call_function("cosine_sim", $"dvec", $"qvec"), 6))
+        .withColumn("cos6", round(cosineSim($"dvec", $"qvec"), 6))
         .select($"query_id", $"cand", $"cos6")
       val cands = expanded
         .union(beamDf.select($"query_id", $"cand", $"cos6"))
@@ -1772,7 +1744,6 @@ object SimOps {
                                entries: DataFrame, upperK: Int = 4)
       : (DataFrame, DataFrame) = {
     import spark.implicits._
-    GraftFunctions.register(spark)
     val emb = Tables.embeddings(spark, sfDir)
       .select($"vec_id", $"embedding".cast("array<double>").as("vec"))
     val reps = entries.join(emb.select($"vec_id".as("cand"), $"vec"), "cand")
@@ -1780,12 +1751,9 @@ object SimOps {
     val directed = reps.select($"cand".as("src"), $"vec".as("av"))
       .join(broadcast(reps.select($"cand".as("dst"), $"vec".as("bv"))),
         $"src" =!= $"dst")
-      .withColumn("cos6",
-        round(call_function("cosine_sim", $"av", $"bv"), 6))
+      .withColumn("cos6", round(cosineSim($"av", $"bv"), 6))
       .groupBy($"src")
-      .agg(call_function("top_k_structs",
-        struct($"cos6", $"dst"), lit(upperK),
-        array(lit(false), lit(true)), array(lit(false), lit(false))).as("top"))
+      .agg(topKStructs(struct($"cos6", $"dst"), upperK, Seq(false, true)).as("top"))
       .select($"src", posexplode($"top"))
       .select($"src", $"col.dst".as("dst"))
     // same vector-carrying layout as the base edge list (see
@@ -1898,8 +1866,7 @@ object SimOps {
     val seeded = seeds
       .join(emb.select($"vec_id".as("cand"), $"vec"), Seq("cand"))
       .join(broadcast(q), Seq("query_id"))
-      .withColumn("cos6",
-        round(call_function("cosine_sim", $"vec", $"qvec"), 6))
+      .withColumn("cos6", round(cosineSim($"vec", $"qvec"), 6))
       .withColumn("ef", explode(array(efs.map(e => lit(e.toLong)): _*)))
       .select($"ef", $"query_id", $"cand", $"cos6")
     var beamDf = topPerArm(seeded, $"ef")
@@ -1909,8 +1876,7 @@ object SimOps {
         .select($"ef", $"query_id", $"dst".as("cand"), $"dvec")
         .filter($"cand" =!= $"query_id")
         .join(broadcast(q), Seq("query_id"))
-        .withColumn("cos6",
-          round(call_function("cosine_sim", $"dvec", $"qvec"), 6))
+        .withColumn("cos6", round(cosineSim($"dvec", $"qvec"), 6))
         .select($"ef", $"query_id", $"cand", $"cos6")
       val cands = expanded
         .union(beamDf.select($"ef", $"query_id", $"cand", $"cos6"))
@@ -1982,7 +1948,6 @@ object SimOps {
   def nprobeSweep(spark: SparkSession, sfDir: String, nQueries: Int = 8,
                   k: Int = 5, nprobes: Seq[Int] = Seq(1, 2, 4)): DataFrame = {
     import spark.implicits._
-    GraftFunctions.register(spark)
     val ds = quantized(spark, sfDir).localCheckpoint()
     val kk = autoK(ds.count())
     val cents = trainCentroids(spark, ds, kk, 2)
@@ -2018,7 +1983,7 @@ object SimOps {
         broadcast(sweep.select($"nprobe", $"query_id", $"cid", $"qvec")),
         Seq("cid"))
       .filter($"vec_id" =!= $"query_id")
-      .withColumn("cos6", round(call_function("cosine_sim", $"vec", $"qvec"), 6))
+      .withColumn("cos6", round(cosineSim($"vec", $"qvec"), 6))
       .withColumn("rnk", row_number().over(
         Window.partitionBy($"nprobe", $"query_id")
           .orderBy($"cos6".desc, $"vec_id".asc)))
@@ -2125,7 +2090,6 @@ object SimOps {
   def mrlRerank(spark: SparkSession, sfDir: String, nQueries: Int = 8,
                 prefixDims: Int = 8, shortlist: Int = 20, k: Int = 5): DataFrame = {
     import spark.implicits._
-    GraftFunctions.register(spark)
     val emb = Tables.embeddings(spark, sfDir)
       .select($"vec_id", $"embedding".cast("array<double>").as("vec"))
       .withColumn("pvec", slice($"vec", 1, prefixDims))
@@ -2133,13 +2097,12 @@ object SimOps {
       .select($"vec_id".as("query_id"), $"vec".as("qvec"), $"pvec".as("qpvec"))
     val coarse = emb.crossJoin(broadcast(q))
       .filter($"vec_id" =!= $"query_id")
-      .withColumn("coarse6",
-        round(call_function("cosine_sim", $"pvec", $"qpvec"), 6))
+      .withColumn("coarse6", round(cosineSim($"pvec", $"qpvec"), 6))
       .withColumn("crnk", row_number().over(
         Window.partitionBy($"query_id").orderBy($"coarse6".desc, $"vec_id".asc)))
       .filter($"crnk" <= shortlist)
     coarse
-      .withColumn("cos6", round(call_function("cosine_sim", $"vec", $"qvec"), 6))
+      .withColumn("cos6", round(cosineSim($"vec", $"qvec"), 6))
       .withColumn("rnk", row_number().over(
         Window.partitionBy($"query_id").orderBy($"cos6".desc, $"vec_id".asc))
         .cast("long"))
@@ -2258,18 +2221,16 @@ object SimOps {
                   nQueries: Int = 8, k: Int = 5, nprobe: Int = 2,
                   labelMod: Int = 3): DataFrame = {
     import spark.implicits._
-    GraftFunctions.register(spark)
     val emb = Tables.embeddings(spark, sfDir)
       .select($"vec_id", $"embedding".cast("array<double>").as("vec"), $"label")
     val cents = emb.filter($"vec_id" < nCentroids)
       .select($"vec_id".as("cid"), $"vec".as("cvec"))
     val scored = emb.filter($"vec_id" >= nCentroids)
       .crossJoin(broadcast(cents))
-      .withColumn("cos6", round(call_function("cosine_sim", $"vec", $"cvec"), 6))
+      .withColumn("cos6", round(cosineSim($"vec", $"cvec"), 6))
     val assign = scored
       .groupBy($"vec_id")
-      .agg(element_at(call_function("top_k_structs",
-        struct($"cos6", (-$"cid").as("ncid"), $"cid"), lit(1)), 1)
+      .agg(element_at(topKStructs(struct($"cos6", (-$"cid").as("ncid"), $"cid"), 1), 1)
         .getField("cid").as("cid"))
     // predicate pushdown: the filter lands on the index side of the
     // probe join, upstream of the distance evaluation
@@ -2277,13 +2238,12 @@ object SimOps {
       .filter(pmod($"label", lit(labelMod)) === 0)
     val q = scored.filter($"vec_id" < nCentroids + nQueries)
       .groupBy($"vec_id")
-      .agg(call_function("top_k_structs",
-        struct($"cos6", (-$"cid").as("ncid"), $"cid"), lit(nprobe)).as("top"))
+      .agg(topKStructs(struct($"cos6", (-$"cid").as("ncid"), $"cid"), nprobe).as("top"))
       .select($"vec_id".as("query_id"), explode($"top.cid").as("cid"))
       .join(emb.select($"vec_id".as("query_id"), $"vec".as("qvec")), "query_id")
     indexed.join(broadcast(q), Seq("cid"))
       .filter($"vec_id" =!= $"query_id")
-      .withColumn("cos6", round(call_function("cosine_sim", $"vec", $"qvec"), 6))
+      .withColumn("cos6", round(cosineSim($"vec", $"qvec"), 6))
       .withColumn("rnk", row_number().over(
         Window.partitionBy($"query_id").orderBy($"cos6".desc, $"vec_id".asc)))
       .filter($"rnk" <= k)
@@ -2303,7 +2263,6 @@ object SimOps {
                      nQueries: Int = 8, k: Int = 5, nprobe: Int = 2,
                      labelMod: Int = 3): DataFrame = {
     import spark.implicits._
-    GraftFunctions.register(spark)
     val emb = Tables.embeddings(spark, sfDir)
       .select($"vec_id", $"embedding".cast("array<double>").as("vec"), $"label")
     val q = emb.filter($"vec_id" < nCentroids + nQueries)
@@ -2312,7 +2271,7 @@ object SimOps {
     val brute = emb.filter(pmod($"label", lit(labelMod)) === 0)
       .crossJoin(broadcast(q))
       .filter($"vec_id" =!= $"query_id")
-      .withColumn("cos6", round(call_function("cosine_sim", $"vec", $"qvec"), 6))
+      .withColumn("cos6", round(cosineSim($"vec", $"qvec"), 6))
       .withColumn("rnk", row_number().over(
         Window.partitionBy($"query_id").orderBy($"cos6".desc, $"vec_id".asc)))
       .filter($"rnk" <= k)

@@ -197,7 +197,7 @@ object AsofJoin {
                      leftTime: String, rightTime: String,
                      forward: Boolean = false): DataFrame = {
     val spark = left.sparkSession
-    graft.functions.GraftFunctions.register(spark)
+    graft.functions.GraftFunctions.register(spark) // arms AsOfJoinStrategy
     val lPlan = left.queryExecution.analyzed
     val rPlan = right.queryExecution.analyzed
     def attr(plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.functions.GraftFunctions.topKStructs
 
 /** Core relational operators — the downstream analytic query surface over
   * the tables the reference exporter produces (SURVEY.md §2.1).
@@ -328,12 +329,11 @@ object Core {
     * struct as (price, -orderkey). */
   def qTopKPerGroup(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     Tables.orders(spark, sfDir)
       .groupBy($"o_custkey")
-      .agg(call_function("top_k_structs",
+      .agg(topKStructs(
         struct($"o_totalprice", (-$"o_orderkey").as("neg_ok"), $"o_orderkey"),
-        lit(3)).as("top"))
+        3).as("top"))
       .select($"o_custkey", posexplode($"top"))
       .select($"o_custkey", $"col.o_orderkey".as("o_orderkey"),
               round($"col.o_totalprice", 4).as("price"),
@@ -352,7 +352,7 @@ object Core {
     // every action re-optimizes, so it must be active at action time —
     // SparkEntry.queryConfs supplies it and Verify/Bench scope it around
     // the write/count (round-2 ADVICE fix).
-    graft.functions.GraftFunctions.register(spark)
+    graft.functions.GraftFunctions.register(spark) // arms the TopKWindowRewrite rule
     val w = Window.partitionBy($"o_custkey")
       .orderBy($"o_totalprice".desc, $"o_orderkey".asc)
     Tables.orders(spark, sfDir)
@@ -625,14 +625,13 @@ object Core {
     * keys × type cardinality, not raw rows. */
   def qMode(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     Tables.events(spark, sfDir)
       .groupBy($"user_id", $"event_type")
       .agg(count(lit(1)).as("n"))
       .groupBy($"user_id")
-      .agg(element_at(call_function("top_k_structs",
-             struct($"n", $"event_type".as("t")), lit(1),
-             array(lit(false), lit(true)), array(lit(false), lit(false))), 1)
+      .agg(element_at(topKStructs(
+             struct($"n", $"event_type".as("t")), 1,
+             Seq(false, true)), 1)
              .as("m"),
            sum($"n").as("n_events"))
       .select($"user_id", $"m.t".as("mode_type"), $"m.n".as("n_mode"),
@@ -651,7 +650,6 @@ object Core {
     * hash aggregation, no struct-min SortAggregate fallback. */
   def qGapsIslands(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     val days = Tables.events(spark, sfDir)
       .select($"user_id",
               datediff(to_date($"ts"), lit("1970-01-01")).cast("long").as("d"))
@@ -663,9 +661,7 @@ object Core {
       .agg(count(lit(1)).as("len"), min($"d").as("start"))
     streaks.groupBy($"user_id")
       .agg(count(lit(1)).as("n_streaks"), sum($"len").as("active_days"),
-           element_at(call_function("top_k_structs",
-             struct($"len", $"start".as("s")), lit(1),
-             array(lit(false), lit(true)), array(lit(false), lit(false))), 1)
+           element_at(topKStructs(struct($"len", $"start".as("s")), 1, Seq(false, true)), 1)
              .as("best"))
       .select($"user_id", $"n_streaks", $"active_days",
               $"best.len".as("max_streak"),
@@ -731,15 +727,12 @@ object Core {
   def qSkewDiagnose(spark: SparkSession, sfDir: String,
                     topK: Int = 10): DataFrame = {
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     val freq = Tables.lineitem(spark, sfDir)
       .groupBy($"l_orderkey").agg(count(lit(1)).as("n"))
     val stats = freq.agg(count(lit(1)).as("n_keys"), sum($"n").as("n_rows"),
                          max($"n").as("max_n"))
     val top = freq
-      .agg(call_function("top_k_structs",
-        struct($"n", $"l_orderkey"), lit(topK),
-        array(lit(false), lit(true)), array(lit(false), lit(false))).as("t"))
+      .agg(topKStructs(struct($"n", $"l_orderkey"), topK, Seq(false, true)).as("t"))
       .select(posexplode($"t"))
       .select(($"pos" + 1).cast("long").as("rnk"),
               $"col.l_orderkey".as("key"), $"col.n".as("n"))

@@ -115,7 +115,7 @@ object RangeJoin {
     * residual — the shape that collapses at 100×. */
   def intervalOverlapNaive(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
+    graft.functions.GraftFunctions.register(spark) // arms the RangeJoinRewrite rule
     val iv = Tables.lineitem(spark, sfDir)
       .select($"l_suppkey".as("s"), $"l_orderkey".as("ok"),
         $"l_linenumber".cast("long").as("ln"),

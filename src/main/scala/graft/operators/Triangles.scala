@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.functions.GraftFunctions.sortedIntersectCount
+
 /** Exact triangle counting / edge support — the second classic
   * distributed graph kernel (alongside [[PageRank]]), over the
   * parts-co-purchased graph derived from lineitem. */
@@ -38,7 +40,6 @@ object Triangles {
                       topK: Int = 20): DataFrame = {
     import spark.implicits._
     import org.apache.spark.sql.expressions.Window
-    graft.functions.GraftFunctions.register(spark)
     // co-purchase pairs expanded IN PLACE from per-order part sets
     // (the [[GraphSim.jaccardNeighbors]] posting-list shape): one
     // shuffle groups lineitem into order → part-set lists (collect_set
@@ -72,7 +73,7 @@ object Triangles {
       .join(adj.select($"s".as("t"), $"nbrs".as("nt")), Seq("t"), "left")
       .select($"s", $"t",
         when($"ns".isNull || $"nt".isNull, lit(0L))
-          .otherwise(call_function("sorted_intersect_count", $"ns", $"nt")
+          .otherwise(sortedIntersectCount($"ns", $"nt")
             .cast("long")).as("support"))
       // materialized once: both the global count and the top-k read it,
       // so the O(E^1.5) intersect pass runs exactly once

@@ -6,6 +6,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.functions.GraftFunctions.hilbertIndex
 
 /** Z-ORDER (Morton-curve) data layout (r18) — the multi-dimensional
   * clustering lever behind Delta `OPTIMIZE ZORDER BY` / Iceberg
@@ -210,13 +211,12 @@ object ZOrder {
     * Expression's doGenCode against an independent engine. */
   def qHilbertLocality(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     val cells = Tables.lineitem(spark, sfDir)
       .select(pmod($"l_partkey", lit(256L)).as("x"),
               pmod($"l_orderkey", lit(256L)).as("y"))
       .groupBy($"x", $"y").agg(count(lit(1)).as("c"))
     cells
-      .withColumn("d", call_function("hilbert_index", $"x", $"y"))
+      .withColumn("d", hilbertIndex($"x", $"y"))
       .withColumn("hbucket", shiftright($"d", 2 * Bits - 2 * BucketBits))
       .groupBy($"hbucket").agg(
         sum($"c").as("n_rows"),

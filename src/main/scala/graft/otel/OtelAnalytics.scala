@@ -3,6 +3,8 @@ package graft.otel
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.functions.GraftFunctions.topKStructs
+
 /** Downstream analytics over the reference's own flat tables — the
   * queries its users run on what the exporter writes.
   *
@@ -36,7 +38,6 @@ object OtelAnalytics {
     * through TopKStructs k=1 (hash aggregation — a max(string) would
     * fall back to sort-based aggregation). */
   def traceSummary(flatSpans: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(flatSpans.sparkSession)
     flatSpans
       .groupBy(col("trace_id"))
       .agg(
@@ -46,13 +47,12 @@ object OtelAnalytics {
         // tie-break: prefer root-ness, then earliest start, then span_id —
         // multi-root traces (or orphaned subtrees with no parentless span)
         // get a DETERMINISTIC root_span instead of an arbitrary one.
-        element_at(call_function("top_k_structs",
+        element_at(topKStructs(
           struct(when(col("parent_span_id").isNull, 1L).otherwise(0L).as("is_root"),
                  col("start_time_unix_nano").as("tb_start"),
                  col("span_id").as("tb_span_id"),
                  col("span_name")),
-          lit(1), array(lit(false), lit(true), lit(true)),
-          array(lit(false), lit(false), lit(false))), 1)
+          1, Seq(false, true, true)), 1)
           .getField("span_name").as("root_span"),
         max(when(col("status_code") === "ERROR", 1L).otherwise(0L))
           .as("has_error"))

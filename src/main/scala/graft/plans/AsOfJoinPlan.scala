@@ -41,9 +41,10 @@ case class AsOfJoinNode(left: LogicalPlan, right: LogicalPlan,
     copy(left = newLeft, right = newRight)
 }
 
-/** Planner strategy: one-to-one translation of the logical node. Inject
-  * via `SparkSessionExtensions.injectPlannerStrategy` or
-  * `spark.experimental.extraStrategies` (GraftFunctions.register). */
+/** Planner strategy: one-to-one translation of the logical node. A
+  * session lists it through `GraftFunctions.strategies` — at session
+  * build via `GraftExtensions`, or later via `GraftFunctions.register`,
+  * which `AsofJoin.leftAsofNative` calls before planning its node. */
 object AsOfJoinStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
     case AsOfJoinNode(l, r, lk, rk, lt, rt, fwd) =>

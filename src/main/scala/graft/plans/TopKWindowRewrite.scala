@@ -28,8 +28,10 @@ import graft.functions.TopKStructs
   * produces is a result the window plan could also have produced.
   *
   * Gated off by default (`spark.graft.topkRewrite.enabled=true` turns it
-  * on) so the window formulation stays available as a baseline; inject
-  * via `GraftFunctions.register` / `GraftExtensions`.
+  * on) so the window formulation stays available as a baseline. The
+  * session must also list the rule: `GraftFunctions.register` arms it
+  * (`GraftExtensions` at session build), and the queries that rely on
+  * it call `register` themselves.
   */
 object TopKWindowRewrite extends Rule[LogicalPlan] {
 

@@ -9,6 +9,8 @@ import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode, StreamingQu
 import org.apache.spark.sql.types.MetadataBuilder
 import org.apache.spark.sql.Row
 
+import graft.functions.GraftFunctions.hilbertIndex
+
 /** Time-partitioned parquet sink — the Spark-native counterpart of the
   * reference's write path (writer.go + internal/iceberg/partition.go).
   *
@@ -167,10 +169,8 @@ object PartitionedParquetSink {
           else {
             val (sa, sb) = (scaled(a, r.getLong(0), r.getLong(1)),
                             scaled(b, r.getLong(2), r.getLong(3)))
-            if (cfg.curve == "hilbert") {
-              graft.functions.GraftFunctions.register(spark) // idempotent
-              call_function("hilbert_index", sa, sb)
-            } else ZOrder.zValue(sa, sb)
+            if (cfg.curve == "hilbert") hilbertIndex(sa, sb)
+            else ZOrder.zValue(sa, sb)
           }
         case _ => col(cfg.tsColumn)
       }

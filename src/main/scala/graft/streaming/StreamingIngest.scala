@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.StructType
 
+import graft.functions.GraftFunctions.topKStructs
 import graft.sink.PartitionedParquetSink
 import graft.sink.PartitionedParquetSink.SinkConfig
 
@@ -86,15 +87,12 @@ object StreamingIngest {
     * raw stream is never buffered. */
   def trendingTopK(events: DataFrame, k: Int = 3,
                    tsCol: String = "ts"): DataFrame = {
-    graft.functions.GraftFunctions.register(events.sparkSession)
     events
       .withWatermark(tsCol, "10 minutes")
       .groupBy(window(col(tsCol), "1 hour"), col("event_type"))
       .agg(count(lit(1)).as("n"))
       .groupBy(col("window"))
-      .agg(call_function("top_k_structs",
-        struct(col("n"), col("event_type")), lit(k),
-        array(lit(false), lit(true)), array(lit(false), lit(false)))
+      .agg(topKStructs(struct(col("n"), col("event_type")), k, Seq(false, true))
         .as("top"))
       .select(col("window.start").as("window_start"),
               posexplode(col("top")))
@@ -112,13 +110,11 @@ object StreamingIngest {
     * struct buffers — a dashboard tier can subscribe to pixel-perfect
     * downsampled series without ever scanning raw history. */
   def m4Stream(events: DataFrame, tsCol: String = "ts"): DataFrame = {
-    graft.functions.GraftFunctions.register(events.sparkSession)
     def pick(ordCols: Seq[Column], asc: Seq[Boolean]): Column =
-      element_at(call_function("top_k_structs",
+      element_at(topKStructs(
         struct(ordCols ++ Seq(unix_micros(col(tsCol)).as("p_us"),
-          round(col("value") * 100, 0).cast("long").as("p_v")): _*), lit(1),
-        array(asc.map(lit(_)): _*),
-        array(asc.map(_ => lit(false)): _*)), 1)
+          round(col("value") * 100, 0).cast("long").as("p_v")): _*), 1,
+        asc), 1)
     val us = unix_micros(col(tsCol))
     val v100 = round(col("value") * 100, 0).cast("long")
     events

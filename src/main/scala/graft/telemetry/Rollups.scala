@@ -88,7 +88,7 @@ object Rollups {
     import spark.implicits._
     // the rule rides extraOptimizations — register explicitly (other
     // builders' register calls must not be what arms THIS query's plan)
-    graft.functions.GraftFunctions.register(spark)
+    graft.functions.GraftFunctions.register(spark) // arms the RollupRewrite rule
     ensureHourlyEvents(spark, sfDir)
     Tables.events(spark, sfDir)
       .filter($"ts" >= lit(java.time.Instant.parse("2024-01-02T00:00:00Z")))

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.functions.GraftFunctions.{bottomKByHash, ddsketchAgg, frequentItems, topKStructs}
 
 /** Telemetry-pipeline operators — the reference exporter's own data
   * semantics re-expressed over the `events` table (SURVEY.md §2.2).
@@ -66,11 +67,9 @@ object Telemetry {
     * would fall to sort-based aggregation, sorting every partition). */
   def dedupLatest(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     Tables.events(spark, sfDir)
       .groupBy($"user_id", $"event_type")
-      .agg(element_at(call_function("top_k_structs",
-        struct($"ts", $"event_id", $"value"), lit(1)), 1).as("m"))
+      .agg(element_at(topKStructs(struct($"ts", $"event_id", $"value"), 1), 1).as("m"))
       .select($"user_id", $"event_type",
               $"m.event_id".as("event_id"), $"m.value".as("value"))
   }
@@ -323,11 +322,10 @@ object Telemetry {
     * training pipeline uses to draw stable subsets at 100 TB). */
   def sampleUsers(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     Tables.events(spark, sfDir)
       .select($"event_type", $"user_id").distinct()
       .groupBy($"event_type")
-      .agg(call_function("bottomk_by_hash", $"user_id", lit(3)).as("sample_arr"))
+      .agg(bottomKByHash($"user_id", 3).as("sample_arr"))
       // comma-joined string (sorted ascending by the aggregate's eval):
       // scalar output keeps the driver's hash compare applicable
       .select($"event_type",
@@ -529,13 +527,12 @@ object Telemetry {
   def heavyHitters(spark: SparkSession, sfDir: String,
                    k: Int = 100, thresholdFrac: Double = 0.01): DataFrame = {
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     val ev = Tables.events(spark, sfDir)
       .select(floor($"value").cast("long").as("item"))
     // pass 1 computes the sketch AND the total in one scan; n rides the
     // broadcast candidate set into pass 2 (no third scan, no cross join)
     val pass1 = ev.agg(
-      call_function("frequent_items", $"item", lit(k)).as("c"),
+      frequentItems($"item", k).as("c"),
       count(lit(1)).as("n"))
     val cand = pass1.select($"n", explode($"c.item").as("item"))
     ev.join(broadcast(cand), "item")
@@ -1326,14 +1323,12 @@ object Telemetry {
     * rows regardless of input volume. */
   def m4Downsample(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     // comparison prefix = ordFields (asc flags per field); trailing
     // p_us/p_v ride as payload (not compared)
     def pick(ordFields: Seq[Column], asc: Seq[Boolean]): Column =
-      element_at(call_function("top_k_structs",
-        struct(ordFields ++ Seq($"us".as("p_us"), $"v100".as("p_v")): _*), lit(1),
-        array(asc.map(lit(_)): _*),
-        array(asc.map(_ => lit(false)): _*)), 1)
+      element_at(topKStructs(
+        struct(ordFields ++ Seq($"us".as("p_us"), $"v100".as("p_v")): _*), 1,
+        asc), 1)
     val ev = Tables.events(spark, sfDir)
       .select($"event_type", date_trunc("hour", $"ts").as("bucket"),
               unix_micros($"ts").as("us"),
@@ -1613,11 +1608,10 @@ object Telemetry {
     * (both its update AND merge paths must be exact to match). */
   def ddsketchNative(spark: SparkSession, sfDir: String, m: Int = 12): DataFrame = {
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     Tables.events(spark, sfDir)
       .filter($"value" > 0)
       .groupBy($"event_type")
-      .agg(call_function("ddsketch_agg", $"value", lit(m)).as("sk"))
+      .agg(ddsketchAgg($"value", m).as("sk"))
       .select($"event_type", $"sk.n".as("n"),
         $"sk.n_buckets_raw".as("n_buckets_raw"),
         $"sk.n_buckets_kept".as("n_buckets_kept"),

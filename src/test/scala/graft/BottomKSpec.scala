@@ -2,21 +2,20 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.functions.GraftFunctions
+import graft.functions.GraftFunctions.{bottomKByHash, frequentItems}
 
 class BottomKSpec extends SparkSpec {
 
   test("frequent_items superset guarantee + exact two-pass heavy hitters on Zipf data") {
     import spark.implicits._
     import org.apache.spark.sql.functions._
-    graft.functions.GraftFunctions.register(spark)
     // Zipf-ish: item j appears ~3000/j times, 200 distinct items
     val rows = (1 to 200).flatMap(j => Seq.fill(3000 / j)(j.toLong))
     val df = scala.util.Random.shuffle(rows).toDF("item").repartition(8)
     val n = rows.size.toLong
     val k = 50
 
-    val cand = df.agg(call_function("frequent_items", $"item", lit(k)).as("c"))
+    val cand = df.agg(frequentItems($"item", k).as("c"))
       .select(explode($"c.item").as("item")).collect().map(_.getLong(0)).toSet
     assert(cand.size <= k)
     // every item with true freq > n/(k+1) must be a candidate
@@ -37,14 +36,13 @@ class BottomKSpec extends SparkSpec {
 
   test("bottom-k sample is invariant to partitioning and input order") {
     import spark.implicits._
-    GraftFunctions.register(spark)
     def sample(numParts: Int, shuffled: Boolean) = {
       val base = Tables.events(spark, sf).select($"event_type", $"user_id").distinct()
       val arranged =
         if (shuffled) base.orderBy(rand(7)).repartition(numParts)
         else base.repartition(numParts)
       arranged.groupBy($"event_type")
-        .agg(call_function("bottomk_by_hash", $"user_id", lit(3)).as("s"))
+        .agg(bottomKByHash($"user_id", 3).as("s"))
         .collect().map(r => r.getString(0) -> r.getSeq[Long](1)).toMap
     }
     val a = sample(1, shuffled = false)

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
+import graft.functions.GraftFunctions.hilbertIndex
 import graft.recovery.Recovery
 import graft.sink.{Hilbert, PartitionedParquetSink, ZOrder}
 import graft.sink.PartitionedParquetSink.SinkConfig
@@ -40,17 +41,16 @@ class HilbertSpec extends SparkSpec {
 
   test("hilbert_index expression matches the scala loop and stays codegen'd") {
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     val df = spark.range(0, 2000)
       .select((col("id") * 37 % 1499).as("x"), (col("id") * 101 % 2039).as("y"))
     val got = df.select(col("x"), col("y"),
-        call_function("hilbert_index", col("x"), col("y")).as("h"))
+        hilbertIndex(col("x"), col("y")).as("h"))
       .collect()
     got.foreach(r =>
       assert(r.getLong(2) === Hilbert.index(r.getLong(0), r.getLong(1))))
     // native expression keeps the projection inside whole-stage codegen
     // (the executedPlan's "*(n)" prefix marks codegen'd spans)
-    val plan = df.select(call_function("hilbert_index", col("x"), col("y")))
+    val plan = df.select(hilbertIndex(col("x"), col("y")))
       .queryExecution.executedPlan.toString
     assert(plan.contains("*(1) Project"), plan)
   }

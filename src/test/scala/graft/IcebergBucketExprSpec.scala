@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.catalog.{IcebergMaintenance, IcebergPartitioning, IcebergTableReader}
 import graft.functions.GraftFunctions
+import graft.functions.GraftFunctions.icebergBucket
 
 /** The native `iceberg_bucket(n, col)` expression and the
   * single-shuffle `rewriteBucketed` it enables (r15): spec-hash
@@ -28,7 +29,7 @@ class IcebergBucketExprSpec extends SparkSpec {
     val longs = Seq(-5L, 0L, 1L, 34L, 137L, Long.MaxValue, Long.MinValue)
       .toDF("v")
     val gotL = longs.select($"v",
-        call_function("iceberg_bucket", lit(8), $"v").as("b"))
+        icebergBucket(8, $"v").as("b"))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
     longs.collect().map(_.getLong(0)).foreach { v =>
       assert(gotL(v) === IcebergPartitioning.bucketValue(8, v), s"long $v")
@@ -36,14 +37,14 @@ class IcebergBucketExprSpec extends SparkSpec {
 
     // int sources promote to long (spec: identical buckets)
     val gotI = Seq(34, -5, 0).toDF("v")
-      .select(call_function("iceberg_bucket", lit(8), $"v").as("b"))
+      .select(icebergBucket(8, $"v").as("b"))
       .collect().map(_.getLong(0))
     assert(gotI.toSeq === Seq(34L, -5L, 0L)
       .map(IcebergPartitioning.bucketValue(8, _)))
 
     val strs = Seq("iceberg", "", "id-7", "über", "日本語").toDF("s")
     val gotS = strs.select($"s",
-        call_function("iceberg_bucket", lit(4), $"s").as("b"))
+        icebergBucket(4, $"s").as("b"))
       .collect().map(r => (r.getString(0), r.getLong(1))).toMap
     gotS.keys.foreach { s =>
       assert(gotS(s) === IcebergPartitioning.bucketValueString(4, s), s)

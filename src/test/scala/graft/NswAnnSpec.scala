@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
+import graft.functions.GraftFunctions.cosineSim
 import graft.llm.SimOps
 
 /** Graph-ANN beam search (SimOps.nswAnn): deterministic, never worse
@@ -26,7 +27,6 @@ class NswAnnSpec extends SparkSpec {
     import spark.implicits._
     val emb = Tables.embeddings(spark, sf)
       .select($"vec_id", $"embedding".cast("array<double>").as("vec"))
-    graft.functions.GraftFunctions.register(spark)
     val entries = SimOps.clusterAssignments(spark, sf)
       .filter($"vec_id" >= 8)
       .withColumn("rn", org.apache.spark.sql.functions.row_number().over(
@@ -39,7 +39,7 @@ class NswAnnSpec extends SparkSpec {
       .crossJoin(broadcast(q))
       .filter($"vec_id" =!= $"query_id")
       .withColumn("cos6",
-        round(call_function("cosine_sim", $"vec", $"qvec"), 6))
+        round(cosineSim($"vec", $"qvec"), 6))
       .groupBy($"query_id").agg(max($"cos6").as("entry_best"))
     val searchBest = SimOps.nswAnn(spark, sf)
       .groupBy($"query_id").agg(max($"cosine").as("search_best"))

@@ -1,5 +1,9 @@
 package graft
 
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+
 /** Locks in the plan-quality invariants SURVEY §4 promises, across the
   * ENTIRE query catalog: no sort-based aggregation anywhere, no
   * cartesian products, and nested-loop broadcast joins only where they
@@ -104,20 +108,71 @@ class PlanHygieneSpec extends SparkSpec {
       s"single-partition window risks:\n${offenders.distinct.mkString("\n")}")
   }
 
+  /** Every query's executed plan, built in the shared session with all
+    * of graft's session state armed: Right(plan text, operator names),
+    * or Left(the build failure). */
+  private lazy val sharedPlans: Map[String, Either[String, (String, Seq[String])]] = {
+    graft.functions.GraftFunctions.register(spark)
+    SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
+      name -> planOf(spark, name, fn)
+    }.toMap
+  }
+
+  private def planOf(session: SparkSession, name: String,
+                     fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
+      : Either[String, (String, Seq[String])] =
+    SparkEntry.withConfs(session, SparkEntry.queryConfs.getOrElse(name, Map.empty)) {
+      try {
+        val plan = fn(session, sf).queryExecution.executedPlan
+        Right((plan.toString, PlanHygieneSpec.nodeNames(plan)))
+      } catch { case e: Throwable => Left(String.valueOf(e.getMessage)) }
+    }
+
   test("every query plans hash aggregation, no cartesians, whitelisted BNLJ only") {
     val offenders = scala.collection.mutable.ArrayBuffer.empty[String]
-    SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
-      val confs = SparkEntry.queryConfs.getOrElse(name, Map.empty)
-      SparkEntry.withConfs(spark, confs) {
-        val plan =
-          try fn(spark, sf).queryExecution.executedPlan.toString
-          catch { case e: Throwable => offenders += s"$name: plan failed ${e.getMessage}"; "" }
+    sharedPlans.toSeq.sortBy(_._1).foreach {
+      case (name, Left(err)) => offenders += s"$name: plan failed $err"
+      case (name, Right((plan, _))) =>
         if (plan.contains("SortAggregate")) offenders += s"$name: SortAggregate"
         if (plan.contains("CartesianProduct")) offenders += s"$name: CartesianProduct"
         if (plan.contains("BroadcastNestedLoop") && !bnljIntended(name))
           offenders += s"$name: unexpected BroadcastNestedLoopJoin"
-      }
     }
     assert(offenders.isEmpty, s"plan hygiene violations:\n${offenders.mkString("\n")}")
+  }
+
+  test("every query plans the same operators in a fresh session") {
+    // a new session has its own function registry and no optimizer
+    // rule or strategy armed: a plan that differs there depends on
+    // what other queries did to the session first
+    val offenders = SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
+      val fresh = PlanHygieneSpec.inFreshSession(spark)(planOf(_, name, fn).map(_._2))
+      val shared = sharedPlans(name).map(_._2)
+      if (fresh == shared) None
+      else Some(s"$name:\n  shared: $shared\n  fresh:  $fresh")
+    }
+    assert(offenders.isEmpty,
+      s"plans that depend on the session:\n${offenders.mkString("\n")}")
+  }
+}
+
+object PlanHygieneSpec {
+  /** Physical operator names in tree order, through the adaptive
+    * wrapper and subqueries. */
+  def nodeNames(plan: SparkPlan): Seq[String] = plan match {
+    case a: AdaptiveSparkPlanExec => a.nodeName +: nodeNames(a.executedPlan)
+    case p => p.nodeName +: (p.children ++ p.subqueries).flatMap(nodeNames)
+  }
+
+  /** Runs `f` in a new session of `spark`'s context, active meanwhile. */
+  def inFreshSession[T](spark: SparkSession)(f: SparkSession => T): T = {
+    val fresh = spark.newSession()
+    val prev = SparkSession.getActiveSession
+    SparkSession.setActiveSession(fresh)
+    try f(fresh)
+    finally prev match {
+      case Some(s) => SparkSession.setActiveSession(s)
+      case None => SparkSession.clearActiveSession()
+    }
   }
 }

@@ -4,6 +4,7 @@ import org.scalacheck.{Gen, Prop, Test => SCTest}
 import org.apache.spark.sql.functions._
 
 import graft.functions.GraftFunctions
+import graft.functions.GraftFunctions.{bagBound, sortedIntersectCount}
 import graft.llm.Dedup
 
 /** Property-based checks (ScalaCheck) for the custom operators whose
@@ -221,12 +222,11 @@ class PropertySpec extends SparkSpec {
 
   test("sorted_intersect_count equals set intersection on sorted arrays") {
     import spark.implicits._
-    GraftFunctions.register(spark)
     val genSet = Gen.listOf(Gen.choose(0L, 40L)).map(_.distinct.sorted)
     check("sorted merge == set intersect", Prop.forAll(genSet, genSet) {
       (a: List[Long], b: List[Long]) =>
         val got = Seq((a, b)).toDF("a", "b")
-          .select(call_function("sorted_intersect_count", col("a"), col("b")))
+          .select(sortedIntersectCount(col("a"), col("b")))
           .first().getInt(0)
         got == (a.toSet intersect b.toSet).size
     })
@@ -234,7 +234,6 @@ class PropertySpec extends SparkSpec {
 
   test("bag_bound never exceeds true edit distance on arbitrary strings") {
     import spark.implicits._
-    GraftFunctions.register(spark)
     val alphabet = "abcd " // small alphabet maximizes histogram collisions
     val genStr = for {
       n <- Gen.choose(0, 30)
@@ -253,7 +252,7 @@ class PropertySpec extends SparkSpec {
     check("bag_bound lower-bounds levenshtein", Prop.forAll(genStr, genStr) {
       (a: String, b: String) =>
         val got = Seq((hist(a), hist(b))).toDF("fa", "fb")
-          .select(call_function("bag_bound", col("fa"), col("fb")))
+          .select(bagBound(col("fa"), col("fb")))
           .first().getInt(0)
         // the Catalyst expression computes the bag bound exactly...
         val ins = alphabet.map(c => math.max(0, a.count(_ == c) - b.count(_ == c))).sum

@@ -2,6 +2,7 @@ package graft
 
 import scala.math.BigDecimal.RoundingMode
 
+import graft.functions.GraftFunctions.cosineSim
 import graft.llm.{Dedup, SimOps, TextOps}
 
 /** r9 additions: BM25 lexical retrieval, hybrid RRF fusion, duplicated
@@ -300,13 +301,12 @@ class Round9OpsSpec extends SparkSpec {
     import org.apache.spark.sql.expressions.Window
     import org.apache.spark.sql.functions._
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     // dense list via an independent window formulation
     val emb = Tables.embeddings(spark, sf)
       .select($"vec_id", $"embedding".cast("array<double>").as("vec"))
     val q = emb.filter($"vec_id" === 0).select($"vec".as("qvec"))
     val vecRanks = emb.filter($"vec_id" =!= 0).crossJoin(broadcast(q))
-      .withColumn("cos6", round(call_function("cosine_sim", $"vec", $"qvec"), 6))
+      .withColumn("cos6", round(cosineSim($"vec", $"qvec"), 6))
       .withColumn("rnk", row_number().over(
         Window.orderBy($"cos6".desc, $"vec_id".asc)))
       .filter($"rnk" <= 30)

@@ -4,12 +4,12 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.GraftFunctions
+import graft.functions.GraftFunctions.topKStructs
 
 class TopKStructsSpec extends SparkSpec {
 
   test("top_k_structs equals window row_number top-k across many partitions") {
     import spark.implicits._
-    GraftFunctions.register(spark)
     // deterministic synthetic data, spread over 8 partitions so the
     // merge (partial-aggregation) path is exercised
     val df = spark.range(0, 2000, 1, 8)
@@ -17,8 +17,7 @@ class TopKStructsSpec extends SparkSpec {
               (($"id" * 2654435761L) % 1000).as("score"),
               $"id")
     val viaAgg = df.groupBy($"grp")
-      .agg(call_function("top_k_structs",
-        struct($"score", (-$"id").as("neg_id"), $"id"), lit(3)).as("top"))
+      .agg(topKStructs(struct($"score", (-$"id").as("neg_id"), $"id"), 3).as("top"))
       .select($"grp", posexplode($"top"))
       .select($"grp", $"col.score".as("score"), $"col.id".as("id"),
               ($"pos" + 1).as("rn"))
@@ -32,10 +31,9 @@ class TopKStructsSpec extends SparkSpec {
 
   test("top_k_structs with fewer rows than k returns all, sorted descending") {
     import spark.implicits._
-    GraftFunctions.register(spark)
     val df = Seq((1L, 5.0, 10L), (1L, 9.0, 11L), (2L, 3.0, 12L)).toDF("g", "v", "id")
     val out = df.groupBy($"g")
-      .agg(call_function("top_k_structs", struct($"v", $"id"), lit(5)).as("top"))
+      .agg(topKStructs(struct($"v", $"id"), 5).as("top"))
       .select($"g", $"top")
       .collect().map(r => r.getLong(0) -> r.getSeq[org.apache.spark.sql.Row](1)).toMap
     assert(out(1L).map(_.getDouble(0)) === Seq(9.0, 5.0))
