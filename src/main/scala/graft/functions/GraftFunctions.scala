@@ -2,8 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
-import org.apache.spark.sql.catalyst.expressions.aggregate.AggregateFunction
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -15,10 +14,10 @@ import graft.sink.HilbertIndex
 /** graft's native functions, and the session state SQL text needs.
   *
   * DataFrame code calls the typed builders (`cosineSim`, `topKStructs`,
-  * …): each constructs its Catalyst expression directly, so a plan
-  * never depends on what the session has registered. The analyzer sees
-  * the same tree — and names an unaliased column the same way — as for
-  * the SQL-text call of the same function.
+  * …): each builds its Catalyst expression directly, through the same
+  * constructor the SQL-text call uses, so a plan never depends on what
+  * the session has registered, and the analyzer sees the same tree — and
+  * names an unaliased column the same way — as for the SQL text.
   *
   * SQL text resolves function names through the session's registries,
   * and the optimizer rewrites and the as-of join strategy only act in a
@@ -26,50 +25,50 @@ import graft.sink.HilbertIndex
   * driver-owned session, [[GraftExtensions]] at session build. */
 object GraftFunctions {
 
-  private def native(e: Expression): Column = GraftSql.column(e)
-  private def agg(f: AggregateFunction): Column = native(f.toAggregateExpression())
   private def e(c: Column): Expression = GraftSql.expression(c)
 
+  /** The expression SQL text `name(args…)` builds — one constructor per
+    * function, in [[descriptors]] — as a Column, with no name lookup in
+    * any session's function registry. */
+  private def call(name: String, args: Expression*): Column =
+    GraftSql.column(builders(name)(args))
+
+  private lazy val builders = descriptors.map { case (id, _, build) => id.funcName -> build }.toMap
+
   /** Cosine similarity of two `array<double>` columns ([[CosineSim]]). */
-  def cosineSim(a: Column, b: Column): Column = native(CosineSim(e(a), e(b)))
+  def cosineSim(a: Column, b: Column): Column = call("cosine_sim", e(a), e(b))
 
   /** Hilbert d-value of two bigint columns ([[HilbertIndex]]). */
-  def hilbertIndex(x: Column, y: Column): Column = native(HilbertIndex(e(x), e(y)))
+  def hilbertIndex(x: Column, y: Column): Column = call("hilbert_index", e(x), e(y))
 
   /** Edit-distance lower bound of two character histograms ([[BagBound]]). */
-  def bagBound(a: Column, b: Column): Column = native(BagBound(e(a), e(b)))
+  def bagBound(a: Column, b: Column): Column = call("bag_bound", e(a), e(b))
 
   /** Size of the intersection of two sorted `array<bigint>` ([[SortedIntersectCount]]). */
   def sortedIntersectCount(a: Column, b: Column): Column =
-    native(SortedIntersectCount(e(a), e(b)))
+    call("sorted_intersect_count", e(a), e(b))
 
   /** Iceberg's `bucket[numBuckets]` transform ([[IcebergBucket]]). */
   def icebergBucket(numBuckets: Int, c: Column): Column =
-    native(IcebergBucket(numBuckets, e(c)))
+    call("iceberg_bucket", Literal(numBuckets), e(c))
 
   /** Aggregate: the k values of smallest md5, a consistent sample ([[BottomKByHash]]). */
-  def bottomKByHash(c: Column, k: Int): Column = agg(BottomKByHash(e(c), k))
+  def bottomKByHash(c: Column, k: Int): Column = call("bottomk_by_hash", e(c), Literal(k))
 
   /** Aggregate: the k smallest distinct longs, a KMV sketch ([[BottomKDistinct]]). */
-  def bottomKDistinct(c: Column, k: Int): Column = agg(BottomKDistinct(e(c), k))
+  def bottomKDistinct(c: Column, k: Int): Column = call("bottomk_distinct", e(c), Literal(k))
 
   /** Aggregate: Misra–Gries heavy-hitter candidates ([[FrequentItems]]). */
-  def frequentItems(c: Column, k: Int): Column = agg(FrequentItems(e(c), k))
+  def frequentItems(c: Column, k: Int): Column = call("frequent_items", e(c), Literal(k))
 
   /** Aggregate: DDSketch quantile summary ([[DdsketchAgg]]). */
-  def ddsketchAgg(c: Column, m: Int): Column = agg(DdsketchAgg(e(c), m))
+  def ddsketchAgg(c: Column, m: Int): Column = call("ddsketch_agg", e(c), Literal(m))
 
   /** Aggregate: the k first structs of a group ([[TopKStructs]]). With
-    * `ascending` given only its leading fields are compared and the
-    * rest is payload; `nullsFirst` defaults to all-false. */
-  def topKStructs(s: Column, k: Int, ascending: Seq[Boolean] = Nil,
-                  nullsFirst: Seq[Boolean] = Nil): Column =
-    agg(topK(e(s), k, ascending, nullsFirst))
-
-  private def topK(s: Expression, k: Int, ascending: Seq[Boolean],
-                   nullsFirst: Seq[Boolean]): TopKStructs =
-    TopKStructs(s, k, ascending,
-      if (nullsFirst.isEmpty) ascending.map(_ => false) else nullsFirst)
+    * `ascending` given only its leading fields are compared, nulls last,
+    * and the rest is payload. */
+  def topKStructs(s: Column, k: Int, ascending: Seq[Boolean] = Nil): Column =
+    call("top_k_structs", e(s), Literal(k), Literal(ascending.toArray))
 
   private type Descriptor = (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)
 
@@ -84,16 +83,21 @@ object GraftFunctions {
       .getOrElse(Nil)
 
   /** The SQL-text name of every native function, for [[register]] and
-    * [[GraftExtensions]] alike. */
+    * [[GraftExtensions]] alike; the typed builders build through these. */
   val descriptors: Seq[Descriptor] = Seq(
     sqlFunction("cosine_sim", classOf[CosineSim])(a => CosineSim(a(0), a(1))),
     sqlFunction("bottomk_by_hash", classOf[BottomKByHash])(a =>
       BottomKByHash(a(0), int(a(1))).toAggregateExpression()),
     sqlFunction("bottomk_distinct", classOf[BottomKDistinct])(a =>
       BottomKDistinct(a(0), int(a(1))).toAggregateExpression()),
-    // top_k_structs(struct, k[, ascending_array[, nulls_first_array]])
-    sqlFunction("top_k_structs", classOf[TopKStructs])(a =>
-      topK(a(0), int(a(1)), bools(a, 2), bools(a, 3)).toAggregateExpression()),
+    // top_k_structs(struct, k[, ascending_array[, nulls_first_array]]);
+    // nulls sort last unless the fourth argument says otherwise
+    sqlFunction("top_k_structs", classOf[TopKStructs]) { a =>
+      val ascending = bools(a, 2)
+      val nullsFirst = bools(a, 3)
+      TopKStructs(a(0), int(a(1)), ascending,
+        if (nullsFirst.isEmpty) ascending.map(_ => false) else nullsFirst).toAggregateExpression()
+    },
     sqlFunction("frequent_items", classOf[FrequentItems])(a =>
       FrequentItems(a(0), int(a(1))).toAggregateExpression()),
     sqlFunction("hilbert_index", classOf[HilbertIndex])(a => HilbertIndex(a(0), a(1))),

@@ -1,10 +1,12 @@
 package graft
 
+import java.io.File
 import java.nio.file.{Files, Path, Paths}
 
 import scala.jdk.CollectionConverters._
 import scala.util.Try
 
+import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.catalog.{IcebergMaintenance, IcebergTableReader}
@@ -51,22 +53,24 @@ class SessionIndependenceSpec extends SparkSpec {
 
   test("writeNdvIndex and a hilbert writeBatch run in a fresh session") {
     val base = Files.createTempDirectory("graft-fresh-session").toString
-    val events = Tables.events(spark, sf)
-    events.write.parquet(s"$base/src")
-    val (nTypes, nRows) = (events.select("event_type").distinct().count(), events.count())
-    inFreshSession(spark) { s =>
-      val loc = s"$base/tbl"
-      IcebergMaintenance.rewriteBucketed(s, s"$base/src", loc, "user_id", 4)
-      IcebergMaintenance.writeNdvIndex(s, loc, Seq("event_type"))
-      val ndv = IcebergTableReader.ndvFromStats(s, loc)
-        .where("column = 'event_type'").select("ndv", "exact").collect()
-      assert(ndv.length === 1 && ndv(0).getLong(0) === nTypes && ndv(0).getBoolean(1))
+    try {
+      val events = Tables.events(spark, sf)
+      events.write.parquet(s"$base/src")
+      val (nTypes, nRows) = (events.select("event_type").distinct().count(), events.count())
+      inFreshSession(spark) { s =>
+        val loc = s"$base/tbl"
+        IcebergMaintenance.rewriteBucketed(s, s"$base/src", loc, "user_id", 4)
+        IcebergMaintenance.writeNdvIndex(s, loc, Seq("event_type"))
+        val ndv = IcebergTableReader.ndvFromStats(s, loc)
+          .where("column = 'event_type'").select("ndv", "exact").collect()
+        assert(ndv.length === 1 && ndv(0).getLong(0) === nTypes && ndv(0).getBoolean(1))
 
-      PartitionedParquetSink.writeBatch(Tables.events(s, sf),
-        SinkConfig(base, "hil", tsColumn = "ts", granularity = "monthly",
-          writeTasks = Some(1), zOrderBy = Seq("user_id", "event_id"), curve = "hilbert"))
-      assert(s.read.parquet(s"$base/hil").count() === nRows)
-    }
+        PartitionedParquetSink.writeBatch(Tables.events(s, sf),
+          SinkConfig(base, "hil", tsColumn = "ts", granularity = "monthly",
+            writeTasks = Some(1), zOrderBy = Seq("user_id", "event_id"), curve = "hilbert"))
+        assert(s.read.parquet(s"$base/hil").count() === nRows)
+      }
+    } finally FileUtils.deleteDirectory(new File(base))
   }
 
   test("src/main names no native function through call_function") {
