@@ -29,6 +29,11 @@ import graft.sink.PartitionedParquetSink.SinkConfig
   *    (at-least-once safe, like the reference's re-register path).
   *  - repartition: read a table and rewrite it at a different
   *    granularity (repartitioner.go re-segments files across partitions).
+  *
+  * Storage is reached through the session's Hadoop conf
+  * (`sessionState.newHadoopConf()`), so confs a streaming query holds on
+  * its session, such as [[graft.storage.NioLocalFileSystem.Confs]], also
+  * cover the register step it runs.
   */
 object Recovery {
 
@@ -56,7 +61,7 @@ object Recovery {
   /** The table's data files, listed on the driver. */
   private[graft] def dataFiles(spark: SparkSession, tablePath: String): Seq[(String, Long)] = {
     val path = new Path(tablePath)
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = path.getFileSystem(spark.sessionState.newHadoopConf())
     val files = ArrayBuffer.empty[(String, Long)]
     if (fs.exists(path)) walkDataFiles(fs, path, files)
     files.toSeq
@@ -81,7 +86,7 @@ object Recovery {
   def listDataFilesDistributed(spark: SparkSession, tablePath: String,
                                parallelism: Int = 64): DataFrame = {
     import spark.implicits._
-    val conf = spark.sparkContext.hadoopConfiguration
+    val conf = spark.sessionState.newHadoopConf()
     val root = new Path(tablePath)
     val fs = root.getFileSystem(conf)
     if (!fs.exists(root)) return Seq.empty[(String, Long)].toDF("file_path", "file_size")
@@ -161,7 +166,7 @@ object Recovery {
   /** The manifest as a DataFrame (empty when it does not exist yet). */
   def readManifest(spark: SparkSession, manifestPath: String): DataFrame = {
     val dir = new Path(manifestPath)
-    if (dir.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(dir))
+    if (dir.getFileSystem(spark.sessionState.newHadoopConf()).exists(dir))
       spark.read.schema(ManifestSchema).parquet(manifestPath)
     else spark.createDataFrame(spark.sparkContext.emptyRDD[Row], ManifestSchema)
   }
@@ -187,7 +192,7 @@ object Recovery {
     * so a crash in between leaves duplicate entries (the next fold drops
     * them), never lost ones. */
   private final class Manifest(spark: SparkSession, manifestPath: String) {
-    val conf: Configuration = spark.sparkContext.hadoopConfiguration
+    val conf: Configuration = spark.sessionState.newHadoopConf()
     val dir = new Path(manifestPath)
     val fs: FileSystem = dir.getFileSystem(conf)
     val parts: Seq[FileStatus] =
@@ -547,7 +552,7 @@ object Recovery {
     val df = spark.read.parquet(files: _*)
     PartitionedParquetSink.writeBatch(df, SinkConfig(basePath, table,
       tsColumn = tsColumn, granularity = granularity))
-    val conf = spark.sparkContext.hadoopConfiguration
+    val conf = spark.sessionState.newHadoopConf()
     files.foreach { f =>
       val p = new Path(f)
       p.getFileSystem(conf).delete(p, false)

@@ -10,6 +10,7 @@ import org.apache.spark.sql.types.MetadataBuilder
 import org.apache.spark.sql.Row
 
 import graft.functions.GraftFunctions.hilbertIndex
+import graft.storage.NioLocalFileSystem
 
 /** Time-partitioned parquet sink — the Spark-native counterpart of the
   * reference's write path (writer.go + internal/iceberg/partition.go).
@@ -221,11 +222,13 @@ object PartitionedParquetSink {
     * writer-option scoping is ignored — ParquetOptions only knows
     * compression/mergeSchema), so the conf must stay set while the
     * stream runs; [[startWithConfs]] restores the caller's value when
-    * the query terminates. */
+    * the query terminates. The query's `file:` storage (data files,
+    * sink log, checkpoint) is held on [[NioLocalFileSystem]] the same
+    * way, as for every ingest loop ([[graft.streaming.IngestLoop]]). */
   def startStream(df: DataFrame, cfg: SinkConfig,
                   checkpoint: String): StreamingQuery =
-    startWithConfs(df.sparkSession,
-      Seq("spark.sql.parquet.outputTimestampType" -> "TIMESTAMP_MICROS")) {
+    startWithConfs(df.sparkSession, NioLocalFileSystem.Confs :+
+        ("spark.sql.parquet.outputTimestampType" -> "TIMESTAMP_MICROS")) {
       writeStream(df, cfg, checkpoint).start()
     }
 

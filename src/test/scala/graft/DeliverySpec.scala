@@ -1,7 +1,6 @@
 package graft
 
 import java.io.IOException
-import java.nio.file.Files
 import java.util.concurrent.atomic.AtomicInteger
 
 import scala.collection.mutable.ArrayBuffer
@@ -102,7 +101,7 @@ class DeliverySpec extends SparkSpec {
   // ---- retrying ingest -------------------------------------------------
 
   test("transient failure between write and register: retried batch lands once in the manifest") {
-    val base = Files.createTempDirectory("graft-delivery").toString
+    val base = tempDir("graft-delivery")
     val batch = Tables.events(spark, sf).limit(400)
     val srcDir = s"$base/src"
     batch.write.parquet(srcDir)
@@ -137,7 +136,7 @@ class DeliverySpec extends SparkSpec {
   }
 
   test("permanent failure fails the query fast: no retries, cause surfaced") {
-    val base = Files.createTempDirectory("graft-delivery-perm").toString
+    val base = tempDir("graft-delivery-perm")
     val batch = Tables.events(spark, sf).limit(100)
     val srcDir = s"$base/src"
     batch.write.parquet(srcDir)

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import graft.catalog.IcebergTableReader
 import graft.streaming.IcebergCdcSink
 
@@ -20,8 +18,8 @@ class IcebergCdcStreamSpec extends SparkSpec {
     import spark.implicits._
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val loc = Files.createTempDirectory("graft-cdc-stream").toString + "/t"
-    val ckpt = Files.createTempDirectory("graft-cdc-ckpt").toString
+    val loc = tempDir("graft-cdc-stream") + "/t"
+    val ckpt = tempDir("graft-cdc-ckpt")
 
     val input = MemoryStream[(Long, Long, String)]
     val changes = input.toDF().toDF("id", "ts", "payload")
@@ -59,7 +57,7 @@ class IcebergCdcStreamSpec extends SparkSpec {
 
   test("replayed batch ids are detected on the chain and skipped (exactly-once)") {
     import spark.implicits._
-    val loc = Files.createTempDirectory("graft-cdc-replay").toString + "/t"
+    val loc = tempDir("graft-cdc-replay") + "/t"
 
     val b0 = Seq((1L, 10L, "a1"), (2L, 20L, "a2")).toDF("id", "ts", "payload")
     assert(IcebergCdcSink.applyBatch(spark, loc, b0, 0L, Seq("id")))
@@ -81,7 +79,7 @@ class IcebergCdcStreamSpec extends SparkSpec {
 
   test("fresh-checkpoint restart is not mistaken for a replay (epoch carries stream identity)") {
     import spark.implicits._
-    val loc = Files.createTempDirectory("graft-cdc-fresh").toString + "/t"
+    val loc = tempDir("graft-cdc-fresh") + "/t"
     val sidA = IcebergCdcSink.streamIdOf("/ckpt/a")
     val sidB = IcebergCdcSink.streamIdOf("/ckpt/b")
     assert(sidA !== sidB)
@@ -112,14 +110,14 @@ class IcebergCdcStreamSpec extends SparkSpec {
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val fake = new FakeRestCatalog
     fake.warehouseDir =
-      "file://" + Files.createTempDirectory("graft-cdc-cat").toString
+      "file://" + tempDir("graft-cdc-cat")
     try {
       val client = new RestCatalogClient(Settings(fake.uri,
         warehouse = fake.warehouseDir,
         auth = CatalogAuth(clientId = "svc", clientSecret = "hunter2"),
         retry = graft.streaming.Delivery.RetryPolicy(
           maxAttempts = 4, initialBackoffMs = 1, sleep = _ => ())))
-      val ckpt = Files.createTempDirectory("graft-cdc-cat-ckpt").toString
+      val ckpt = tempDir("graft-cdc-cat-ckpt")
       val input = MemoryStream[(Long, Long, String)]
       val changes = input.toDF().toDF("id", "ts", "payload")
 

@@ -52,7 +52,7 @@ class PropertySpec extends SparkSpec {
     check("winnow", Prop.forAll(Gen.nonEmptyListOf(textGen)) { texts =>
       val docs = texts.zipWithIndex.map { case (t, i) => (i.toLong, t, "en", "src") }
         .toDF("doc_id", "text", "lang", "source")
-      val tmp = java.nio.file.Files.createTempDirectory("winnow-prop")
+      val tmp = tempDir("winnow-prop")
       docs.write.mode("overwrite").parquet(s"$tmp/documents.parquet")
       val got = graft.llm.TextOps.winnowFingerprints(spark, tmp.toString)
         .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2), r.getLong(3))).toMap
@@ -151,7 +151,7 @@ class PropertySpec extends SparkSpec {
     }
     checkFew("pack", Prop.forAll(Gen.nonEmptyListOf(docGen)) { docs =>
       val rows = docs.zipWithIndex.map { case ((t, s), i) => (i.toLong, t, "en", s) }
-      val tmp = java.nio.file.Files.createTempDirectory("pack-prop")
+      val tmp = tempDir("pack-prop")
       rows.toDF("doc_id", "text", "lang", "source")
         .write.mode("overwrite").parquet(s"$tmp/documents.parquet")
       val got = graft.llm.TextOps.packSequences(spark, tmp.toString, budget)
@@ -196,7 +196,7 @@ class PropertySpec extends SparkSpec {
     }
     checkFew("span", Prop.forAll(Gen.nonEmptyListOf(docGen)) { texts =>
       val rows = texts.zipWithIndex.map { case (t, i) => (i.toLong, t, "en", "s") }
-      val tmp = java.nio.file.Files.createTempDirectory("span-prop")
+      val tmp = tempDir("span-prop")
       rows.toDF("doc_id", "text", "lang", "source")
         .write.mode("overwrite").parquet(s"$tmp/documents.parquet")
       val got = graft.llm.Dedup.spanCoverage(spark, tmp.toString, k)

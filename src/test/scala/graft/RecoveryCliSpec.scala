@@ -11,7 +11,7 @@ import graft.sink.PartitionedParquetSink.SinkConfig
   * (cmd/recovery/main.go: flags, dry-run, report, exit codes). */
 class RecoveryCliSpec extends SparkSpec {
 
-  private def tmp(): String = Files.createTempDirectory("graft-cli").toString
+  private def tmp(): String = tempDir("graft-cli")
 
   private def runCli(args: String*): (Int, String) = {
     val sb = new StringBuilder

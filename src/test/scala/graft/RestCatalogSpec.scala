@@ -22,7 +22,7 @@ class RestCatalogSpec extends SparkSpec {
 
   private def withCatalog(f: (FakeRestCatalog, RestCatalogClient) => Unit): Unit = {
     val fake = new FakeRestCatalog
-    fake.warehouseDir = "file://" + Files.createTempDirectory("graft-restcat").toString
+    fake.warehouseDir = "file://" + tempDir("graft-restcat")
     try {
       val client = new RestCatalogClient(Settings(fake.uri,
         warehouse = fake.warehouseDir,
@@ -273,8 +273,7 @@ class RestCatalogSpec extends SparkSpec {
       val df = (0L until 4000L).map(i => (i, s"p$i")).toDF("id", "payload")
       client.ensureTable("otel", "tstats", df.schema)
       val loc = fake.tables(("otel", "tstats")).location
-      val dataDir = java.nio.file.Files
-        .createTempDirectory("graft-rest-stats").toString + "/data"
+      val dataDir = tempDir("graft-rest-stats") + "/data"
       df.repartition(8, org.apache.spark.sql.functions.col("id") % 8)
         .write.parquet(dataDir)
       val paths = java.nio.file.Files.list(java.nio.file.Paths.get(dataDir))
@@ -352,7 +351,7 @@ class RestCatalogSpec extends SparkSpec {
         .toDF("id", "name", "value")
       client.ensureTable("otel", "dim", v1.schema)
       val loc = fake.tables(("otel", "dim")).location
-      val base = Files.createTempDirectory("graft-rest-upsert").toString
+      val base = tempDir("graft-rest-upsert")
       def landed(df: org.apache.spark.sql.DataFrame, dir: String)
           : Seq[DataFile] = {
         df.coalesce(1).write.parquet(dir)
@@ -430,7 +429,7 @@ class RestCatalogSpec extends SparkSpec {
       import graft.sink.PartitionedParquetSink
       import graft.sink.PartitionedParquetSink.SinkConfig
       import graft.streaming.{Delivery, StreamingIngest}
-      val base = Files.createTempDirectory("graft-restcat-stream").toString
+      val base = tempDir("graft-restcat-stream")
       val batch = Tables.events(spark, sf).limit(400)
       val srcDir = s"$base/src"
       batch.write.parquet(srcDir)
@@ -472,7 +471,7 @@ class RestCatalogSpec extends SparkSpec {
     withCatalog { (fake, client) =>
       import graft.sink.PartitionedParquetSink
       import graft.sink.PartitionedParquetSink.SinkConfig
-      val base = Files.createTempDirectory("graft-restcat-e2e").toString
+      val base = tempDir("graft-restcat-e2e")
       val batch = Tables.events(spark, sf).limit(500)
       val cfg = SinkConfig(base, "events", tsColumn = "ts", granularity = "daily")
       PartitionedParquetSink.writeBatch(batch, cfg)
@@ -518,7 +517,7 @@ class RestCatalogSpec extends SparkSpec {
     val df = spark.createDataFrame(
       java.util.Arrays.asList(row), schema)
 
-    val dir = Files.createTempDirectory("graft-fieldid").toString
+    val dir = tempDir("graft-fieldid")
     graft.sink.PartitionedParquetSink.withIcebergFieldIds(df)
       .coalesce(1).write.mode("overwrite").parquet(dir)
 

@@ -11,7 +11,7 @@ import graft.sink.PartitionedParquetSink.SinkConfig
 class SinkRecoverySpec extends SparkSpec {
 
   private def tmp(): String =
-    Files.createTempDirectory("graft-sink").toString
+    tempDir("graft-sink")
 
   private def eventsDf = Tables.events(spark, sf)
 

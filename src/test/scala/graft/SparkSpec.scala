@@ -1,6 +1,13 @@
 package graft
 
+import java.io.File
+import java.nio.file.Files
+
+import scala.collection.mutable.ArrayBuffer
+
+import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.SparkSession
+import org.scalatest.Outcome
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local SparkSession for all suites (one JVM-wide session keeps
@@ -20,6 +27,26 @@ object TestSpark {
 abstract class SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = TestSpark.spark
   val sf: String = TestSpark.sf
+
+  private val tempDirs = ArrayBuffer.empty[File]
+
+  /** A new temp directory named `prefix...`, deleted with everything
+    * below it when the running test ends, whether it passed or not.
+    * Call it inside a test body. */
+  def tempDir(prefix: String): String = {
+    val dir = Files.createTempDirectory(prefix).toFile
+    tempDirs.synchronized(tempDirs += dir)
+    dir.toString
+  }
+
+  /** Deletes the test's [[tempDir]]s in a `finally`; quietly, so a
+    * failed delete never hides the test's own outcome. */
+  override def withFixture(test: NoArgTest): Outcome =
+    try super.withFixture(test)
+    finally tempDirs.synchronized {
+      tempDirs.foreach(FileUtils.deleteQuietly)
+      tempDirs.clear()
+    }
 
   /** Runs `f` on the RocksDB state store, which every stateful
     * streaming operator needs, then restores the previous provider. */

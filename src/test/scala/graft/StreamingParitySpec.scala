@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import java.sql.Timestamp
 import java.util.concurrent.atomic.AtomicInteger
 
@@ -95,7 +94,7 @@ object StreamingParity {
     * of a fresh sf dir. */
   private def batch[T: Encoder](spec: SparkSpec, query: String, table: String,
                                 prefix: Seq[T]): Array[Row] = {
-    val dir = Files.createTempDirectory("graft-parity").toString
+    val dir = spec.tempDir("graft-parity")
     spec.spark.createDataset(prefix).write.parquet(s"$dir/$table.parquet")
     SparkEntry.queries(query)(spec.spark, dir).collect()
   }

@@ -15,7 +15,7 @@ class StreamingRollupSpec extends SparkSpec {
 
   test("streamed rollup == batch rollup; restart folds new data in") {
     import spark.implicits._
-    val base = Files.createTempDirectory("graft-roll-stream").toString
+    val base = tempDir("graft-roll-stream")
     val batch = Tables.events(spark, sf)
     batch.write.parquet(s"$base/src")
 
@@ -64,7 +64,7 @@ class StreamingRollupSpec extends SparkSpec {
     * batch restores and folds. */
   test("publish crash window: bak-only state recovers, no group lost") {
     import spark.implicits._
-    val base = Files.createTempDirectory("graft-roll-crash").toString
+    val base = tempDir("graft-roll-crash")
     val batch = Tables.events(spark, sf)
     batch.write.parquet(s"$base/src")
     StreamingRollup.maintain(
@@ -97,7 +97,7 @@ class StreamingRollupSpec extends SparkSpec {
 
   test("Iceberg-table rollup: upsert snapshots, time travel, compaction") {
     import spark.implicits._
-    val base = Files.createTempDirectory("graft-roll-ice").toString
+    val base = tempDir("graft-roll-ice")
     val batch = Tables.events(spark, sf)
     // three source files → three micro-batches → three upsert snapshots
     val thirds = batch.count() / 3
@@ -175,7 +175,7 @@ class StreamingRollupSpec extends SparkSpec {
 
   test("Iceberg rollup: a fresh checkpoint over an existing table lands its groups") {
     import spark.implicits._
-    val base = Files.createTempDirectory("graft-roll-fresh").toString
+    val base = tempDir("graft-roll-fresh")
     def source(dir: String, day: String, types: Seq[String]): org.apache.spark.sql.DataFrame = {
       types.zipWithIndex.map { case (t, i) => (s"$day 0$i:30:00", t, i + 1.0, i.toLong) }
         .toDF("ts", "event_type", "value", "user_id")
@@ -197,7 +197,7 @@ class StreamingRollupSpec extends SparkSpec {
 
   test("Iceberg rollup: a replayed batch is skipped and its state still commits") {
     import spark.implicits._
-    val base = Files.createTempDirectory("graft-roll-replay").toString
+    val base = tempDir("graft-roll-replay")
     Seq(("2024-01-01 00:30:00", "click", 1.0, 1L)).toDF("ts", "event_type", "value", "user_id")
       .withColumn("ts", to_timestamp($"ts")).write.parquet(s"$base/src")
     def run() = {
@@ -224,7 +224,7 @@ class StreamingRollupSpec extends SparkSpec {
   test("RollupRewrite answers raw-table aggregates from the STREAMED snapshot") {
     import spark.implicits._
     graft.functions.GraftFunctions.register(spark)
-    val base = Files.createTempDirectory("graft-roll-loop").toString
+    val base = tempDir("graft-roll-loop")
     val batch = Tables.events(spark, sf)
     batch.write.parquet(s"$base/events.parquet")
     StreamingRollup.maintain(

@@ -1,17 +1,16 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.sink.PartitionedParquetSink.SinkConfig
+import graft.storage.NioLocalFileSystem
 import graft.streaming.{Delivery, StreamingIngest}
 
 class StreamingSpec extends SparkSpec {
 
   test("file-stream ingest writes the partitioned layout exactly once") {
-    val base = Files.createTempDirectory("graft-stream").toString
+    val base = tempDir("graft-stream")
     val batch = Tables.events(spark, sf)
     val srcDir = s"$base/src"
     batch.write.parquet(srcDir)
@@ -40,7 +39,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("stream sink writes int64-micros timestamps without mutating the session") {
-    val base = Files.createTempDirectory("graft-stream-ts").toString
+    val base = tempDir("graft-stream-ts")
     val batch = Tables.events(spark, sf).limit(200)
     val srcDir = s"$base/src"
     batch.write.parquet(srcDir)
@@ -69,7 +68,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("manifest ingest scopes the listing threshold to the query lifetime") {
-    val base = Files.createTempDirectory("graft-stream-listing").toString
+    val base = tempDir("graft-stream-listing")
     val batch = Tables.events(spark, sf).limit(200)
     val srcDir = s"$base/src"
     batch.write.parquet(srcDir)
@@ -103,8 +102,47 @@ class StreamingSpec extends SparkSpec {
       _ == graft.config.ExporterConfig.Batch().sendBatchSize.toString), during)
   }
 
+  test("manifest ingest holds the local storage confs for the query lifetime") {
+    val base = tempDir("graft-stream-storage")
+    val batch = Tables.events(spark, sf).limit(200)
+    val srcDir = s"$base/src"
+    batch.write.parquet(srcDir)
+    val cfg = SinkConfig(base, "events", tsColumn = "ts", granularity = "monthly")
+
+    // every file the query creates or renames (checkpoint, data,
+    // manifest) goes through the held confs; a listener restores the
+    // caller's values (set or unset) at termination — poll briefly
+    val keys = NioLocalFileSystem.Confs.map(_._1)
+    def explicit = keys.map(spark.conf.getAll.get) // None while unset
+    val caller = explicit
+    val stock = Seq(classOf[org.apache.hadoop.fs.LocalFileSystem].getName,
+      classOf[org.apache.hadoop.fs.local.LocalFs].getName, "false").map(Some(_))
+    val events = StreamingIngest.readEvents(spark, srcDir, batch.schema)
+    // the retrying ingest's register seam sees the held values mid-run
+    val during = scala.collection.mutable.ArrayBuffer.empty[Seq[String]]
+    val starts: Seq[(String, String) => StreamingQuery] = Seq(
+      StreamingIngest.ingestWithManifest(events, cfg, _, _),
+      (chk, man) => Delivery.ingestWithManifestRetrying(events, cfg, chk, man,
+        beforeRegister = _ => during += keys.map(spark.conf.get)))
+    def set(values: Seq[Option[String]]): Unit = keys.zip(values).foreach {
+      case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _))
+    }
+    val cases = for (start <- starts; before <- Seq(stock, keys.map(_ => None)))
+      yield (start, before)
+    try cases.zipWithIndex.foreach { case ((start, before), i) =>
+      set(before)
+      start(s"$base/chk$i", s"$base/manifest$i").awaitTermination()
+      val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
+      while (explicit != before && System.nanoTime() < deadline)
+        Thread.sleep(50)
+      assert(explicit === before, s"case $i")
+      assert(spark.read.parquet(s"$base/manifest$i").count() > 0, s"case $i")
+    } finally set(caller)
+    assert(during.nonEmpty && during.forall(_ == NioLocalFileSystem.Confs.map(_._2)), during)
+  }
+
   test("foreachBatch ingest registers every written file in the manifest") {
-    val base = Files.createTempDirectory("graft-stream-man").toString
+    val base = tempDir("graft-stream-man")
     val batch = Tables.events(spark, sf)
     val srcDir = s"$base/src"
     batch.write.parquet(srcDir)
@@ -187,7 +225,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("update-mode materialized view converges to the batch rollup") {
-    val base = Files.createTempDirectory("graft-stream-mv").toString
+    val base = tempDir("graft-stream-mv")
     val batch = Tables.events(spark, sf)
     // several source files + maxFilesPerTrigger=2 → multiple micro-batches,
     // so the upsert path (not just a single emission) is exercised
@@ -224,7 +262,7 @@ class StreamingSpec extends SparkSpec {
 
   test("streaming dedup collapses an at-least-once duplicated source") {
     import spark.implicits._
-    val base = Files.createTempDirectory("graft-stream-dedup").toString
+    val base = tempDir("graft-stream-dedup")
     val batch = Tables.events(spark, sf).limit(200)
     // simulate at-least-once delivery: every record arrives twice
     batch.unionAll(batch).write.parquet(s"$base/src")
@@ -245,7 +283,7 @@ class StreamingSpec extends SparkSpec {
 
   test("stream-static join enriches streaming events with a dimension") {
     import spark.implicits._
-    val base = Files.createTempDirectory("graft-stream-join").toString
+    val base = tempDir("graft-stream-join")
     val batch = Tables.events(spark, sf)
     batch.write.parquet(s"$base/src")
 
@@ -267,7 +305,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("stream-stream interval join matches the equivalent batch join") {
-    val base = Files.createTempDirectory("graft-stream-ssjoin").toString
+    val base = tempDir("graft-stream-ssjoin")
     val batch = Tables.events(spark, sf)
     batch.filter(col("event_type") === "error").write.parquet(s"$base/err")
     batch.filter(col("event_type") === "purchase").write.parquet(s"$base/buy")
@@ -293,7 +331,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("stream-stream LEFT OUTER interval join emits null-padded non-matches") {
-    val base = Files.createTempDirectory("graft-stream-loj").toString
+    val base = tempDir("graft-stream-loj")
     val batch = Tables.events(spark, sf)
     batch.filter(col("event_type") === "error").write.parquet(s"$base/err")
     batch.filter(col("event_type") === "purchase").write.parquet(s"$base/buy")
@@ -329,7 +367,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("watermarked windowed aggregate matches the batch tumbling window") {
-    val base = Files.createTempDirectory("graft-stream-agg").toString
+    val base = tempDir("graft-stream-agg")
     val batch = Tables.events(spark, sf)
     val srcDir = s"$base/src"
     batch.write.parquet(srcDir)
@@ -351,7 +389,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("streaming session_window sessions agree with the batch operator") {
-    val base = Files.createTempDirectory("graft-stream-sess").toString
+    val base = tempDir("graft-stream-sess")
     val batch = Tables.events(spark, sf)
     val srcDir = s"$base/src"
     batch.write.parquet(srcDir)
