@@ -52,7 +52,7 @@ object DataFiles {
     if (paths.isEmpty) return Nil
     val confB = spark.sparkContext.broadcast(
       new org.apache.spark.util.SerializableConfiguration(
-        spark.sparkContext.hadoopConfiguration))
+        spark.sessionState.newHadoopConf()))
     val slices = math.max(1, math.min(paths.length,
       spark.sparkContext.defaultParallelism))
     spark.sparkContext.parallelize(paths.toIndexedSeq, slices)

@@ -62,14 +62,14 @@ object IcebergMaintenance {
   /** The parquet files a write left in `dir`, spelled under `dir`. */
   private def listParquet(spark: SparkSession, dir: String): Seq[String] = {
     val p = new Path(dir)
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).listStatus(p).toSeq
+    p.getFileSystem(spark.sessionState.newHadoopConf()).listStatus(p).toSeq
       .map(_.getPath.getName).filter(_.endsWith(".parquet"))
       .map(n => s"${dir.stripSuffix("/")}/$n").sorted
   }
 
   private def removeDir(spark: SparkSession, dir: String): Unit = {
     val p = new Path(dir)
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
+    p.getFileSystem(spark.sessionState.newHadoopConf()).delete(p, true)
     ()
   }
 
@@ -152,7 +152,7 @@ object IcebergMaintenance {
       statsColumn.map(c => (IcebergTableReader.fieldId(meta, c), c)).toSeq
     ).map { case (data, keys) =>
       StagedUpsert(data, () => IcebergCommit.commitStandaloneUpsert(
-        spark.sparkContext.hadoopConfiguration, tableDir, meta.schemaJson,
+        spark.sessionState.newHadoopConf(), tableDir, meta.schemaJson,
         None, data, keys.map(IcebergCommit.DeleteFileSpec(_, content = 2, ids)),
         extraSummary))
     }
@@ -187,7 +187,7 @@ object IcebergMaintenance {
       return (-1L, 0L)
     }
     val snap = IcebergCommit.commitStandaloneDeletes(
-      spark.sparkContext.hadoopConfiguration, tableDir, meta.schemaJson,
+      spark.sessionState.newHadoopConf(), tableDir, meta.schemaJson,
       None, files.map(IcebergCommit.DeleteFileSpec(_, content, equalityIds)))
     (snap, rows)
   }
@@ -211,7 +211,7 @@ object IcebergMaintenance {
     val files = DataFiles.describe(spark, listParquet(spark, outDir),
       statsColumn.map(c => (IcebergTableReader.fieldId(meta, c), c)).toSeq)
     val snap = IcebergCommit.commitStandaloneReplace(
-      spark.sparkContext.hadoopConfiguration, tableDir, meta.schemaJson,
+      spark.sessionState.newHadoopConf(), tableDir, meta.schemaJson,
       None, files)
     (snap, files.map(_.recordCount).sum)
   }
@@ -226,7 +226,7 @@ object IcebergMaintenance {
       spark, tableDir, Some(snapshotId))
     val manifests = {
       val p = new Path(snap.manifestList)
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
       if (!fs.exists(p)) Seq.empty[String]
       else {
         val in = fs.open(p)
@@ -258,7 +258,7 @@ object IcebergMaintenance {
                         olderThanMs: Long =
                           System.currentTimeMillis() - 24L * 3600 * 1000)
       : OrphanReport = {
-    val conf = spark.sparkContext.hadoopConfiguration
+    val conf = spark.sessionState.newHadoopConf()
     val meta = tableMeta(spark, tableDir)
     val live = meta.snapshots.map(_.snapshotId)
       .flatMap(id => reachable(spark, tableDir, id)).toSet
@@ -318,7 +318,7 @@ object IcebergMaintenance {
       "name" -> JString(name), "transform" -> JString(transform),
       "source-id" -> JInt(srcId), "field-id" -> JInt(fieldId)))))
     IcebergTableMetadata.commit(
-      spark.sparkContext.hadoopConfiguration, tableDir,
+      spark.sessionState.newHadoopConf(), tableDir,
       meta.schemaJson, Some(spec), None)
     tableMeta(spark, tableDir).defaultSpecId
   }
@@ -362,7 +362,7 @@ object IcebergMaintenance {
         DataFile(d.path, d.sizeBytes, d.recordCount, Nil),
         d.content, d.equalityIds, d.sequenceNumber, d.snapshotId))
     IcebergCommit.commitStandaloneRewriteManifests(
-      spark.sparkContext.hadoopConfiguration, tableDir, meta.schemaJson,
+      spark.sessionState.newHadoopConf(), tableDir, meta.schemaJson,
       groups, delEntries, deleteSpec = (meta.defaultSpecId, defaultFields))
   }
 
@@ -488,7 +488,7 @@ object IcebergMaintenance {
         DataFile(d.path, d.sizeBytes, d.recordCount, Nil),
         d.content, d.equalityIds, d.sequenceNumber, d.snapshotId))
     val snap = IcebergCommit.commitStandaloneRewriteManifests(
-      spark.sparkContext.hadoopConfiguration, tableDir, meta.schemaJson,
+      spark.sessionState.newHadoopConf(), tableDir, meta.schemaJson,
       keptGroups, delEntries,
       deleteSpec = (meta.defaultSpecId, defaultFields),
       addedFiles = newFiles,
@@ -558,7 +558,7 @@ object IcebergMaintenance {
         s"table $tableDir has no snapshot to point '$name' at"))
     require(meta.snapshots.exists(_.snapshotId == target),
       s"snapshot $target not in table metadata")
-    IcebergTableMetadata.commit(spark.sparkContext.hadoopConfiguration,
+    IcebergTableMetadata.commit(spark.sessionState.newHadoopConf(),
       tableDir, meta.schemaJson, None, None,
       updateRefs = Map(name -> Some(SnapshotRef(target, refType))))
     target
@@ -589,7 +589,7 @@ object IcebergMaintenance {
     require(name != "main", "cannot drop the main branch")
     val meta = tableMeta(spark, tableDir)
     require(meta.refs.contains(name), s"no ref '$name' to drop")
-    IcebergTableMetadata.commit(spark.sparkContext.hadoopConfiguration,
+    IcebergTableMetadata.commit(spark.sessionState.newHadoopConf(),
       tableDir, meta.schemaJson, None, None,
       updateRefs = Map(name -> None))
     ()
@@ -618,7 +618,7 @@ object IcebergMaintenance {
     toHead.foreach(t => require(ancestry.contains(t),
       s"not a fast-forward: '$to' head $t is not an ancestor of " +
         s"'$from' head $fromId"))
-    IcebergTableMetadata.commit(spark.sparkContext.hadoopConfiguration,
+    IcebergTableMetadata.commit(spark.sessionState.newHadoopConf(),
       tableDir, meta.schemaJson, None, None,
       updateRefs = Map(to -> Some(SnapshotRef(fromId, "branch"))))
     fromId
@@ -637,7 +637,7 @@ object IcebergMaintenance {
   def expireSnapshots(spark: SparkSession, tableDir: String,
                       keepLast: Int): ExpiryReport = {
     require(keepLast >= 1, "must keep at least the current snapshot")
-    val conf = spark.sparkContext.hadoopConfiguration
+    val conf = spark.sessionState.newHadoopConf()
     val meta = tableMeta(spark, tableDir)
     val ordered = meta.snapshots.sortBy(_.sequenceNumber)
     // every ref target is shielded: tags pin releases, branch heads
@@ -713,7 +713,7 @@ object IcebergMaintenance {
     * sidecar path. */
   private def appendStatsBlobs(spark: SparkSession, tableDir: String,
                                blobs: Seq[Puffin.Blob]): String = {
-    val conf = spark.sparkContext.hadoopConfiguration
+    val conf = spark.sessionState.newHadoopConf()
     val meta = tableMeta(spark, tableDir)
     val snapId = meta.currentSnapshotId.getOrElse(
       throw new IllegalArgumentException(
@@ -749,7 +749,7 @@ object IcebergMaintenance {
   def writeBloomIndex(spark: SparkSession, tableDir: String,
                       column: String, fpp: Double = 0.03): String = {
     import spark.implicits._
-    val conf = spark.sparkContext.hadoopConfiguration
+    val conf = spark.sessionState.newHadoopConf()
     val meta = tableMeta(spark, tableDir)
     val snapId = meta.currentSnapshotId.getOrElse(
       throw new IllegalArgumentException(
@@ -905,7 +905,7 @@ object IcebergMaintenance {
       s"""{"fields":[{"name":"${column}_bucket",
          |"transform":"bucket[$nBuckets]",
          |"source-id":${topIds(column)},"field-id":1000}]}""".stripMargin)
-    IcebergCommit.commitStandalone(spark.sparkContext.hadoopConfiguration, destLoc,
+    IcebergCommit.commitStandalone(spark.sessionState.newHadoopConf(), destLoc,
       org.json4s.jackson.JsonMethods.compact(
         org.json4s.jackson.JsonMethods.render(schemaJson)),
       Some(spec),

@@ -95,7 +95,7 @@ object IcebergCdcSink {
                                 streamId: Option[String]): IngestLoop.Commit =
     (batch, batchId) => {
       val spark = batch.sparkSession
-      val conf = spark.sparkContext.hadoopConfiguration
+      val conf = spark.sessionState.newHadoopConf()
       val meta = IcebergTableMetadata.load(conf, tableDir)
       val staged =
         if (meta.exists(m => isReplay(m.snapshots.map(_.summary), streamId, batchId))) {

@@ -53,8 +53,8 @@ private[streaming] object IngestLoop {
     * 12 s ingest run started 913 processes, at 6–23 ms each on a 4-core
     * host, mostly on the stream-execution and write-task threads. The
     * held confs reach the checkpoint logs, the data-file write and,
-    * because the register step reads the batch session's Hadoop conf,
-    * the manifest. */
+    * because the register steps read the batch session's Hadoop conf,
+    * the manifest and the Iceberg commits. */
   def start(events: DataFrame, checkpoint: String, commit: Commit,
             trigger: Trigger = Trigger.AvailableNow(),
             outputMode: OutputMode = OutputMode.Append(),

@@ -8,6 +8,7 @@ import org.apache.spark.sql.types.StructType
 import graft.functions.GraftFunctions.topKStructs
 import graft.sink.PartitionedParquetSink
 import graft.sink.PartitionedParquetSink.SinkConfig
+import graft.storage.NioLocalFileSystem
 
 /** Structured-Streaming ingestion — the streaming counterpart of the
   * reference exporter's receive → flatten → partition → write loop
@@ -174,12 +175,14 @@ object StreamingIngest {
     * converges), which is the at-least-once-safe incremental-view
     * contract. Watermark bounds the aggregation state; the snapshot
     * swap is write-tmp-then-rename (an object store would write
-    * versioned dirs + a pointer, Iceberg-style). */
+    * versioned dirs + a pointer, Iceberg-style). Its `file:` storage is
+    * held on [[NioLocalFileSystem]] for the query's life, as for every
+    * ingest loop ([[IngestLoop.start]]). */
   def materializedWindowCounts(events: DataFrame, snapshotPath: String,
                                checkpoint: String,
                                tsCol: String = "ts",
-                               watermark: String = "24 hours"): StreamingQuery =
-    events
+                               watermark: String = "24 hours"): StreamingQuery = {
+    val writer = events
       .withWatermark(tsCol, watermark)
       .groupBy(window(col(tsCol), "1 hour"), col("event_type"))
       .agg(count(lit(1)).as("n_events"), round(sum(col("value")), 4).as("sum_value"))
@@ -197,7 +200,7 @@ object StreamingIngest {
           .join(updates.select("window_start", "event_type"),
                 Seq("window_start", "event_type"), "left_anti")
           .unionByName(updates)
-        val conf = spark.sparkContext.hadoopConfiguration
+        val conf = spark.sessionState.newHadoopConf()
         val tmp = new org.apache.hadoop.fs.Path(snapshotPath + ".tmp")
         val dst = new org.apache.hadoop.fs.Path(snapshotPath)
         merged.write.mode("overwrite").parquet(tmp.toString)
@@ -209,7 +212,9 @@ object StreamingIngest {
       }
       .option("checkpointLocation", checkpoint)
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
+    PartitionedParquetSink.startWithConfs(events.sparkSession, NioLocalFileSystem.Confs)(
+      writer.start())
+  }
 
   /** Stream-stream interval join: correlate each error event with the
     * purchases the same user made in the preceding 30 minutes. Both

@@ -4,6 +4,9 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
+import graft.sink.PartitionedParquetSink
+import graft.storage.NioLocalFileSystem
+
 /** STREAMING curation gate (r8): score each incoming document with the
   * batch-proven Gopher rules ([[graft.llm.TextOps.gopherColumns]] —
   * literally the same column expressions the oracle-checked
@@ -42,10 +45,12 @@ object StreamingQualityGate {
   /** Run the gate over a streaming document frame: accepted rows land
     * under `acceptDir`, rejected rows (with metrics + reason) under
     * `rejectDir`. AvailableNow + checkpoint → drain-and-stop batches
-    * that resume exactly after the last processed file. */
+    * that resume exactly after the last processed file. Its `file:`
+    * storage is held on [[NioLocalFileSystem]] for the query's life, as
+    * for every ingest loop ([[IngestLoop.start]]). */
   def run(docs: DataFrame, acceptDir: String, rejectDir: String,
-          checkpoint: String): StreamingQuery =
-    docs.writeStream
+          checkpoint: String): StreamingQuery = {
+    val writer = docs.writeStream
       .foreachBatch { (batch: DataFrame, _: Long) =>
         val scored = score(batch).localCheckpoint()
         scored.filter(col("keep") === 1)
@@ -57,5 +62,7 @@ object StreamingQualityGate {
       }
       .option("checkpointLocation", checkpoint)
       .trigger(Trigger.AvailableNow())
-      .start()
+    PartitionedParquetSink.startWithConfs(docs.sparkSession, NioLocalFileSystem.Confs)(
+      writer.start())
+  }
 }

@@ -4,6 +4,9 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, Trigger}
 
+import graft.sink.PartitionedParquetSink
+import graft.storage.NioLocalFileSystem
+
 /** Streaming MAINTENANCE of the hourly events rollup — the other half
   * of [[graft.plans.RollupRewrite]]: the optimizer rule answers
   * dashboard aggregates from the rollup; this keeps the rollup current
@@ -52,17 +55,19 @@ object StreamingRollup {
   /** Maintain the rollup snapshot at `snapshotPath` from a streaming
     * events frame; returns the (AvailableNow) query. Restart-safe: the
     * aggregation state lives in the checkpoint, the upsert is
-    * idempotent per (hour_ts, event_type) key. */
+    * idempotent per (hour_ts, event_type) key. Its `file:` storage is
+    * held on [[NioLocalFileSystem]] for the query's life, as for every
+    * ingest loop ([[IngestLoop.start]]). */
   def maintain(events: DataFrame, snapshotPath: String, checkpoint: String,
                tsCol: String = "ts",
-               watermark: String = "720 hours"): StreamingQuery =
-    rollupFrame(events.withWatermark(tsCol, watermark), tsCol)
+               watermark: String = "720 hours"): StreamingQuery = {
+    val writer = rollupFrame(events.withWatermark(tsCol, watermark), tsCol)
       .writeStream
       .outputMode("update")
       .foreachBatch { (batch: DataFrame, _: Long) =>
         val spark = batch.sparkSession
         val updates = batch
-        val conf = spark.sparkContext.hadoopConfiguration
+        val conf = spark.sessionState.newHadoopConf()
         val tmp = new org.apache.hadoop.fs.Path(snapshotPath + ".tmp")
         val bak = new org.apache.hadoop.fs.Path(snapshotPath + ".bak")
         val dst = new org.apache.hadoop.fs.Path(snapshotPath)
@@ -105,7 +110,9 @@ object StreamingRollup {
       }
       .option("checkpointLocation", checkpoint)
       .trigger(Trigger.AvailableNow())
-      .start()
+    PartitionedParquetSink.startWithConfs(events.sparkSession, NioLocalFileSystem.Confs)(
+      writer.start())
+  }
 
   /** The same maintenance into an ICEBERG table — each micro-batch's
     * changed groups land as one merge-on-read upsert snapshot

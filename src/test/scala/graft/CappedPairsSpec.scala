@@ -60,7 +60,7 @@ class CappedPairsSpec extends SparkSpec {
   test("autoK keeps candidate pair volume O(N·cap) on a skewed blob corpus") {
     import spark.implicits._
     def writeCorpus(n: Int): String = {
-      val dir = java.nio.file.Files.createTempDirectory("autok").toFile.getAbsolutePath
+      val dir = tempDir("autok")
       val rows = (0 until n).map { i =>
         // deterministic jitter in [-0.1, 0.1) around the blob center
         val v = Array.tabulate(8) { d =>

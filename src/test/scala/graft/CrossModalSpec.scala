@@ -26,7 +26,7 @@ class CrossModalSpec extends SparkSpec {
       (5L, "yet another caption on sailing ships and ocean navigation", "en", "web"))
       .map { case (id, t, l, s) => (id, t, l, s, t.length.toLong) }
       .toDF("doc_id", "text", "lang", "source", "n_chars")
-    val tmp = java.nio.file.Files.createTempDirectory("graft-xmodal").toString
+    val tmp = tempDir("graft-xmodal")
     rows.write.mode("overwrite").parquet(s"$tmp/documents.parquet")
     tmp
   }

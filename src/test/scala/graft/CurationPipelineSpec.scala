@@ -34,7 +34,7 @@ class CurationPipelineSpec extends SparkSpec {
   test("collector drop → quality gate → streaming dedup → curated store") {
     import spark.implicits._
     withRocksDb {
-    val base = Files.createTempDirectory("graft-curation").toString
+    val base = tempDir("graft-curation")
     val srcDir = s"$base/src"
     Files.createDirectories(Paths.get(srcDir))
     val good1 = "the quick brown fox jumps over a lazy dog in the garden every day"
@@ -93,7 +93,7 @@ class CurationPipelineSpec extends SparkSpec {
     import spark.implicits._
     import graft.streaming.StreamingNearDup
     withRocksDb {
-    val base = Files.createTempDirectory("graft-curation-nd").toString
+    val base = tempDir("graft-curation-nd")
     val srcDir = s"$base/src"
     Files.createDirectories(Paths.get(srcDir))
     val original = "the committee reviewed all pending proposals during the morning " +

@@ -29,7 +29,7 @@ class DedupSubstringSpec extends SparkSpec {
       (201L, (toks("ug", 6) ++ edited34 ++ toks("uh", 6)).mkString(" ")))
       .map { case (id, t) => (id, t, "en", "web", t.length.toLong) }
       .toDF("doc_id", "text", "lang", "source", "n_chars")
-    val tmp = java.nio.file.Files.createTempDirectory("graft-substr").toString
+    val tmp = tempDir("graft-substr")
     rows.write.mode("overwrite").parquet(s"$tmp/documents.parquet")
     tmp
   }

@@ -1,7 +1,6 @@
 package graft
 
 import java.io.IOException
-import java.nio.file.Files
 import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.sql.streaming.StreamingQueryException
@@ -40,7 +39,7 @@ class ExportTelemetrySpec extends SparkSpec {
   }
 
   test("detailed: per-batch rows/files/bytes/retries on an injected-retry run") {
-    val base = Files.createTempDirectory("graft-tel").toString
+    val base = tempDir("graft-tel")
     val (tel, nRows) = run(base, "detailed", failures = 2)
     val ms = tel.metrics
     assert(ms.size === 1, s"one micro-batch → one metric row: $ms")
@@ -61,7 +60,7 @@ class ExportTelemetrySpec extends SparkSpec {
   }
 
   test("basic: counts only — bytes/retries/errors redacted") {
-    val base = Files.createTempDirectory("graft-tel-basic").toString
+    val base = tempDir("graft-tel-basic")
     val (tel, nRows) = run(base, "basic", failures = 1)
     val m = tel.metrics.head
     assert(m.outcome === "success" && m.rows === nRows && m.files > 0L)
@@ -69,14 +68,14 @@ class ExportTelemetrySpec extends SparkSpec {
   }
 
   test("normal: numbers kept, error strings dropped") {
-    val base = Files.createTempDirectory("graft-tel-normal").toString
+    val base = tempDir("graft-tel-normal")
     val (tel, _) = run(base, "normal", failures = 1)
     val m = tel.metrics.head
     assert(m.retries === 1L && m.bytes > 0L && m.errors.isEmpty)
   }
 
   test("permanent failure: outcome recorded as failed with the cause") {
-    val base = Files.createTempDirectory("graft-tel-perm").toString
+    val base = tempDir("graft-tel-perm")
     val (tel, _) = run(base, "detailed", failures = 99, permanent = true)
     val m = tel.metrics.head
     assert(m.outcome === "failed")
@@ -86,7 +85,7 @@ class ExportTelemetrySpec extends SparkSpec {
 
   test("ingestWithManifest (non-retrying loop) reports the same counters") {
     import org.apache.spark.sql.functions.col
-    val base = Files.createTempDirectory("graft-tel-plain").toString
+    val base = tempDir("graft-tel-plain")
     val batch = Tables.events(spark, sf).limit(200)
     val srcDir = s"$base/src"
     batch.write.parquet(srcDir)

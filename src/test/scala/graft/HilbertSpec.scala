@@ -57,7 +57,7 @@ class HilbertSpec extends SparkSpec {
 
   test("hilbert clustering prunes both columns at least as well as morton") {
     import spark.implicits._
-    val base = java.nio.file.Files.createTempDirectory("hilbert").toString
+    val base = tempDir("hilbert")
     val eventsDf = Tables.events(spark, sf)
     val key = "spark.sql.files.maxRecordsPerFile"
     def write(table: String, curve: String): Unit = {

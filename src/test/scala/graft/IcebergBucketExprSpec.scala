@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.catalog.{IcebergMaintenance, IcebergPartitioning, IcebergTableReader}
@@ -77,12 +75,12 @@ class IcebergBucketExprSpec extends SparkSpec {
 
   test("rewriteBucketed keeps NULL keys under a null partition tuple") {
     import spark.implicits._
-    val src = Files.createTempDirectory("graft-rwb-null").toString + "/t"
+    val src = tempDir("graft-rwb-null") + "/t"
     val rows = (1L to 100L).map(i =>
       (i, if (i % 10 == 0) null else s"tag-${i % 7}"))
     rows.toDF("id", "tag").repartition(3).write.parquet(src)
 
-    val loc = Files.createTempDirectory("graft-rwb-null-t").toString + "/t"
+    val loc = tempDir("graft-rwb-null-t") + "/t"
     IcebergMaintenance.rewriteBucketed(spark, src, loc, "tag", 4)
     // every source row survives, including the 10 NULL-key rows
     val back = IcebergTableReader.read(spark, loc)
@@ -114,9 +112,9 @@ class IcebergBucketExprSpec extends SparkSpec {
 
   test("rewriteBucketed on an empty source commits an empty snapshot") {
     import spark.implicits._
-    val src = Files.createTempDirectory("graft-rwb-empty").toString + "/t"
+    val src = tempDir("graft-rwb-empty") + "/t"
     Seq.empty[(Long, String)].toDF("id", "tag").write.parquet(src)
-    val loc = Files.createTempDirectory("graft-rwb-empty-t").toString + "/t"
+    val loc = tempDir("graft-rwb-empty-t") + "/t"
     IcebergMaintenance.rewriteBucketed(spark, src, loc, "id", 8)
     assert(IcebergTableReader.read(spark, loc).count() === 0L)
     assert(IcebergTableReader.dataFiles(spark, loc).isEmpty)

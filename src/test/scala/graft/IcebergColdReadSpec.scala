@@ -46,7 +46,7 @@ class IcebergColdReadSpec extends SparkSpec {
 
   test("cold re-open: row-identical, time travel, bounds pruning, avro interop") {
     import spark.implicits._
-    val warehouse = Files.createTempDirectory("graft-cold").toString
+    val warehouse = tempDir("graft-cold")
     val fake = new FakeRestCatalog
     fake.warehouseDir = warehouse
     val client = new RestCatalogClient(
@@ -113,7 +113,7 @@ class IcebergColdReadSpec extends SparkSpec {
 
   test("hint loss recovers via max-vN; snapshot log DataFrame is queryable") {
     import spark.implicits._
-    val warehouse = Files.createTempDirectory("graft-cold2").toString
+    val warehouse = tempDir("graft-cold2")
     val fake = new FakeRestCatalog
     fake.warehouseDir = warehouse
     val client = new RestCatalogClient(
@@ -136,7 +136,7 @@ class IcebergColdReadSpec extends SparkSpec {
   test("catalog-FREE standalone commit: chain + manifests only, cold-readable") {
     import spark.implicits._
     import org.json4s.jackson.JsonMethods.{compact, render}
-    val loc = Files.createTempDirectory("graft-standalone").toString + "/t"
+    val loc = tempDir("graft-standalone") + "/t"
     val conf = spark.sparkContext.hadoopConfiguration
     val schema = Seq((0L, 0L, "")).toDF("id", "ts", "payload").schema
     val (schemaJson, topIds) = RestCatalogClient.icebergSchemaJson(schema)
@@ -183,7 +183,7 @@ class IcebergColdReadSpec extends SparkSpec {
     // written by org.apache.avro with field order unlike ours, deflate
     // codec, bounds as a REAL Avro map keyed by stringified field ids,
     // extra fields we never write — plus a hand-written metadata.json.
-    val loc = Files.createTempDirectory("graft-foreign").toString + "/t"
+    val loc = tempDir("graft-foreign") + "/t"
     val dataFiles = writeBatch(s"$loc/data/b1", 0 until 25, 7000L)
     Files.createDirectories(Paths.get(s"$loc/metadata"))
     val stats = graft.recovery.Recovery.fileColumnStats(spark, dataFiles, "ts")
@@ -327,7 +327,7 @@ class IcebergColdReadSpec extends SparkSpec {
     import org.apache.avro.file.{DataFileReader, SeekableByteArrayInput}
     import org.apache.avro.generic.{GenericDatumReader, GenericRecord}
     import scala.jdk.CollectionConverters._
-    val warehouse = Files.createTempDirectory("graft-cold3").toString
+    val warehouse = tempDir("graft-cold3")
     val fake = new FakeRestCatalog
     fake.warehouseDir = warehouse
     val client = new RestCatalogClient(
@@ -377,7 +377,7 @@ class IcebergColdReadSpec extends SparkSpec {
     import scala.jdk.CollectionConverters._
     import org.json4s.jackson.JsonMethods.{compact, parse, render}
     import spark.implicits._
-    val loc = Files.createTempDirectory("graft-part").toString + "/t"
+    val loc = tempDir("graft-part") + "/t"
     val conf = spark.sparkContext.hadoopConfiguration
     val schema = Seq((0L, 0L, "")).toDF("id", "ts", "payload").schema
     val (schemaJson, topIds) = RestCatalogClient.icebergSchemaJson(schema)
@@ -468,7 +468,7 @@ class IcebergColdReadSpec extends SparkSpec {
   test("schema evolution: add/drop columns, schema-id history, name-mapping reads") {
     import spark.implicits._
     import org.json4s.jackson.JsonMethods.{compact => jc, render => jr}
-    val loc = Files.createTempDirectory("graft-evolve").toString + "/t"
+    val loc = tempDir("graft-evolve") + "/t"
     val conf = spark.sparkContext.hadoopConfiguration
     def commitFrame(df: org.apache.spark.sql.DataFrame, dir: String): Long = {
       df.coalesce(1).write.mode("overwrite").parquet(dir)

@@ -22,7 +22,7 @@ class IcebergMaintenanceRunSpec extends SparkSpec {
 
   test("one maintenance run heals a fragmented table; a second is a no-op") {
     import spark.implicits._
-    val loc = Files.createTempDirectory("graft-maint").toString + "/t"
+    val loc = tempDir("graft-maint") + "/t"
     val conf = spark.sparkContext.hadoopConfiguration
     val schema = Seq((0L, 0L, "")).toDF("id", "ts", "payload").schema
     val (schemaJson, topIds) = RestCatalogClient.icebergSchemaJson(schema)

@@ -22,7 +22,7 @@ class IcebergPointBloomSpec extends SparkSpec {
 
   test("bloom sidecar point reads: exact, no false negatives, 1+eps files") {
     import spark.implicits._
-    val base = Files.createTempDirectory("graft-ice-bloom").toString
+    val base = tempDir("graft-ice-bloom")
     val loc = s"$base/tbl"
     val dataDir = s"$base/data"
     val nFiles = 8
@@ -126,7 +126,7 @@ class IcebergPointBloomSpec extends SparkSpec {
 
   test("ndv sketches: exact under k, ~estimate over k, metadata-only, coexist with blooms") {
     import spark.implicits._
-    val base = Files.createTempDirectory("graft-ice-ndv").toString
+    val base = tempDir("graft-ice-ndv")
     val loc = s"$base/tbl"
     val dataDir = s"$base/data"
     // id: 4000 distinct (past k=512 → estimated); grp: 23 distinct
@@ -201,7 +201,7 @@ class IcebergPointBloomSpec extends SparkSpec {
     * never a raw ArrayIndexOutOfBounds or a silent misread. */
   test("Puffin reader fails loudly on truncated and hostile sidecars") {
     val conf = spark.sparkContext.hadoopConfiguration
-    val base = Files.createTempDirectory("graft-puffin-fuzz").toString
+    val base = tempDir("graft-puffin-fuzz")
     def write(name: String, bytes: Array[Byte]): String = {
       val p = s"$base/$name"
       Files.write(Paths.get(p), bytes)

@@ -30,7 +30,7 @@ class IcebergRefsSpec extends SparkSpec {
 
   private def freshTable(prefix: String): (String, String, Map[String, Int]) = {
     import spark.implicits._
-    val loc = Files.createTempDirectory(prefix).toString + "/t"
+    val loc = tempDir(prefix) + "/t"
     val schema = Seq((0L, 0L, "")).toDF("id", "ts", "payload").schema
     val (schemaJson, topIds) = RestCatalogClient.icebergSchemaJson(schema)
     (loc, jcompact(render(schemaJson)), topIds)

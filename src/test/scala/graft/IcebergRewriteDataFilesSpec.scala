@@ -35,7 +35,7 @@ class IcebergRewriteDataFilesSpec extends SparkSpec {
 
   test("bin-pack rewrites only the small files; MOR and time travel survive") {
     import spark.implicits._
-    val loc = Files.createTempDirectory("graft-rwf").toString + "/t"
+    val loc = tempDir("graft-rwf") + "/t"
     val conf = spark.sparkContext.hadoopConfiguration
     val schema = Seq((0L, 0L, "")).toDF("id", "ts", "payload").schema
     val (schemaJson, topIds) = RestCatalogClient.icebergSchemaJson(schema)
@@ -164,7 +164,7 @@ class IcebergRewriteDataFilesSpec extends SparkSpec {
 
   test("sort strategy turns straddling bounds into disjoint ones") {
     import spark.implicits._
-    val loc = Files.createTempDirectory("graft-rwfs").toString + "/t"
+    val loc = tempDir("graft-rwfs") + "/t"
     val conf = spark.sparkContext.hadoopConfiguration
     val schema = Seq((0L, 0L, "")).toDF("id", "ts", "payload").schema
     val (schemaJson, topIds) = RestCatalogClient.icebergSchemaJson(schema)

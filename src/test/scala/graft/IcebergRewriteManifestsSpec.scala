@@ -33,7 +33,7 @@ class IcebergRewriteManifestsSpec extends SparkSpec {
 
   test("rewrite collapses manifests; MOR, pruning, and time travel survive") {
     import spark.implicits._
-    val loc = Files.createTempDirectory("graft-rwm").toString + "/t"
+    val loc = tempDir("graft-rwm") + "/t"
     val conf = spark.sparkContext.hadoopConfiguration
     val schema = Seq((0L, 0L, "")).toDF("id", "ts", "payload").schema
     val (schemaJson, topIds) = RestCatalogClient.icebergSchemaJson(schema)
@@ -121,7 +121,7 @@ class IcebergRewriteManifestsSpec extends SparkSpec {
 
   test("mixed-spec table rewrites into one manifest PER spec") {
     import spark.implicits._
-    val loc = Files.createTempDirectory("graft-rwm2").toString + "/t"
+    val loc = tempDir("graft-rwm2") + "/t"
     val conf = spark.sparkContext.hadoopConfiguration
     val schema = Seq((0L, 0L, "")).toDF("id", "ts", "payload").schema
     val (schemaJson, topIds) = RestCatalogClient.icebergSchemaJson(schema)

@@ -38,7 +38,7 @@ class IcebergSpecEvolutionSpec extends SparkSpec {
 
   test("daily -> hourly: per-spec tuples, mixed-spec pruning, reference round-trip") {
     import spark.implicits._
-    val loc = Files.createTempDirectory("graft-specevo").toString + "/t"
+    val loc = tempDir("graft-specevo") + "/t"
     val conf = spark.sparkContext.hadoopConfiguration
     val schema = Seq((0L, 0L, "")).toDF("id", "ts", "payload").schema
     val (schemaJson, topIds) = RestCatalogClient.icebergSchemaJson(schema)
@@ -172,7 +172,7 @@ class IcebergSpecEvolutionSpec extends SparkSpec {
 
   test("composite spec hour(ts)+identity(service): readRanges prunes on both dims") {
     import spark.implicits._
-    val loc = Files.createTempDirectory("graft-composite").toString + "/t"
+    val loc = tempDir("graft-composite") + "/t"
     val conf = spark.sparkContext.hadoopConfiguration
     val schema = Seq((0L, 0L, "")).toDF("id", "ts", "payload").schema
     val (schemaJson, topIds) = RestCatalogClient.icebergSchemaJson(schema)
@@ -266,7 +266,7 @@ class IcebergSpecEvolutionSpec extends SparkSpec {
 
   test("bucket[4](id) era: derived tuples, point-lookup pruning, range kept") {
     import spark.implicits._
-    val loc = Files.createTempDirectory("graft-bucket").toString + "/t"
+    val loc = tempDir("graft-bucket") + "/t"
     val conf = spark.sparkContext.hadoopConfiguration
     val schema = Seq((0L, 0L, "")).toDF("id", "ts", "payload").schema
     val (schemaJson, topIds) = RestCatalogClient.icebergSchemaJson(schema)
@@ -297,7 +297,7 @@ class IcebergSpecEvolutionSpec extends SparkSpec {
     }.toMap
     // explicit null tuples → no pruning possible; recommit era 2 WITH
     // derived tuples from id stats to prove derivation end-to-end
-    val loc2 = Files.createTempDirectory("graft-bucket2").toString + "/t"
+    val loc2 = tempDir("graft-bucket2") + "/t"
     val filesById2 = ids.map { id =>
       val paths = writeId(s"$loc2/data/id$id", id)
       val counts = graft.recovery.Recovery.fileRowCounts(spark, paths)
@@ -356,14 +356,14 @@ class IcebergSpecEvolutionSpec extends SparkSpec {
 
   test("rewriteBucketed: OPTIMIZE-style bucket clustering, long and string keys") {
     import spark.implicits._
-    val src = Files.createTempDirectory("graft-rwb-src").toString + "/t"
+    val src = tempDir("graft-rwb-src") + "/t"
     (1L to 400L).map(i => (i, i * 1000L, s"id-${i % 40}", i / 7.0))
       .toDF("id", "ts", "tag", "score")
       .repartition(4).write.parquet(src)
     val srcRows = spark.read.parquet(src).count()
 
     // LONG key clustering
-    val locL = Files.createTempDirectory("graft-rwb-long").toString + "/t"
+    val locL = tempDir("graft-rwb-long") + "/t"
     IcebergMaintenance.rewriteBucketed(spark, src, locL, "id", 8,
       statsColumn = Some("ts"))
     // rows conserved; every file single-bucket; tuples match the spec hash
@@ -387,7 +387,7 @@ class IcebergSpecEvolutionSpec extends SparkSpec {
       .count() === 99L) // ids 1..99 (ts = id*1000 < 100000)
 
     // STRING key clustering: the needle path a zone map cannot serve
-    val locS = Files.createTempDirectory("graft-rwb-str").toString + "/t"
+    val locS = tempDir("graft-rwb-str") + "/t"
     IcebergMaintenance.rewriteBucketed(spark, src, locS, "tag", 4)
     assert(IcebergTableReader.read(spark, locS).count() === srcRows)
     val sNeedle = "id-7"
@@ -401,14 +401,14 @@ class IcebergSpecEvolutionSpec extends SparkSpec {
     // an unsupported key type (double) fails loudly
     intercept[UnsupportedOperationException] {
       IcebergMaintenance.rewriteBucketed(spark, src,
-        Files.createTempDirectory("graft-rwb-bad").toString + "/t", "score", 4)
+        tempDir("graft-rwb-bad") + "/t", "score", 4)
     }
     ()
   }
 
   test("truncate[100](id) era: order-preserving tuples prune ranges") {
     import spark.implicits._
-    val loc = Files.createTempDirectory("graft-trunc").toString + "/t"
+    val loc = tempDir("graft-trunc") + "/t"
     val conf = spark.sparkContext.hadoopConfiguration
     val schema = Seq((0L, 0L, "")).toDF("id", "ts", "payload").schema
     val (schemaJson, topIds) = RestCatalogClient.icebergSchemaJson(schema)

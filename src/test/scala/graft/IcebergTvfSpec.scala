@@ -18,7 +18,7 @@ class IcebergTvfSpec extends SparkSpec {
   private lazy val loc: String = {
     import spark.implicits._
     graft.functions.GraftFunctions.register(spark)
-    val l = Files.createTempDirectory("graft-tvf").toString + "/t"
+    val l = tempDir("graft-tvf") + "/t"
     val conf = spark.sparkContext.hadoopConfiguration
     val schema = Seq((0L, "")).toDF("id", "payload").schema
     val (schemaJson, _) = RestCatalogClient.icebergSchemaJson(schema)

@@ -20,7 +20,7 @@ import graft.sink.PartitionedParquetSink.SinkConfig
 class LifecycleSpec extends SparkSpec {
 
   private def tmp(): String =
-    java.nio.file.Files.createTempDirectory("graft-lifecycle").toString
+    tempDir("graft-lifecycle")
 
   test("ingest → snapshot → compact → expire → incremental → analytics") {
     import spark.implicits._

@@ -12,10 +12,12 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{CreateFlag, FileContext, FileStatus, FileSystem, FsConstants,
   LocalFileSystem, Options, Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.permission.FsPermission
+import org.apache.spark.sql.functions.{col, lit}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.sink.PartitionedParquetSink.SinkConfig
 import graft.storage.{NioLocalFileSystem, NioLocalFs, NioRawLocalFileSystem}
-import graft.streaming.StreamingIngest
+import graft.streaming.{StreamingIngest, StreamingQualityGate, StreamingRollup}
 
 /** [[NioRawLocalFileSystem]] and its checksummed and `FileContext`
   * twins behave as Hadoop's local file systems do, and the ingest loop
@@ -129,6 +131,35 @@ class LocalFsSpec extends SparkSpec {
     try assert(new String(in.readAllBytes(), UTF_8) === "entry") finally in.close()
   }
 
+  /** `body`'s result and every process started while it ran, as
+    * (thread, command), from a JFR recording of `jdk.ProcessStart`
+    * dumped under `dir`. */
+  private def processStarts[T](dir: String)(body: => T): (T, Seq[(String, String)]) = {
+    val recording = new Recording()
+    recording.enable("jdk.ProcessStart")
+    val dump = Paths.get(dir, "starts.jfr")
+    val result =
+      try { recording.start(); body }
+      finally { recording.stop(); recording.dump(dump); recording.close() }
+    (result, RecordingFile.readAllEvents(dump).asScala.toSeq
+      .filter(_.getEventType.getName == "jdk.ProcessStart")
+      .map(e => (Option(e.getThread).map(_.getJavaName).getOrElse("?"), e.getString("command"))))
+  }
+
+  /** Runs `q` to termination; the number of batches that read rows. */
+  private def batchesOf(q: StreamingQuery): Int = {
+    q.awaitTermination()
+    q.recentProgress.count(_.numInputRows > 0)
+  }
+
+  /** The starts on a stream-execution or executor task thread, counted
+    * per command ("chmod x12"); empty when the loop forked nothing. */
+  private def onLoop(starts: Seq[(String, String)]): String =
+    starts.collect { case (thread, command)
+        if thread.startsWith("stream execution thread") ||
+          thread.startsWith("Executor task launch worker") => command.split(' ').head }
+      .groupBy(identity).map { case (c, cs) => s"$c x${cs.size}" }.mkString(", ")
+
   test("manifest ingest forks no process on the stream-execution or write-task threads") {
     val base = tempDir("graft-localfs-forks")
     val rows = Tables.events(spark, sf)
@@ -139,32 +170,41 @@ class LocalFsSpec extends SparkSpec {
     // Hadoop's Shell probes for setsid once per JVM, on first use
     assert(!org.apache.hadoop.util.Shell.WINDOWS)
 
-    val recording = new Recording()
-    recording.enable("jdk.ProcessStart")
-    val dump = Paths.get(base, "ingest.jfr")
-    val batches =
-      try {
-        recording.start()
-        val q = StreamingIngest.ingestWithManifest(events, cfg, s"$base/chk", s"$base/manifest")
-        q.awaitTermination()
-        q.recentProgress.count(_.numInputRows > 0)
-      } finally {
-        recording.stop()
-        recording.dump(dump)
-        recording.close()
-      }
-    val forks = RecordingFile.readAllEvents(dump).asScala.toSeq
-      .filter(_.getEventType.getName == "jdk.ProcessStart")
-      .map(e => (Option(e.getThread).map(_.getJavaName).getOrElse("?"), e.getString("command")))
+    val (batches, starts) = processStarts(base)(batchesOf(
+      StreamingIngest.ingestWithManifest(events, cfg, s"$base/chk", s"$base/manifest")))
     assert(batches === 3)
     assert(spark.read.parquet(s"$base/events").count() === rows.count())
-    val onLoop = forks.filter { case (thread, _) =>
-      thread.startsWith("stream execution thread") ||
-        thread.startsWith("Executor task launch worker")
+    assert(onLoop(starts) === "", s"process starts on the ingest loop (of ${starts.size})")
+  }
+
+  test("the other streaming queries fork no process on the stream-execution or write-task threads") {
+    val base = tempDir("graft-localfs-forks-all")
+    val rows = Tables.events(spark, sf)
+    rows.repartition(3).write.parquet(s"$base/src")
+    def events = spark.readStream.schema(rows.schema)
+      .option("maxFilesPerTrigger", "1").parquet(s"$base/src")
+    val docs = spark.range(30).select(col("id").as("doc_id"),
+      lit("the quick brown fox jumps over the lazy dog").as("text"))
+    docs.repartition(3).write.parquet(s"$base/docs")
+    assert(!org.apache.hadoop.util.Shell.WINDOWS) // the setsid probe, before recording
+
+    val queries: Seq[(String, String => StreamingQuery)] = Seq(
+      "file-stream sink" -> (dir => StreamingIngest.ingest(events,
+        SinkConfig(dir, "events", tsColumn = "ts", granularity = "hourly"), s"$dir/chk")),
+      "Iceberg rollup (CDC commit)" -> (dir =>
+        StreamingRollup.maintainIceberg(events, s"$dir/tbl", s"$dir/chk")),
+      "rollup snapshot" -> (dir => StreamingRollup.maintain(events, s"$dir/mv", s"$dir/chk")),
+      "materialized view" -> (dir => StreamingIngest.materializedWindowCounts(
+        events, s"$dir/mv", s"$dir/chk", watermark = "720 hours")),
+      "quality gate" -> (dir => StreamingQualityGate.run(
+        spark.readStream.schema(docs.schema).option("maxFilesPerTrigger", "1")
+          .parquet(s"$base/docs"), s"$dir/accept", s"$dir/reject", s"$dir/chk")))
+    val forked = queries.map { case (name, start) =>
+      val dir = s"$base/${name.filter(_.isLetter)}"
+      val (batches, starts) = processStarts(base)(batchesOf(start(dir)))
+      assert(batches === 3, name)
+      name -> onLoop(starts)
     }
-    assert(onLoop.size === 0,
-      s"${onLoop.size} of ${forks.size} process starts on the ingest loop: " +
-        onLoop.groupBy(_._2.split(' ').head).map { case (c, fs) => s"$c x${fs.size}" }
-          .mkString(", "))
+    assert(forked.filter(_._2.nonEmpty) === Nil)
   }
 }

@@ -1,6 +1,6 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 
 import graft.otel.{OtelLogs, OtelMetrics, OtelTraces}
 import graft.sources.OtelJsonSource
@@ -8,7 +8,7 @@ import graft.sources.OtelJsonSource
 class OtelJsonSourceSpec extends SparkSpec {
 
   private def writeLines(lines: String*): String = {
-    val f = Files.createTempFile("otlp", ".json")
+    val f = Paths.get(tempDir("otlp"), "input.json")
     Files.writeString(f, lines.mkString("\n"))
     f.toString
   }

@@ -31,7 +31,7 @@ class OtelMetricsPipelineSpec extends SparkSpec {
        |]}]}]}""".stripMargin.replace("\n", "")
 
   test("one spool drains into five partitioned tables, exactly once across restarts") {
-    val base = Files.createTempDirectory("graft-met-pipe").toString
+    val base = tempDir("graft-met-pipe")
     val spool = s"$base/spool"
     Files.createDirectories(Paths.get(spool))
     val t0 = 1709623800000000003L

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.config.ExporterConfig._
@@ -14,7 +12,7 @@ class OtelPipelineSpec extends SparkSpec {
 
   test("traces flow: flatten -> config-resolved sink -> partition-pruned query") {
     import spark.implicits._
-    val base = Files.createTempDirectory("graft-otel-e2e").toString
+    val base = tempDir("graft-otel-e2e")
     val res = TResource(Map("service.name" -> "checkout"), 0)
     val scope = TScope("lib", "1.0", Map.empty, 0)
     def span(id: Int, startNs: Long, durNs: Long, code: Int) =

@@ -130,7 +130,7 @@ class OtelProtoSourceSpec extends SparkSpec {
   }
 
   test("trace wire bytes and OTLP/JSON decode to identical batches and flattens") {
-    val base = Files.createTempDirectory("graft-otlp-pb").toString
+    val base = tempDir("graft-otlp-pb")
 
     val span1 = new W()
       .hex(1, "0102030405060708090a0b0c0d0e0f10").hex(2, "1112131415161718")
@@ -186,7 +186,7 @@ class OtelProtoSourceSpec extends SparkSpec {
   }
 
   test("log wire bytes and OTLP/JSON decode identically (string and int bodies)") {
-    val base = Files.createTempDirectory("graft-otlp-pb-log").toString
+    val base = tempDir("graft-otlp-pb-log")
 
     val rec1 = attrsInto(new W().fixed64(1, 1700000001000000001L).vint(2, 17)
       .str(3, "ERROR").msg(5, new W().str(1, "disk full")), 6)
@@ -217,7 +217,7 @@ class OtelProtoSourceSpec extends SparkSpec {
   }
 
   test("all five metric types decode identically from wire bytes and JSON") {
-    val base = Files.createTempDirectory("graft-otlp-pb-met").toString
+    val base = tempDir("graft-otlp-pb-met")
 
     val exemplar = attrsInto(new W().fixed64(2, 1700000003000000001L).dbl(3, 9.5)
       .hex(4, "1112131415161718").hex(5, "0102030405060708090a0b0c0d0e0f10"), 7)
@@ -305,7 +305,7 @@ class OtelProtoSourceSpec extends SparkSpec {
     * continuously (metrics.go, five tables), so the collector-tail
     * pipeline can't be gauge/sum-only. */
   test("all five metric streaming twins match their batch decodes") {
-    val base = Files.createTempDirectory("graft-otlp-pb-stream").toString
+    val base = tempDir("graft-otlp-pb-stream")
     val spool = s"$base/pb"
     val point = new W().fixed64(3, 1700000004000000001L).fixed64(6, 42L)
     val gauge = new W().str(1, "cpu.load").msg(5, new W().msg(1, point))

@@ -22,7 +22,7 @@ class OtelStreamingSpec extends SparkSpec {
        |"status":{"code":0}}]}]}]}""".stripMargin.replace("\n", "")
 
   test("streamed OTLP traces flatten and land partitioned, exactly once across restarts") {
-    val base = Files.createTempDirectory("graft-otlp-stream").toString
+    val base = tempDir("graft-otlp-stream")
     val srcDir = s"$base/src"
     Files.createDirectories(Paths.get(srcDir))
     val t0 = 1709623800000000000L // 2024-03-05T07:30Z
@@ -59,7 +59,7 @@ class OtelStreamingSpec extends SparkSpec {
   }
 
   test("streamed OTLP logs and gauge metrics match their batch flattens") {
-    val base = Files.createTempDirectory("graft-otlp-stream2").toString
+    val base = tempDir("graft-otlp-stream2")
     val logDir = s"$base/logs"; val metDir = s"$base/metrics"
     Files.createDirectories(Paths.get(logDir))
     Files.createDirectories(Paths.get(metDir))
@@ -107,7 +107,7 @@ class OtelStreamingSpec extends SparkSpec {
          |{"name":"rpc.duration","summary":{"dataPoints":[{"timeUnixNano":"$n",
          |"count":"100","sum":999.5,"quantileValues":[{"quantile":0.5,"value":1.25}]}]}}
          |]}]}]}""".stripMargin.replace("\n", "")
-    val base = Files.createTempDirectory("graft-otlp-stream3").toString
+    val base = tempDir("graft-otlp-stream3")
     val metDir = s"$base/metrics"
     Files.createDirectories(Paths.get(metDir))
     val t0 = 1709623800000000003L

@@ -137,7 +137,7 @@ class OtlpGrpcReceiverSpec extends SparkSpec {
   }
 
   test("gRPC unary export over h2c → durable spool → streaming decode → flatten") {
-    val base = Files.createTempDirectory("graft-grpc").toString
+    val base = tempDir("graft-grpc")
     val rx = new OtlpGrpcReceiver(s"$base/spool")
     try {
       val t0 = 1709623800000000000L
@@ -179,7 +179,7 @@ class OtlpGrpcReceiverSpec extends SparkSpec {
   }
 
   test("flow control: a body larger than the 64 KiB initial window lands byte-exact") {
-    val base = Files.createTempDirectory("graft-grpc-big").toString
+    val base = tempDir("graft-grpc-big")
     val rx = new OtlpGrpcReceiver(s"$base/spool")
     try {
       // ~200 KiB request: netty MUST split DATA frames and wait for the
@@ -198,7 +198,7 @@ class OtlpGrpcReceiverSpec extends SparkSpec {
   }
 
   test("grpc-encoding gzip: compressed message inflates to a byte-exact spool") {
-    val base = Files.createTempDirectory("graft-grpc-gzip").toString
+    val base = tempDir("graft-grpc-gzip")
     val rx = new OtlpGrpcReceiver(s"$base/spool")
     try {
       // a body big enough that gzip genuinely restructures it (and,
@@ -238,7 +238,7 @@ class OtlpGrpcReceiverSpec extends SparkSpec {
   }
 
   test("protocol edges: unknown service, compressed frame, wrong content-type") {
-    val base = Files.createTempDirectory("graft-grpc-edges").toString
+    val base = tempDir("graft-grpc-edges")
     val rx = new OtlpGrpcReceiver(s"$base/spool")
     try {
       withClient(rx.grpcPort) { conn =>
@@ -280,7 +280,7 @@ class OtlpGrpcReceiverSpec extends SparkSpec {
 
   test("backpressure: full spool sheds with RESOURCE_EXHAUSTED, spools nothing, recovers after drain") {
     import graft.sources.SpoolLimits
-    val base = Files.createTempDirectory("graft-grpc-bp").toString
+    val base = tempDir("graft-grpc-bp")
     val rx = new OtlpGrpcReceiver(s"$base/spool",
       limits = SpoolLimits(maxFiles = 1))
     try {
@@ -315,7 +315,7 @@ class OtlpGrpcReceiverSpec extends SparkSpec {
 
   test("grpc.health.v1 Health/Check: SERVING under cap, NOT_SERVING while shedding") {
     import graft.sources.SpoolLimits
-    val base = Files.createTempDirectory("graft-grpc-health").toString
+    val base = tempDir("graft-grpc-health")
     val rx = new OtlpGrpcReceiver(s"$base/spool",
       limits = SpoolLimits(maxFiles = 1))
     try {
@@ -339,7 +339,7 @@ class OtlpGrpcReceiverSpec extends SparkSpec {
 
   test("memory limiter: over-valve stream sheds RESOURCE_EXHAUSTED and releases its hold") {
     import graft.sources.MemoryLimiter
-    val base = Files.createTempDirectory("graft-grpc-mem").toString
+    val base = tempDir("graft-grpc-mem")
     val limiter = new MemoryLimiter(1000L)
     val rx = new OtlpGrpcReceiver(s"$base/spool", memory = Some(limiter))
     try {

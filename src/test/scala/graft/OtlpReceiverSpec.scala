@@ -45,7 +45,7 @@ class OtlpReceiverSpec extends SparkSpec {
       HttpResponse.BodyHandlers.ofByteArray())
 
   test("push → spool → streaming decode → flatten → partitioned sink + manifest") {
-    val base = Files.createTempDirectory("graft-otlp-push").toString
+    val base = tempDir("graft-otlp-push")
     val rx = new OtlpHttpReceiver(s"$base/spool")
     try {
       val t0 = 1709623800000000000L // 2024-03-05T07:30Z
@@ -98,7 +98,7 @@ class OtlpReceiverSpec extends SparkSpec {
   test("ingest commit: no listing job in getBatch, no job in registration, each file once") {
     import scala.jdk.CollectionConverters._
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val base = Files.createTempDirectory("graft-otlp-commit").toString
+    val base = tempDir("graft-otlp-commit")
     val perBatch = 45 // above Spark's default listing threshold (32)
     val nBatches = 4
     val rx = new OtlpHttpReceiver(s"$base/spool")
@@ -154,7 +154,7 @@ class OtlpReceiverSpec extends SparkSpec {
   }
 
   test("stop() shuts down the request executor") {
-    val rx = new OtlpHttpReceiver(Files.createTempDirectory("graft-otlp-stop").toString)
+    val rx = new OtlpHttpReceiver(tempDir("graft-otlp-stop"))
     assert(post(rx.uri, "/health", Array.emptyByteArray).statusCode() === 200)
     rx.stop()
     assert(rx.pool.isShutdown)
@@ -163,7 +163,7 @@ class OtlpReceiverSpec extends SparkSpec {
 
   test("cold capstone: pushed OTLP → sink → standalone Iceberg commit → catalog-free analytics") {
     import org.json4s.jackson.JsonMethods.{compact, render}
-    val base = Files.createTempDirectory("graft-otlp-cold").toString
+    val base = tempDir("graft-otlp-cold")
     val rx = new OtlpHttpReceiver(s"$base/spool")
     val t0 = 1709623800000000000L // 2024-03-05T07:30Z
     val t1 = t0 + 7200L * 1000000000L // two hours later
@@ -224,7 +224,7 @@ class OtlpReceiverSpec extends SparkSpec {
 
   test("backpressure: a full spool sheds with 429 + Retry-After, spools nothing, recovers after drain") {
     import graft.sources.SpoolLimits
-    val base = Files.createTempDirectory("graft-otlp-bp").toString
+    val base = tempDir("graft-otlp-bp")
     // cap the spool at 2 files — the sending_queue bound (config.go:25-27)
     val rx = new OtlpHttpReceiver(s"$base/spool",
       limits = SpoolLimits(maxFiles = 2))
@@ -272,7 +272,7 @@ class OtlpReceiverSpec extends SparkSpec {
 
   test("backpressure byte cap: an oversized body sheds; gauge adopts a pre-existing spool") {
     import graft.sources.SpoolLimits
-    val base = Files.createTempDirectory("graft-otlp-bp2").toString
+    val base = tempDir("graft-otlp-bp2")
     val t0 = 1709623800000000000L
     val body = traceRequest("0102030405060708090a0b0c0d0e0f10", "a", t0)
     // seed the spool BEFORE the receiver starts (a prior incarnation's
@@ -295,7 +295,7 @@ class OtlpReceiverSpec extends SparkSpec {
   test("spool GC drains committed files: the full bounded-queue lifecycle") {
     import graft.sources.{SpoolGc, SpoolLimits}
     import graft.config.ExporterConfig._
-    val base = Files.createTempDirectory("graft-otlp-gc").toString
+    val base = tempDir("graft-otlp-gc")
     val rx = new OtlpHttpReceiver(s"$base/spool",
       limits = SpoolLimits(maxFiles = 2))
     try {
@@ -339,7 +339,7 @@ class OtlpReceiverSpec extends SparkSpec {
 
   test("auto GC: on_start adopts + drains a prior incarnation's committed backlog") {
     import graft.sources.{SpoolGcTriggers, SpoolLimits}
-    val base = Files.createTempDirectory("graft-otlp-gc-start").toString
+    val base = tempDir("graft-otlp-gc-start")
     // a prior incarnation's spool file, already committed by the stream
     val spool = Paths.get(s"$base/spool/traces")
     Files.createDirectories(spool)
@@ -367,7 +367,7 @@ class OtlpReceiverSpec extends SparkSpec {
   test("auto GC: crossing the rebound threshold drains committed files without manual sweeps") {
     import graft.sources.{SpoolGcTriggers, SpoolLimits}
     import graft.config.ExporterConfig._
-    val base = Files.createTempDirectory("graft-otlp-gc-rebound").toString
+    val base = tempDir("graft-otlp-gc-rebound")
     val ckpt = s"$base/chk"
     val rx = new OtlpHttpReceiver(s"$base/spool",
       limits = SpoolLimits(maxFiles = 2),
@@ -405,7 +405,7 @@ class OtlpReceiverSpec extends SparkSpec {
 
   test("health endpoint: 200 with gauge fields; shed state visible at capacity") {
     import graft.sources.SpoolLimits
-    val base = Files.createTempDirectory("graft-otlp-health").toString
+    val base = tempDir("graft-otlp-health")
     val rx = new OtlpHttpReceiver(s"$base/spool",
       limits = SpoolLimits(maxFiles = 1))
     try {
@@ -436,7 +436,7 @@ class OtlpReceiverSpec extends SparkSpec {
 
   test("memory limiter: aggregate in-flight bytes bounded across concurrent requests") {
     import graft.sources.MemoryLimiter
-    val base = Files.createTempDirectory("graft-otlp-mem").toString
+    val base = tempDir("graft-otlp-mem")
     val limiter = new MemoryLimiter(1000L)
     val rx = new OtlpHttpReceiver(s"$base/spool", memory = Some(limiter))
     try {
@@ -473,7 +473,7 @@ class OtlpReceiverSpec extends SparkSpec {
   }
 
   test("receiver protocol edges: 404 / 405 / 415, and proto response type") {
-    val base = Files.createTempDirectory("graft-otlp-edges").toString
+    val base = tempDir("graft-otlp-edges")
     val rx = new OtlpHttpReceiver(s"$base/spool")
     try {
       assert(post(rx.uri, "/v1/profiles", Array[Byte](1)).statusCode() === 404)
@@ -497,7 +497,7 @@ class OtlpReceiverSpec extends SparkSpec {
   }
 
   test("Content-Encoding gzip: body inflates to a byte-exact spool; edges clean") {
-    val base = Files.createTempDirectory("graft-otlp-gzip").toString
+    val base = tempDir("graft-otlp-gzip")
     val rx = new OtlpHttpReceiver(s"$base/spool")
     try {
       val plain = traceRequest("ee" * 16, "y" * 50000, 9L)
@@ -542,7 +542,7 @@ class OtlpReceiverSpec extends SparkSpec {
   }
 
   test("OTLP/JSON POSTs spool separately and flow through OtelJsonSource") {
-    val base = Files.createTempDirectory("graft-otlp-json").toString
+    val base = tempDir("graft-otlp-json")
     val rx = new OtlpHttpReceiver(s"$base/spool")
     try {
       val body =
@@ -579,7 +579,7 @@ class OtlpReceiverSpec extends SparkSpec {
   }
 
   test("logs and metrics routes spool to their own signals") {
-    val base = Files.createTempDirectory("graft-otlp-sig").toString
+    val base = tempDir("graft-otlp-sig")
     val rx = new OtlpHttpReceiver(s"$base/spool")
     try {
       // ExportLogsServiceRequest: resource_logs=1 { scope_logs=2 {
@@ -606,7 +606,7 @@ class OtlpReceiverSpec extends SparkSpec {
     * consumeMetrics → five-arrow-tables loop, end to end over the
     * receiver's spool. */
   test("pushed metrics request drains into all five tables via OtelMetricsPipeline") {
-    val base = Files.createTempDirectory("graft-otlp-met5").toString
+    val base = tempDir("graft-otlp-met5")
     val rx = new OtlpHttpReceiver(s"$base/spool")
     try {
       val ts = 1709623800000000003L

@@ -14,7 +14,7 @@ class PropertyRetentionSpec extends SparkSpec {
 
   private def chain(): String = {
     import spark.implicits._
-    val base = Files.createTempDirectory("graft-prop-retention").toString
+    val base = tempDir("graft-prop-retention")
     val loc = s"$base/tbl"
     val d0 = s"$loc/data/b0"
     (0L until 40L).map(i => (i, s"v$i")).toDF("id", "v")

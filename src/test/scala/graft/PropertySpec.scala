@@ -54,7 +54,7 @@ class PropertySpec extends SparkSpec {
         .toDF("doc_id", "text", "lang", "source")
       val tmp = tempDir("winnow-prop")
       docs.write.mode("overwrite").parquet(s"$tmp/documents.parquet")
-      val got = graft.llm.TextOps.winnowFingerprints(spark, tmp.toString)
+      val got = graft.llm.TextOps.winnowFingerprints(spark, tmp)
         .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2), r.getLong(3))).toMap
       // reference: direct Rabin-Karp + window-min in plain Scala
       val (b, m, k, w) = (1000003L, 2147483647L, 8, 4)
@@ -154,7 +154,7 @@ class PropertySpec extends SparkSpec {
       val tmp = tempDir("pack-prop")
       rows.toDF("doc_id", "text", "lang", "source")
         .write.mode("overwrite").parquet(s"$tmp/documents.parquet")
-      val got = graft.llm.TextOps.packSequences(spark, tmp.toString, budget)
+      val got = graft.llm.TextOps.packSequences(spark, tmp, budget)
         .collect().map(r => (r.getString(0), r.getLong(1)) ->
           (r.getLong(2), r.getLong(3), r.getLong(4))).toMap
       val bySrc = rows.groupBy(_._4)
@@ -199,7 +199,7 @@ class PropertySpec extends SparkSpec {
       val tmp = tempDir("span-prop")
       rows.toDF("doc_id", "text", "lang", "source")
         .write.mode("overwrite").parquet(s"$tmp/documents.parquet")
-      val got = graft.llm.Dedup.spanCoverage(spark, tmp.toString, k)
+      val got = graft.llm.Dedup.spanCoverage(spark, tmp, k)
         .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2), r.getLong(3)))
         .toMap
       val toks = rows.map { case (id, t, _, _) => id -> t.split("\\s+") }

@@ -46,7 +46,7 @@ class QueueBatchSpec extends SparkSpec {
   }
 
   test("send_batch_size observably changes files per micro-batch") {
-    val base = Files.createTempDirectory("graft-qb").toString
+    val base = tempDir("graft-qb")
     val spool = s"$base/traces"
     Files.createDirectories(Paths.get(spool))
     // four spooled export requests (an EMPTY ExportTraceServiceRequest

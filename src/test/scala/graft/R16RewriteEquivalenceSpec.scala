@@ -67,7 +67,7 @@ class R16RewriteEquivalenceSpec extends SparkSpec {
 
   test("dupNgramChars kernel edge cases: short docs, within-doc repeats") {
     import java.nio.file.Files
-    val dir = Files.createTempDirectory("graft-r16-dup").toString
+    val dir = tempDir("graft-r16-dup")
     Seq(
       (0L, "", "en", "s0", 0L),                      // empty → 1 empty token
       (1L, "one", "en", "s0", 3L),                   // n=1: no 2/5-grams

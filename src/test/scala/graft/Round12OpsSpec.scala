@@ -535,7 +535,7 @@ class Round12OpsSpec extends SparkSpec {
     }
     // corrupted copy: drop 10 orders (orphans its lineitems), null 3
     // dates, duplicate 2 orders, negate 5 quantities
-    val dir = java.nio.file.Files.createTempDirectory("graft-dq").toString
+    val dir = tempDir("graft-dq")
     val ord = Tables.orders(spark, sf)
     val orphanKeys = ord.select($"o_orderkey").as[Long].collect().sorted.take(10)
     val orphanedLi = Tables.lineitem(spark, sf)

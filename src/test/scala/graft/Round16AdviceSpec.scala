@@ -47,7 +47,7 @@ class Round16AdviceSpec extends SparkSpec {
 
   test("rewriteDataFiles preserves bounds for every previously-bounded column") {
     import spark.implicits._
-    val base = Files.createTempDirectory("graft-rdf-bounds").toString
+    val base = tempDir("graft-rdf-bounds")
     val loc = s"$base/tbl"
     // two small files, both bounded on TWO columns (id and ts)
     val d1 = s"$base/d1"; val d2 = s"$base/d2"
@@ -85,7 +85,7 @@ class Round16AdviceSpec extends SparkSpec {
 
   test("expireSnapshots never deletes files outside the table location") {
     import spark.implicits._
-    val base = Files.createTempDirectory("graft-expire-guard").toString
+    val base = tempDir("graft-expire-guard")
     val loc = s"$base/tbl"
     // external parquet the chain adopts by absolute path, plus an
     // internal one written under the table dir
@@ -112,7 +112,7 @@ class Round16AdviceSpec extends SparkSpec {
 
   test("rollup cache rebuilds when base data changes in place") {
     import spark.implicits._
-    val sfDir = Files.createTempDirectory("graft-rollup-fp").toString
+    val sfDir = tempDir("graft-rollup-fp")
     def writeEvents(n: Int): Unit =
       Tables.events(spark, sf).limit(n).write.mode("overwrite")
         .parquet(s"$sfDir/events.parquet")

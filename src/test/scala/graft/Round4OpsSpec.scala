@@ -153,7 +153,7 @@ class Round4OpsSpec extends SparkSpec {
   test("compaction merges a fragmented table and preserves rows") {
     import graft.sink.PartitionedParquetSink
     import graft.sink.PartitionedParquetSink.SinkConfig
-    val base = java.nio.file.Files.createTempDirectory("graft-compact").toString
+    val base = tempDir("graft-compact")
     val events = Tables.events(spark, sf)
     val frag = SinkConfig(base, "frag", tsColumn = "ts", granularity = "monthly")
     // fragment: 40 tiny appends, like 40 micro-batch commits

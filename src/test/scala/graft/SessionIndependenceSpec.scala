@@ -52,7 +52,7 @@ class SessionIndependenceSpec extends SparkSpec {
   }
 
   test("writeNdvIndex and a hilbert writeBatch run in a fresh session") {
-    val base = Files.createTempDirectory("graft-fresh-session").toString
+    val base = tempDir("graft-fresh-session")
     try {
       val events = Tables.events(spark, sf)
       events.write.parquet(s"$base/src")

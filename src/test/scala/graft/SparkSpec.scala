@@ -7,7 +7,7 @@ import scala.collection.mutable.ArrayBuffer
 
 import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.SparkSession
-import org.scalatest.Outcome
+import org.scalatest.{Args, Status}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local SparkSession for all suites (one JVM-wide session keeps
@@ -31,18 +31,19 @@ abstract class SparkSpec extends AnyFunSuite {
   private val tempDirs = ArrayBuffer.empty[File]
 
   /** A new temp directory named `prefix...`, deleted with everything
-    * below it when the running test ends, whether it passed or not.
-    * Call it inside a test body. */
+    * below it when the suite's run ends, whether its tests passed or
+    * not; a lazy fixture may share one across the suite's tests. */
   def tempDir(prefix: String): String = {
     val dir = Files.createTempDirectory(prefix).toFile
     tempDirs.synchronized(tempDirs += dir)
     dir.toString
   }
 
-  /** Deletes the test's [[tempDir]]s in a `finally`; quietly, so a
-    * failed delete never hides the test's own outcome. */
-  override def withFixture(test: NoArgTest): Outcome =
-    try super.withFixture(test)
+  /** Runs the suite (synchronously: no spec runs its tests in
+    * parallel), then deletes its [[tempDir]]s in a `finally`; quietly,
+    * so a failed delete never hides a test's outcome. */
+  override def run(testName: Option[String], args: Args): Status =
+    try super.run(testName, args)
     finally tempDirs.synchronized {
       tempDirs.foreach(FileUtils.deleteQuietly)
       tempDirs.clear()

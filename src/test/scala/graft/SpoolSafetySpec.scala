@@ -6,8 +6,6 @@ import java.util.concurrent.atomic.{AtomicBoolean, AtomicLong}
 
 import graft.sources.{SpoolGauge, SpoolGc, SpoolLimits}
 
-import org.scalatest.funsuite.AnyFunSuite
-
 /** Safety edges of the spool lifecycle that the e2e receiver specs
   * can't reach deterministically:
   *
@@ -21,7 +19,7 @@ import org.scalatest.funsuite.AnyFunSuite
   *     must survive a concurrent `refresh()` rescan, or the cap can be
   *     exceeded by the in-flight set.
   */
-class SpoolSafetySpec extends AnyFunSuite {
+class SpoolSafetySpec extends SparkSpec {
 
   private def writeSourceLog(ckpt: String, batch: String,
                              paths: Seq[Path]): Unit = {
@@ -41,7 +39,7 @@ class SpoolSafetySpec extends AnyFunSuite {
   }
 
   test("sweep is commit-gated: offset-logged but uncommitted batches are untouchable") {
-    val base = Files.createTempDirectory("graft-spool-gate")
+    val base = Paths.get(tempDir("graft-spool-gate"))
     val spool = base.resolve("spool/traces")
     Files.createDirectories(spool)
     val f0 = Files.write(spool.resolve("0-a.pb"), Array[Byte](1, 2, 3))
@@ -72,7 +70,7 @@ class SpoolSafetySpec extends AnyFunSuite {
   }
 
   test("a compact source-log file counts only when its own batch has committed") {
-    val base = Files.createTempDirectory("graft-spool-compact")
+    val base = Paths.get(tempDir("graft-spool-compact"))
     val spool = base.resolve("spool/logs")
     Files.createDirectories(spool)
     val f9 = Files.write(spool.resolve("9-x.pb"), Array[Byte](9))
@@ -92,7 +90,7 @@ class SpoolSafetySpec extends AnyFunSuite {
   }
 
   test("gauge cap survives concurrent refresh() during slow spool writes") {
-    val base = Files.createTempDirectory("graft-gauge-race")
+    val base = Paths.get(tempDir("graft-gauge-race"))
     val dir = base.resolve("traces")
     Files.createDirectories(dir)
     val limits = SpoolLimits(maxBytes = 1000L)
@@ -141,7 +139,7 @@ class SpoolSafetySpec extends AnyFunSuite {
   }
 
   test("a failed spool write releases its reservation") {
-    val base = Files.createTempDirectory("graft-gauge-release")
+    val base = Paths.get(tempDir("graft-gauge-release"))
     Files.createDirectories(base.resolve("traces"))
     val gauge = new SpoolGauge(base.toString, Seq("traces"),
       SpoolLimits(maxBytes = 100L))

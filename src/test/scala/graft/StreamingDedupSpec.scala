@@ -49,7 +49,7 @@ class StreamingDedupSpec extends SparkSpec {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     withRocksDb {
-      val ckpt = java.nio.file.Files.createTempDirectory("dedup-restart").toString
+      val ckpt = tempDir("dedup-restart")
       val input = MemoryStream[Doc]
       val emitted = java.util.concurrent.ConcurrentHashMap.newKeySet[Long]()
       def start() = StreamingDedup.dedupStream(input.toDS())

@@ -66,7 +66,7 @@ class StreamingLatestSpec extends SparkSpec {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     withRocksDb {
-      val ckpt = java.nio.file.Files.createTempDirectory("tws-restart").toString
+      val ckpt = tempDir("tws-restart")
       val input = MemoryStream[Event]
       // the memory sink cannot recover a checkpoint — collect emissions via
       // foreachBatch (which can) into a driver-side buffer

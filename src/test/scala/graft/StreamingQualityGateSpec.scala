@@ -24,7 +24,7 @@ class StreamingQualityGateSpec extends SparkSpec {
   }
 
   test("gate routes accept/reject with reasons, exactly once across restarts") {
-    val base = Files.createTempDirectory("graft-qgate").toString
+    val base = tempDir("graft-qgate")
     val srcDir = s"$base/src"
     Files.createDirectories(Paths.get(srcDir))
     val good = "the quick brown fox jumps over the lazy dog and then some more words"

@@ -54,7 +54,7 @@ class TraceLookupSpec extends SparkSpec {
 
   test("iceberg chain: string trace_id needle prunes to <= 1/4 of files") {
     import spark.implicits._
-    val base = Files.createTempDirectory("graft-trace-bloom").toString
+    val base = tempDir("graft-trace-bloom")
     val loc = s"$base/tbl"
     val dataDir = s"$base/data"
     // residue-class layout: every file's id range spans the table, so

@@ -1,6 +1,5 @@
 package graft.streaming
 
-import java.nio.file.Files
 import java.util.concurrent.ConcurrentLinkedQueue
 import java.util.concurrent.atomic.AtomicInteger
 
@@ -97,7 +96,7 @@ class IngestRegistrarSpec extends SparkSpec {
 
   targets.foreach { case (name, build) =>
     test(s"registrar table: $name") {
-      val base = Files.createTempDirectory("graft-registrar").toString
+      val base = tempDir("graft-registrar")
       val source = Tables.events(spark, sf).limit(200)
         .select("event_id", "ts", "user_id", "event_type", "value")
       source.write.parquet(s"$base/src")
@@ -133,7 +132,7 @@ class IngestRegistrarSpec extends SparkSpec {
   }
 
   test("rest catalog: steady batches read no catalog file list and run no listing job") {
-    val base = Files.createTempDirectory("graft-registrar-steady").toString
+    val base = tempDir("graft-registrar-steady")
     val batch = Tables.events(spark, sf).limit(400)
     (0 until 4).foreach(i => batch.where(s"event_id % 4 = $i").coalesce(1)
       .write.mode("append").parquet(s"$base/src"))
